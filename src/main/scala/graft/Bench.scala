@@ -7,37 +7,15 @@ import org.apache.spark.sql.SparkSession
   * Methodology (hardened after BENCH_r02):
   *  - Queries run in SORTED key order — reproducible across runs and
   *    rounds, unlike hash-map iteration order.
-  *  - Shared cache groups ([[Cache]]) are released as soon as their
-  *    last consumer (in sorted order) has run, so persisted blocks
-  *    from the heavy similarity/dedup cluster don't inflate every
-  *    query scheduled after it.
+  *  - Shared cache groups are released on [[Cache.releaseAfter]]'s
+  *    schedule, as soon as their last consumer (in sorted order) has
+  *    run.
   *  - The 10 most expensive queries get a second timed rep (caches
   *    still warm where applicable), reported separately as "rep2" —
   *    the rep1−rep2 gap attributes shared-cache build cost, and rep2
   *    is the marginal per-query cost a long-lived session would see.
   */
 object Bench {
-
-  /** Cache-group release points: after this query completes (sorted
-    * iteration order), the named [[Cache]] prefixes have no further
-    * consumers. "" = everything (sim.vecs / sim.halfPairs live until
-    * the last similarity query). */
-  private[graft] val releaseAfter: Map[String, Seq[String]] = Map(
-    "ann_ivf" -> Seq("sim.ivf"),
-    "dedup_embed_ann" -> Seq("sim.lsh"),
-    "dedup_near" -> Seq("dedup."),
-    // r19 optimization round: caches BUILT after their family's
-    // release point (sorted order) get their own release entries so
-    // persisted blocks never outlive their last consumer.
-    "dedup_paragraphs" -> Seq("dedup.paraChunks"),
-    "dedup_simhash" -> Seq("dedup.simSigs"),
-    "events_concurrency" -> Seq("events."),
-    "geo_zone_rank" -> Seq("geo."),
-    "pipeline_corpus_prep" -> Seq("pipeline."),
-    "pipeline_shard_manifest" -> Seq("pipeline."),
-    "text_contamination" -> Seq("text."),
-    "text_pack_bins" -> Seq("text.packIntra"),
-    "similarity_topk_per_query" -> Seq(""))
 
   /** 1-minute load average — ambient-load evidence for the artifact.
     * BENCH_r07 read as a 69% regression until a quiet-box re-run
@@ -64,12 +42,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = EngineConf.tuned(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = EngineConf.cpus
+    val spark = EngineConf.builder(cpus).getOrCreate()
     // ERROR, not WARN: the three provably-bounded global windows
     // (day offsets, bucket offsets, k seed rows) each emit a
     // `WindowExec: No Partition Defined` WARN per execution — ~90% of
@@ -123,8 +97,7 @@ object Bench {
       val probes = scala.collection.mutable.ArrayBuffer.empty[Double]
       val times = names.zipWithIndex.map { case (name, i) =>
         val t = timed(name)
-        releaseAfter.get(name)
-          .foreach(_.foreach(p => Cache.clear(spark, p)))
+        Cache.releaseAfter(spark, name)
         if ((i + 1) % segment == 0 || i + 1 == names.size) {
           val p0 = System.nanoTime()
           spark.range(200000000L).selectExpr("sum(id % 7)").collect()

@@ -61,6 +61,35 @@ object Cache {
       }
     }
 
+  /** Release schedule for a pass over the declared queries in SORTED
+    * name order: after the keyed query completes, the listed prefixes
+    * have no further consumers. "" = everything (sim.vecs /
+    * sim.halfPairs live until the last similarity query). Bench and
+    * Verify both follow it, so persisted blocks from the heavy
+    * similarity/dedup cluster don't inflate every query after it. */
+  private[graft] val releaseSchedule: Map[String, Seq[String]] = Map(
+    "ann_ivf" -> Seq("sim.ivf"),
+    "dedup_embed_ann" -> Seq("sim.lsh"),
+    "dedup_near" -> Seq("dedup."),
+    // r19 optimization round: caches BUILT after their family's
+    // release point (sorted order) get their own release entries so
+    // persisted blocks never outlive their last consumer.
+    "dedup_paragraphs" -> Seq("dedup.paraChunks"),
+    "dedup_simhash" -> Seq("dedup.simSigs"),
+    "events_concurrency" -> Seq("events."),
+    "geo_zone_rank" -> Seq("geo."),
+    "pipeline_corpus_prep" -> Seq("pipeline."),
+    "pipeline_shard_manifest" -> Seq("pipeline."),
+    "text_contamination" -> Seq("text."),
+    "text_pack_bins" -> Seq("text.packIntra"),
+    "similarity_topk_per_query" -> Seq(""))
+
+  /** Release the groups whose last consumer (sorted order) is
+    * `query`. A cleared group rebuilds identical rows on next use
+    * (CacheParitySpec), so releasing early never changes results. */
+  def releaseAfter(s: SparkSession, query: String): Unit =
+    releaseSchedule.getOrElse(query, Nil).foreach(clear(s, _))
+
   /** Disk-backed [[cached]]: the built frame is ALSO persisted as a
     * bucketed, sorted external parquet table under /tmp, and every
     * later entry — after a [[clear]], or under a fresh SparkContext
@@ -141,30 +170,23 @@ object Cache {
     * (see [[gcStale]]). */
   def diskBacked(s: SparkSession, dir: String, name: String,
       sourceTable: String, bucketCols: Seq[String], buckets: Int = 32)
-      (build: => DataFrame): DataFrame =
-    // Diagnostic A/B knob (r18, DedupEmbedAb): -Dgraft.diskidx=off
-    // degrades diskBacked to the plain memory tier so one session can
-    // interleave artifact-vs-lineage arms per rep (drift-cancelled).
-    // Never set outside diagnostics — artifacts certify the disk path.
-    if (sys.props.get("graft.diskidx").contains("off"))
-      cached(s, dir, name)(build)
-    else {
-      val key = (s, dir, name)
-      val fp = layoutFp(s, s"$dir/$sourceTable")
-      memo.synchronized {
-        if (attachedFp.get(key).exists(_ != fp)) {
-          memo.remove(key).foreach(df =>
-            try df.unpersist(blocking = false)
-            catch { case _: Throwable => () })
-          attachedFp.remove(key)
-        }
+      (build: => DataFrame): DataFrame = {
+    val key = (s, dir, name)
+    val fp = layoutFp(s, s"$dir/$sourceTable")
+    memo.synchronized {
+      if (attachedFp.get(key).exists(_ != fp)) {
+        memo.remove(key).foreach(df =>
+          try df.unpersist(blocking = false)
+          catch { case _: Throwable => () })
+        attachedFp.remove(key)
       }
-      val out = cached(s, dir, name)(
-        ensureArtifact(s, dir, name, sourceTable, bucketCols, buckets)(
-          build))
-      memo.synchronized { attachedFp(key) = fp }
-      out
     }
+    val out = cached(s, dir, name)(
+      ensureArtifact(s, dir, name, sourceTable, bucketCols, buckets)(
+        build))
+    memo.synchronized { attachedFp(key) = fp }
+    out
+  }
 
   /** Source fingerprint each live diskBacked memo entry was attached
     * under — consulted on every entry so a stale attachment is

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
+
 /** Spill-aware sizing rules for running the engine at scale — the
   * arithmetic behind "would this hold at 100 TB?" (SURVEY.md §4).
   *
@@ -23,9 +25,9 @@ object EngineConf {
   val TargetShufflePartitionBytes: Long = 256L << 20
   val MaxScanPartitionBytes: Long = 128L << 20
 
-  /** Engine session defaults beyond master/partitions — apply to
-    * every entry point's builder (Bench, Verify, tests, tools) so
-    * measurements and correctness artifacts certify ONE config.
+  /** Engine session defaults beyond master/partitions — [[builder]]
+    * applies them for every entry point (Bench, Verify, tests, tools)
+    * so measurements and correctness artifacts certify ONE config.
     *
     * canChangeCachedPlanOutputPartitioning=true (Spark default:
     * false): lets AQE coalesce the FINAL stage of a plan that gets
@@ -49,8 +51,7 @@ object EngineConf {
   def tuned(b: org.apache.spark.sql.SparkSession.Builder)
       : org.apache.spark.sql.SparkSession.Builder =
     b.config(
-      "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-      sys.env.getOrElse("SPARK_GRAFT_CACHE_AQE", "true"))
+      "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
       // Decouple shuffle WIDTH from spark.sql.shuffle.partitions:
       // AQE starts every coalescible shuffle at initialPartitionNum
       // and merges down — with parallelismFirst (default true) small
@@ -67,6 +68,34 @@ object EngineConf {
       // (32 cores × ~8 waves), env-overridable.
       .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
         sys.env.getOrElse("SPARK_GRAFT_INITIAL_PARTITIONS", "256"))
+
+  /** The one session factory for every entry point: [[tuned]] on a
+    * `local[cpus]` master with as many shuffle partitions as cores,
+    * UTC session time (the zone Verify and the specs certify under)
+    * and no UI. Callers add only confs that are really theirs. */
+  def builder(cpus: Int): SparkSession.Builder =
+    tuned(SparkSession.builder())
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toLong)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+
+  /** Core count for the command-line mains: `SPARK_GRAFT_CPUS`, or
+    * every available processor when it is unset. Read on first use,
+    * so a bad value fails the main that needs it, not every caller
+    * of this object. */
+  lazy val cpus: Int = parseCpus(sys.env.get("SPARK_GRAFT_CPUS"))
+
+  /** A whole number ≥ 1, or every available processor when unset.
+    * Anything else fails loud: the value names the bench sidecar and
+    * the `local[...]` master, so a stray `*` or path must not pass. */
+  private[graft] def parseCpus(v: Option[String]): Int = v match {
+    case None => Runtime.getRuntime.availableProcessors
+    case Some(x) if x.matches("[0-9]+") && x.toIntOption.exists(_ >= 1) =>
+      x.toInt
+    case Some(x) => throw new IllegalArgumentException(
+      s"SPARK_GRAFT_CPUS must be a whole number >= 1, got '$x'")
+  }
 
   private val rowCountMemo =
     scala.collection.concurrent.TrieMap.empty[String, Long]

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan auditor: dumps `explain("formatted")` for the named queries
   * (or a representative default set) so scan pushdown, column
   * pruning, join strategies, and WholeStageCodegen spans can be
@@ -22,12 +20,7 @@ object Explain {
         "dedup_exact_fingerprint", "window_distinct_users",
         "geo_od_matrix", "text_contamination", "events_anomaly_mad",
         "events_retention", "geo_triangles", "pipeline_quality_filter")
-    val spark = EngineConf.tuned(SparkSession.builder())
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = EngineConf.builder(4).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n======== $n ========")

@@ -36,11 +36,7 @@ object IndexProbe {
 
   def main(args: Array[String]): Unit = {
     val Array(dir, name) = args.take(2)
-    val spark = EngineConf.tuned(SparkSession.builder())
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = EngineConf.builder(4).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val jobs = new AtomicInteger(0)
     val l = new SparkListener {

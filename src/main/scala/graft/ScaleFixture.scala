@@ -76,13 +76,7 @@ object ScaleFixture {
     val factor = if (args.length > 2) args(2).toInt else 10
     val which = (if (args.length > 3) args(3)
       else "events,documents,embeddings").split(",").toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = EngineConf.tuned(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = EngineConf.builder(EngineConf.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     if (which("events")) events(spark, src, dst, factor)
     if (which("documents")) documents(spark, src, dst, factor)

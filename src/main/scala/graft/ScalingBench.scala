@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Empirical scaling curves for the heavy-tail queries (the r13
   * verdict's top next-round item): time the same declared query at
   * several scale-factor dirs and print one JSON line per
@@ -41,13 +39,7 @@ object ScalingBench {
     val run = sys.env.get("SPARK_GRAFT_SCALING_TARGETS")
       .map(_.split(",").toSet.intersect(SparkEntry.queries.keySet))
       .getOrElse(targets.toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = EngineConf.tuned(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = EngineConf.builder(EngineConf.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     // JVM/codegen warmup on the smallest dir (untimed)
     Tables.names.foreach(n =>

@@ -37,13 +37,7 @@ object SortSpillCheck {
     "stream_session", "agg_median_quantile")
 
   private def session(forced: Boolean): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val b = EngineConf.tuned(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .appName(s"graft-sortspill-${if (forced) "forced" else "base"}")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val b = EngineConf.builder(EngineConf.cpus)
     val withConf = if (forced)
       b.config("spark.shuffle.spill.numElementsForceSpillThreshold", "64")
     else b

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,17 +9,12 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     val only: Option[Seq[String]] =
       if (args.length > 2) Some(args(2).split(",").toSeq) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = EngineConf.tuned(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = EngineConf.builder(EngineConf.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // Sorted order (reproducible) with shared-cache groups released
-    // once their last consumer has dumped — same staging as Bench.
+    // once their last consumer has dumped ([[Cache.releaseAfter]],
+    // the schedule Bench uses).
     // A thrown query must be VISIBLE in the artifacts: rounds 10/11
     // lost 59 queries to a data-format change and the only trace was
     // stderr — the driver's correctness JSON simply had fewer entries.
@@ -39,7 +33,7 @@ object Verify {
         failed += name -> first
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      if (name == "similarity_topk_per_query") Cache.clear(spark)
+      Cache.releaseAfter(spark, name)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

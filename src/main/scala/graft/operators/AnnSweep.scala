@@ -84,13 +84,7 @@ object AnnSweep {
       case Nil => Seq("/root/testdata/sf0.1")
       case ds  => ds
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.EngineConf.tuned(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.EngineConf.builder(graft.EngineConf.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     var retune = false

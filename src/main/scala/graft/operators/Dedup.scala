@@ -425,13 +425,13 @@ object Dedup {
     * ground truth the oracle computes (misses re-checked at every SF
     * and both off-fixture decades after the change). */
   private[operators] val MinhashBands = 16
-  private[operators] val MinhashRows = 3
+  private val MinhashRows = 3
   private[operators] val MinhashFuncs = MinhashBands * MinhashRows
 
   /** The (doc_id, band, h0..h{rows-1}) LSH banding rows, from the
     * [[minhashSigs]] signature frame (same min-of-murmur3-(value,
     * seed) values the r9 array_min/transform fold computed). */
-  private[operators] def minhashBands(s: SparkSession,
+  private def minhashBands(s: SparkSession,
       d: String): DataFrame = {
     val mh = minhashSigs(s, d).select(
       col("doc_id") +: (0 until MinhashFuncs).map(i => col(s"mh_$i")): _*)

@@ -661,7 +661,7 @@ object Similarity {
     * (a deployment's query batch is small and always broadcasts; the
     * corpus self-join here is the stress shape). The member-side
     * attach is the n/S-row broadcast the sharding exists to buy. */
-  private[operators] def shardTopK(s: SparkSession, d: String,
+  private def shardTopK(s: SparkSession, d: String,
       shard: Int, shards: Int, nTables: Int, bits: Int, seed: Long,
       nH1: Int, k: Int = 3): DataFrame = {
     val v = vecs(s, d)

@@ -1072,6 +1072,11 @@ object TextOps {
         |    AS dup_trigram_frac
         |FROM g GROUP BY doc_id ORDER BY doc_id""".stripMargin,
 
+    // Compares materialized 5-gram strings, while the engine compares
+    // their xxhash64 values (shingles5). The two agree unless two
+    // different 5-grams collide in 64 bits; such a collision would
+    // show up here as a hash-match gate failure (fail-loud), not as
+    // silently wrong rows.
     "text_contamination" ->
       """WITH toks AS (
         |  SELECT doc_id,

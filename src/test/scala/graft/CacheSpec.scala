@@ -49,4 +49,23 @@ class CacheSpec extends SparkSpec {
     // after clear the plan is no longer marked for caching
     assert(df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
   }
+
+  test("releaseAfter follows the schedule, keyed by declared queries") {
+    // A misspelt key would never fire and leave its group persisted
+    // for the rest of the pass.
+    val unknown = Cache.releaseSchedule.keySet -- SparkEntry.queries.keySet
+    assert(unknown.isEmpty, s"schedule keys that are not queries: $unknown")
+    var builds = 0
+    def get() = Cache.cached(spark, "/tmp/cs", "sim.ivf.spec") {
+      builds += 1; freshDf(5)
+    }
+    get()
+    Cache.releaseAfter(spark, "ann_lsh") // not a release point
+    get()
+    assert(builds == 1)
+    Cache.releaseAfter(spark, "ann_ivf") // releases sim.ivf
+    get()
+    assert(builds == 2)
+    Cache.clear(spark, "sim.ivf.spec")
+  }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 class EngineConfSpec extends AnyFunSuite {
@@ -48,6 +49,50 @@ class EngineConfSpec extends AnyFunSuite {
         s"cached 100-row frame kept $parts partitions (conf $conf) — " +
           "cached-plan coalescing is off")
     } finally { df.unpersist(); () }
+  }
+
+  test("the session factory sets UTC and both tuned confs") {
+    // The shared spec session comes from the factory.
+    assert(spark.sparkContext.master == "local[4]")
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
+    // getOrCreate applies a builder's runtime confs to the active
+    // session, so on a session that holds other values for every
+    // conf the factory owns, each value below can only come from it.
+    val other = spark.newSession()
+    other.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    other.conf.set(
+      "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "false")
+    other.conf.set(
+      "spark.sql.adaptive.coalescePartitions.initialPartitionNum", "7")
+    val prev = SparkSession.getActiveSession
+    SparkSession.setActiveSession(other)
+    try {
+      val s = EngineConf.builder(4).getOrCreate()
+      assert(s eq other)
+      assert(s.conf.get("spark.sql.session.timeZone") == "UTC")
+      assert(s.conf.get(
+        "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning")
+        == "true")
+      assert(s.conf.get(
+        "spark.sql.adaptive.coalescePartitions.initialPartitionNum")
+        == sys.env.getOrElse("SPARK_GRAFT_INITIAL_PARTITIONS", "256"))
+    } finally
+      prev.fold(SparkSession.clearActiveSession())(
+        SparkSession.setActiveSession)
+  }
+
+  test("SPARK_GRAFT_CPUS: whole numbers >= 1, else every processor") {
+    assert(EngineConf.parseCpus(Some("8")) == 8)
+    assert(EngineConf.parseCpus(None) ==
+      Runtime.getRuntime.availableProcessors)
+  }
+
+  test("SPARK_GRAFT_CPUS: anything else fails, naming the variable") {
+    Seq("0", "*", "../x", "", "-2", "99999999999").foreach { v =>
+      val e = intercept[IllegalArgumentException](
+        EngineConf.parseCpus(Some(v)))
+      assert(e.getMessage.contains("SPARK_GRAFT_CPUS"), v)
+    }
   }
 
   def spark = SparkSpec.spark

@@ -314,9 +314,21 @@ class PlanSpec extends SparkSpec {
         "sort of the sessionized events at scale")
     // both surviving window functions (lag gap + cumsum voyage + lead
     // endpoint flag) must share the ONE byUser sort: exactly one Sort
-    // node may sit below a Window node
-    val windowSorts = raw.linesIterator.count(_.trim.matches("\\(\\d+\\) Window"))
-    assert(windowSorts <= 2, s"window chain split: $windowSorts Window nodes")
+    // node may sit below a Window node. (The other Sort in the plan
+    // feeds the per-voyage zone aggregate.) In the tree section a
+    // Window's only child is the next line.
+    val windows = raw.linesIterator
+      .count(_.trim.matches("\\(\\d+\\) Window"))
+    assert(windows <= 2, s"window chain split: $windows Window nodes")
+    def node(line: String, name: String): Boolean =
+      line.matches(s"[\\s:+|-]*$name \\(\\d+\\)")
+    val tree = raw.linesIterator.drop(1).takeWhile(_.trim.nonEmpty).toSeq
+    val sortsBelowWindow = tree.sliding(2).count {
+      case Seq(a, b) => node(a, "Window") && node(b, "Sort")
+      case _         => false
+    }
+    assert(sortsBelowWindow == 1,
+      s"$sortsBelowWindow Sort nodes below a Window node:\n$raw")
   }
 
   test("events_anomaly_mad: both median windows share ONE user exchange") {

@@ -7,13 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * startup dominates test wall-clock otherwise). */
 object SparkSpec {
   lazy val spark: SparkSession = {
-    val s = EngineConf.tuned(SparkSession.builder())
-      .master("local[4]")
+    val s = EngineConf.builder(4)
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.warehouse.dir", "/tmp/graft-test-warehouse")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
