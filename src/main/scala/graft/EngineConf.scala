@@ -65,9 +65,9 @@ object EngineConf {
       // default, not an env override someone has to know about.
       // At 100 TB the initial count should be sized by
       // shufflePartitionsFor — 256 here is the single-box ceiling
-      // (32 cores × ~8 waves), env-overridable.
+      // (32 cores × ~8 waves); other widths are a code change here.
       .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_INITIAL_PARTITIONS", "256"))
+        "256")
 
   /** The one session factory for every entry point: [[tuned]] on a
     * `local[cpus]` master with as many shuffle partitions as cores,

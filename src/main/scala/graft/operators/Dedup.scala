@@ -118,60 +118,17 @@ object Dedup {
         .orderBy("keep_id")),
 
     // The 100-TB twin of dedup_exact (the caveat documented there):
-    // group on the rolling-hash fingerprint (same expression as
-    // text_fingerprint) so the dedup shuffle carries only narrow
-    // (fp, doc_id, n_chars) rows, never full texts. Docs whose fp is
-    // unique ARE unique (no verify needed — a collision requires two
-    // docs sharing the fp); only the docs in fp-collision groups — a
-    // tiny set: true duplicates plus ~n²/1e9 accidental collisions —
-    // re-group on the FULL text (broadcast semi-join on their ids),
-    // which both verifies equality and splits any accidental
-    // collision into its true groups. Output is therefore exactly
-    // dedup_exact's, and the oracle is the same survivor SQL.
-    "dedup_exact_fingerprint" -> ((s, d) => {
-      GraftFunctions.ensureRegistered(s)
-      val docs = Tables.documents(s, d)
-      // ONE fp pass since the r19 optimization round. The previous
-      // shape computed `collided` as its own aggregate and re-derived
-      // singles/collided instances by (anti-)joining the fps frame
-      // against it — correct, but the un-persisted fps lineage made
-      // the plan evaluate rollingFingerprint over the FULL corpus 4×
-      // (the before plan shows 5 documents scans; plans/r19/
-      // dedup_exact_fingerprint_before.txt). Now the per-fp doc list
-      // rides ONE hash aggregate over narrow (fp, doc_id, n_chars)
-      // rows: fp is computed once per doc, the corpus is scanned
-      // twice (fp pass + the full-text verify re-read), and the only
-      // wide exchange still carries no text. Per-group state is the
-      // fp's duplicate set — the same set the broadcast(collidedIds)
-      // already bounded (a billion-dup fp would break both shapes
-      // equally; planted duplicate groups are small by construction).
-      // Cached: singles and collidedIds both read this frame, and an
-      // un-persisted two-consumer lineage duplicates the whole
-      // scan+fp+aggregate subtree (the round-8 ReuseExchange finding,
-      // re-confirmed by PlanSpec when this rewrite first landed
-      // without the persist).
-      val groups = graft.Cache.cached(s, d, "dedup.fpGroups") {
-        docs.select(col("doc_id"), col("n_chars"),
-            GraftFunctions.rollingFingerprint(col("text")).as("fp"))
-          .groupBy("fp")
-          .agg(collect_list(struct(col("doc_id"), col("n_chars")))
-            .as("ds"))
-      }
-      val singles = groups.filter(size(col("ds")) === 1)
-        .select(col("ds")(0).getField("doc_id").as("keep_id"),
-          lit(1L).as("n_copies"),
-          col("ds")(0).getField("n_chars").as("n_chars"))
-      val collidedIds = groups.filter(size(col("ds")) > 1)
-        .select(explode(col("ds")).as("x"))
-        .select(col("x").getField("doc_id").as("doc_id"))
-      val verified = docs.join(broadcast(collidedIds), Seq("doc_id"))
-        .groupBy("text")
-        .agg(min("doc_id").as("keep_id"),
-          count(lit(1)).as("n_copies"),
-          min("n_chars").as("n_chars"))
-        .select("keep_id", "n_copies", "n_chars")
-      singles.unionByName(verified).orderBy("keep_id")
-    }),
+    // survivors via [[fingerprintSurvivors]], so the dedup shuffle
+    // carries only narrow (fp, doc_id, n_chars) rows, never full
+    // texts. Output is exactly dedup_exact's (n_chars is a function of
+    // the text, so the survivor's equals the group minimum), and the
+    // oracle is the same survivor SQL.
+    "dedup_exact_fingerprint" -> ((s, d) =>
+      fingerprintSurvivors(s, d, "dedup.fpGroups", Tables.documents(s, d),
+          Seq("n_chars"))
+        .select(col("doc_id").as("keep_id"), col("n_copies"),
+          col("n_chars"))
+        .orderBy("keep_id")),
 
     // Near-dup via exact 3-gram shingle Jaccard, candidates blocked to
     // same lang + |n_chars| diff <= 20, J >= 0.8. ONE shingle
@@ -516,182 +473,72 @@ object Dedup {
     * degrades to the co-partitioned full-frame form (tier 3). */
   private[operators] val VerifyPruneMaxDocs = 50000000L
 
+  /** Exact-dedup survivors grouped on the rolling-hash FINGERPRINT
+    * (the text_fingerprint expression): one row per distinct text,
+    * (doc_id, n_copies, payload…) with doc_id the smallest doc_id
+    * holding the text and the payload columns taken from that doc
+    * (min_by). `docs` must carry doc_id, text and `payload`.
+    *
+    * Docs whose fp is unique ARE unique (no verify needed — a
+    * collision requires two docs sharing the fp); only the docs in
+    * fp-collision groups — a tiny set: true duplicates plus ~n²/1e9
+    * accidental collisions — re-group on the FULL text (broadcast
+    * join on their ids), which both verifies equality and splits any
+    * accidental collision into its true groups.
+    *
+    * ONE fp pass since the r19 optimization round: the per-fp doc
+    * list rides ONE hash aggregate over narrow (fp, doc_id, payload…)
+    * rows, so fp is computed once per doc, the corpus is scanned
+    * twice (fp pass + the full-text verify re-read), and the only
+    * wide exchange carries no text. The previous shape derived
+    * singles and collided ids by (anti-)joining an un-persisted fps
+    * frame and evaluated rollingFingerprint over the full corpus 4×
+    * (plans/r19/dedup_exact_fingerprint_before.txt). Per-group state
+    * is the fp's duplicate set — the same set the broadcast already
+    * bounds (planted duplicate groups are small by construction).
+    * Cached under `cacheKey`: singles and collided ids both read the
+    * groups frame, and an un-persisted two-consumer lineage
+    * duplicates the whole scan+fp+aggregate subtree (the round-8
+    * ReuseExchange finding, re-confirmed by PlanSpec). */
+  private[operators] def fingerprintSurvivors(s: SparkSession, d: String,
+      cacheKey: String, docs: DataFrame, payload: Seq[String]): DataFrame = {
+    GraftFunctions.ensureRegistered(s)
+    val kept = "doc_id" +: payload
+    val groups = graft.Cache.cached(s, d, cacheKey) {
+      docs.select(kept.map(col) :+
+          GraftFunctions.rollingFingerprint(col("text")).as("fp"): _*)
+        .groupBy("fp")
+        .agg(collect_list(struct(kept.map(col): _*)).as("ds"))
+    }
+    def only(c: String): Column = col("ds")(0).getField(c).as(c)
+    val singles = groups.filter(size(col("ds")) === 1)
+      .select(only("doc_id") +: lit(1L).as("n_copies") +:
+        payload.map(only): _*)
+    val collidedIds = groups.filter(size(col("ds")) > 1)
+      .select(explode(col("ds")).as("x"))
+      .select(col("x").getField("doc_id").as("doc_id"))
+    val verified = docs.join(broadcast(collidedIds), Seq("doc_id"))
+      .groupBy("text")
+      .agg(min("doc_id").as("doc_id"), count(lit(1)).as("n_copies") +:
+        payload.map(c => min_by(col(c), col("doc_id")).as(c)): _*)
+    singles.unionByName(verified.drop("text"))
+  }
+
   /** Connected-component labels (n → min doc_id of its component)
     * over the symmetric MinHash pair graph, memoized per (session,
-    * dir). Delegates to [[ccFixedPoint]]. */
+    * dir). Near-dup pair counts are corpus-dependent, so no static
+    * bound exists: [[Graph.oneTask]] counts the pair graph at build
+    * time. Near-dup pair graphs are sparse BY CONSTRUCTION (banding
+    * emits rare candidates), so even a 100-TB corpus often lands on
+    * the single-task path. */
   private def ccLabels(s: SparkSession, d: String): DataFrame =
     graft.Cache.cached(s, d, "dedup.ccLabels") {
-      // Symmetric edge set in ONE pass over the verified pairs (a
-      // union of two selects would execute the verify pipeline twice).
-      val edges = graft.Cache.cached(s, d, "dedup.ccEdges") {
-        minhashPairs(s, d)
-          .select(explode(array(
-            struct(col("d1").as("a"), col("d2").as("b")),
-            struct(col("d2").as("a"), col("d1").as("b")))).as("e"))
-        .select(col("e.a").as("a"), col("e.b").as("b"))
-      }
-      ccFixedPoint(edges)
-    }
-
-  /** Connected components over a SYMMETRIC edge set (a, b) — returns
-    * (n, lbl) with lbl = min node id of n's component, for every node
-    * appearing in the edges. Package-visible so DedupSpec can drive
-    * it with synthetic pathological graphs (long chains) independent
-    * of the fixture's near-dup pair graph.
-    *
-    * Algorithm: min-label propagation with POINTER JUMPING
-    * (Shiloach-Vishkin-style shortcutting). Each round runs
-    * propagate (lbl'(n) = min(lbl(n), min over neighbors)) then
-    * shortcut (lbl''(n) = lbl'(lbl'(n)) — labels are node ids, so a
-    * self-join chases one pointer hop). Propagation alone needs
-    * diameter rounds; the shortcut halves label-chain depth each
-    * round, so convergence is O(log diameter) — the same round bound
-    * as alternating large-star/small-star, with the propagate/
-    * shortcut pair in place of the two star operations. A 12-round
-    * cap therefore covers diameters into the thousands (spec-proven
-    * on a 64-node chain) instead of the ~20 the propagate-only loop
-    * managed in 10.
-    *
-    * Both operations only ever DECREASE labels, so the fixed point is
-    * reached exactly when sum(lbl) stops falling, and a stable sum
-    * over a composite round implies each inner operation was stable.
-    * At a propagate fixed point labels are constant along every edge,
-    * i.e. equal to the component min — shortcutting never changes
-    * that fixed point (the min node's label is itself).
-    *
-    * Each round's frame is PERSISTED and its predecessor released —
-    * without that, round k's convergence count re-executes rounds
-    * 1..k-1 and the loop goes quadratic in stages (measured
-    * 14.7 s → ~3 s at sf0.1). The driver loops; the data never
-    * leaves the cluster. */
-  private[operators] def ccFixedPoint(edges: DataFrame,
-      maxRounds: Int = 12,
-      log: String => Unit = System.err.println,
-      localSolveMaxEdges: Long = 1L << 20): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    // Small-graph fast path — the SAME decision a broadcast join
-    // makes: when the pair graph is below a bounded threshold (1M
-    // edges ≈ 16 MB of longs, the autoBroadcastJoinThreshold scale),
-    // a single-task union-find replaces ~2·log(diameter) distributed
-    // jobs whose per-job overhead dominates at this size (measured:
-    // the sf0.1 graph is 47 nodes, yet the loop's ~7 rounds cost
-    // ~5 s of pure job scheduling). The union-find runs LAZILY in
-    // one mapPartitions task over a coalesce(1) of the edge frame
-    // (the zoneRank r13 discipline — formerly an eager driver
-    // collect at construction); only the threshold count() remains a
-    // build-time job, and near-dup pair counts are corpus-dependent,
-    // so no static bound can replace it here. Near-dup pair graphs
-    // are sparse BY CONSTRUCTION (banding emits rare candidates), so
-    // even a 100-TB corpus often lands here; past the threshold the
-    // distributed pointer-jump below runs unchanged (spec-covered by
-    // forcing localSolveMaxEdges = 0).
-    if (edges.count() <= localSolveMaxEdges) {
-      val s = edges.sparkSession
       import s.implicits._
-      return edges.select(col("a").cast("long"), col("b").cast("long"))
-        .as[(Long, Long)]
-        .coalesce(1)
-        .mapPartitions(localUnionFind)
-        .toDF("n", "lbl")
-    }
-    // Initialization WITH the first propagation step fused in: every
-    // node appears as `a` in the symmetric edge set, so one
-    // aggregation seeds lbl = min(self, min neighbor) — no join, and
-    // one fewer loop round.
-    var labels = edges.groupBy("a")
-      .agg(min("b").as("mb"))
-      .select(col("a").as("n"), least(col("a"), col("mb")).as("lbl"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    def propagate(l: DataFrame): DataFrame = {
-      val nbMin = edges
-        .join(l.select(col("n").as("a"), col("lbl").as("albl")), "a")
-        .groupBy(col("b").as("n")).agg(min("albl").as("nbmin"))
-      l.join(nbMin, Seq("n"), "left")
-        .select(col("n"),
-          least(col("lbl"), coalesce(col("nbmin"), col("lbl")))
-            .as("lbl"))
-    }
-    // lbl''(n) = lbl(lbl(n)): the invariant lbl(x) <= x means every
-    // label IS a node with its own (smaller-or-equal) label to chase.
-    def shortcut(l: DataFrame): DataFrame =
-      l.as("x")
-        .join(l.select(col("n").as("pn"), col("lbl").as("plbl")).as("p"),
-          col("x.lbl") === col("pn"), "left")
-        .select(col("x.n").as("n"),
-          least(col("x.lbl"), coalesce(col("plbl"), col("x.lbl")))
-            .as("lbl"))
-    // coalesce: sum over an EMPTY frame is null — a pair-free corpus
-    // (no near-dups at all) must converge to an empty labeling, not
-    // NPE the convergence check.
-    def lblSum(df: DataFrame): Long =
-      df.agg(coalesce(sum("lbl"), lit(0L))).head.getLong(0)
-    var prevSum = lblSum(labels)
-    var converged = false
-    var round = 0
-    // Adaptive retry: one doubling of the round cap (with a logged
-    // warning) before giving up — a component just past the expected
-    // diameter degrades to a slower run instead of a dead query. The
-    // loop below runs straight through the extension: rounds are
-    // stateless beyond `labels`, so "retry" is simply more rounds.
-    var cap = maxRounds
-    var extended = false
-    while (!converged && round < cap) {
-      // localCheckpoint (eager) BOTH materializes the round and
-      // TRUNCATES lineage. Truncation is load-bearing: the shortcut
-      // self-join references the previous frame twice, so without it
-      // the logical plan DOUBLES per round — exponential analyze/
-      // codegen cost long before any data is large. On a multi-node
-      // cluster prefer spark.sparkContext.setCheckpointDir + reliable
-      // .checkpoint() (survives executor loss); local blocks suffice
-      // for this single-JVM build.
-      val next = shortcut(propagate(labels)).localCheckpoint()
-      val nextSum = lblSum(next)
-      converged = nextSum == prevSum
-      prevSum = nextSum
-      labels.unpersist(blocking = false)
-      labels = next
-      round += 1
-      if (!converged && round == cap && !extended) {
-        extended = true
-        cap = maxRounds * 2
-        log(s"[graft] ccFixedPoint: no convergence in " +
-          s"$maxRounds rounds — extending once to $cap")
+      val edges = graft.Cache.cached(s, d, "dedup.ccEdges") {
+        Graph.symmetric(minhashPairs(s, d), "d1", "d2")
       }
+      Graph.ccFixedPoint[Long](edges)
     }
-    require(converged,
-      s"connected components did not converge in $cap " +
-        "propagate+shortcut rounds (cap already doubled once from " +
-        s"$maxRounds) — component label chains deeper than ~2^$cap; " +
-        "raise maxRounds")
-    // Returned (and possibly re-persisted by Cache) while still
-    // holding the final round's blocks — an extra persist is a no-op.
-    labels
-  }
-
-  /** Min-label union-find over a fully-local edge list — the
-    * single-task body of [[ccFixedPoint]]'s bounded path. Emits
-    * every node with its component minimum, sorted by node (the
-    * order the eager driver version produced). */
-  private def localUnionFind(
-      it: Iterator[(Long, Long)]): Iterator[(Long, Long)] = {
-    val es = it.toArray
-    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-    def find(x: Long): Long = {
-      var r = x
-      while (parent(r) != r) r = parent(r)
-      var c = x
-      while (parent(c) != c) { val nx = parent(c); parent(c) = r; c = nx }
-      r
-    }
-    es.foreach { case (a, b) =>
-      parent.getOrElseUpdate(a, a)
-      parent.getOrElseUpdate(b, b)
-      val (ra, rb) = (find(a), find(b))
-      if (ra < rb) parent(rb) = ra
-      else if (rb < ra) parent(ra) = rb
-    }
-    parent.keys.toSeq.sorted.iterator.map(n => (n, find(n)))
-  }
 
   /** The dedup_embed_ann pipeline, parameterized so the AnnSweep tool
     * can measure pair coverage of candidate configs with the exact

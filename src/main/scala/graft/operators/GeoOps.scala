@@ -319,9 +319,9 @@ object GeoOps {
     // (the reachability complement to geo_zone_rank's importance;
     // an isolated basin is a detached trade system). Component id =
     // min zone label, with sizes. Same two-path discipline as
-    // [[zoneRank]]: bounded driver union-find below 100k edges,
-    // distributed min-label propagation with a convergence check
-    // beyond ([[zoneComponents]]).
+    // [[zoneRank]]: single-task union-find up to
+    // [[Graph.LocalMaxEdges]], distributed pointer-jumping label
+    // propagation beyond ([[zoneComponents]]).
     "geo_zone_components" -> ((s, d) =>
       zoneComponents(odMatrix(s, d)
         .select(col("o_zone"), col("d_zone"),
@@ -374,7 +374,7 @@ object GeoOps {
   }
 
   /** Provable OD edge-universe bound: zones². 91² = 8,281 at the 30°
-    * grid — under [[zoneRank]]'s 100k single-task threshold; at a 1°
+    * grid — under [[Graph.LocalMaxEdges]]; at a 1°
     * grid this evaluates to ~4.3e9 and correctly forces the
     * distributed path (GeoOpsSpec pins both dispatch directions). */
   private[graft] def odMaxEdges: Long = {
@@ -442,7 +442,7 @@ object GeoOps {
     *
     * BOUNDED SINGLE-TASK FAST PATH (the dedup_clusters union-find
     * precedent — the broadcast-join tradeoff made explicit): when
-    * the weighted edge list is known small (≤ `driverMaxEdges`), 10
+    * the weighted edge list is known small (≤ `localMaxEdges`), 10
     * iterations of tiny sequential Spark stages cost far more in
     * scheduling than the arithmetic — the fixture measured 9.2 s
     * distributed vs sub-second local. The same integer recurrence
@@ -454,22 +454,15 @@ object GeoOps {
     * zone graphs are |zones|²-bounded, so this is the rare regime,
     * but a 1°-grid planet (~65k zones) can exceed it.
     *
-    * PATH DISPATCH (round-12 advice closed the round-8 contract):
-    * when the caller can PROVE an edge-count bound from the zone
-    * universe (`staticMaxEdges` — the 30° grid admits ≤ 12·6 = 72
-    * zones, so ≤ 72² = 5,184 OD edges), the path is chosen with no
-    * Spark job and construction is plan-only (PlanSpec asserts zero
-    * jobs). Only unbounded edge sources fall back to the
-    * `edges.count()` decision — the broadcast-threshold-planner
-    * analogue, which necessarily runs a job at build time. */
+    * PATH DISPATCH ([[Graph.oneTask]]): when the caller can PROVE an
+    * edge-count bound from the zone universe (`staticMaxEdges` — the
+    * 30° grid admits ≤ 12·6 = 72 zones, so ≤ 72² = 5,184 OD edges),
+    * the path is chosen with no Spark job and construction is
+    * plan-only (PlanSpec asserts zero jobs). */
   private[operators] def zoneRank(edges: DataFrame, iters: Int,
-      driverMaxEdges: Long = 100000L,
+      localMaxEdges: Long = Graph.LocalMaxEdges,
       staticMaxEdges: Option[Long] = None): DataFrame = {
-    val bounded = staticMaxEdges match {
-      case Some(b) => b <= driverMaxEdges
-      case None => edges.count() <= driverMaxEdges
-    }
-    if (bounded) {
+    if (Graph.oneTask(edges, localMaxEdges, staticMaxEdges)) {
       val spark = edges.sparkSession
       import spark.implicits._
       edges.select(col("o_zone"), col("d_zone"), col("w"))
@@ -523,93 +516,25 @@ object GeoOps {
   /** Connected components over the OD lane graph (edges = lanes with
     * o ≠ d, nodes = every zone any lane touches — a self-lane-only
     * zone is its own component). Component id = min reachable zone
-    * label.
-    *
-    * Two paths, [[zoneRank]]'s discipline (including its
-    * static-bound dispatch — `staticMaxEdges` picks the path with
-    * no Spark job when the zone universe proves the bound):
-    * ≤ `driverMaxEdges` a single-task union-find over a
-    * `coalesce(1)` of the lane frame — lazy, one task, no
-    * construction-time collect; beyond, distributed min-label
-    * propagation — each round one equi-join + aggregate, rounds =
-    * component diameter, per-round persist + convergence count (the
-    * dedup_clusters ccFixedPoint idiom). GeoOpsSpec forces both
-    * paths equal. */
+    * label. The lanes go through [[Graph.symmetric]] (a self-lane
+    * becomes a (z, z) edge) into [[Graph.ccFixedPoint]], so the path
+    * choice is [[zoneRank]]'s: `staticMaxEdges` bounds the LANES and
+    * picks the path with no Spark job. GeoOpsSpec forces both paths
+    * equal. */
   private[operators] def zoneComponents(od: DataFrame,
-      driverMaxEdges: Long = 100000L,
+      localMaxEdges: Long = Graph.LocalMaxEdges,
       staticMaxEdges: Option[Long] = None): DataFrame = {
     val spark = od.sparkSession
     import spark.implicits._
-    val lanes = od.select("o_zone", "d_zone")
-    val nodes = lanes.select(col("o_zone").as("zone"))
-      .unionByName(lanes.select(col("d_zone").as("zone"))).distinct()
-    val sym = lanes.filter(col("o_zone") =!= col("d_zone"))
-      .select(col("o_zone").as("a"), col("d_zone").as("b"))
-      .unionByName(lanes.filter(col("o_zone") =!= col("d_zone"))
-        .select(col("d_zone").as("a"), col("o_zone").as("b")))
-      .distinct()
-    val bounded = staticMaxEdges match {
-      case Some(b) => b <= driverMaxEdges
-      case None => lanes.count() <= driverMaxEdges
-    }
-    val labels =
-      if (bounded) {
-        lanes.as[(String, String)]
-          .coalesce(1)
-          .mapPartitions(localComponents)
-          .toDF("zone", "component")
-      } else {
-        var lbl = nodes.select(col("zone"), col("zone").as("lbl"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        var changed = 1L
-        while (changed > 0) {
-          val cand = sym
-            .join(lbl.select(col("zone").as("b"), col("lbl").as("bl")), "b")
-            .groupBy("a").agg(min("bl").as("cand"))
-          val next = lbl
-            .join(cand.withColumnRenamed("a", "zone"), Seq("zone"), "left")
-            .select(col("zone"),
-              least(col("lbl"), coalesce(col("cand"), col("lbl")))
-                .as("lbl"))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          changed = next
-            .join(lbl.withColumnRenamed("lbl", "old"), "zone")
-            .filter(col("lbl") =!= col("old")).count()
-          lbl.unpersist(blocking = false)
-          lbl = next
-        }
-        lbl.select(col("zone"), col("lbl").as("component"))
-      }
+    // staticMaxEdges bounds lanes; the solver sees two edges per lane
+    val labels = Graph.ccFixedPoint[String](
+        Graph.symmetric(od, "o_zone", "d_zone"), localMaxEdges,
+        staticMaxEdges.map(2 * _))
+      .select(col("n").as("zone"), col("lbl").as("component"))
     val sizes = labels.groupBy("component").agg(count(lit(1)).as("csize"))
     labels.join(sizes, "component")
       .select("zone", "component", "csize")
       .orderBy("zone")
-  }
-
-  /** Min-label union-find over a fully-local lane list — the
-    * single-task body of [[zoneComponents]]'s bounded path. Nodes =
-    * every zone any lane touches (a self-lane-only zone is its own
-    * component); component id = min reachable zone label, identical
-    * to the distributed propagation's fixed point. */
-  private def localComponents(
-      it: Iterator[(String, String)]): Iterator[(String, String)] = {
-    val lanes = it.toArray
-    val ns = (lanes.map(_._1) ++ lanes.map(_._2)).distinct
-    val parent = scala.collection.mutable.Map(ns.map(z => z -> z): _*)
-    def find(x: String): String = {
-      var r = x
-      while (parent(r) != r) r = parent(r)
-      var c = x
-      while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
-      r
-    }
-    lanes.filter(l => l._1 != l._2).foreach { case (a, b) =>
-      val (ra, rb) = (find(a), find(b))
-      if (ra != rb) { // min-label union => canonical component ids
-        if (ra < rb) parent(rb) = ra else parent(ra) = rb
-      }
-    }
-    ns.iterator.map(z => (z, find(z)))
   }
 
   /** Bbox-prefiltered (point, zone) candidates: one row per report ×

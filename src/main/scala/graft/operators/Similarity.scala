@@ -4,7 +4,7 @@ import graft.{Cache, EngineConf, Q, Tables}
 import graft.functions.GraftFunctions
 import graft.functions.GraftFunctions.vecDot
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
 /** Category I (similarity half) — vector similarity search over
@@ -130,15 +130,26 @@ object Similarity {
       nTables: Int, bits: Int, seed: Long): DataFrame =
     Cache.diskBacked(s, d, s"sim.lsh.$nTables.$bits.$seed",
       "embeddings.parquet", Seq("vec_id")) {
-      GraftFunctions.ensureRegistered(s)
-      val flat: Seq[Double] = hyperplanes(nPlanes = nTables * bits,
-        dim = 64, seed).flatMap(_._2)
-      vecs(s, d)
-        .select(col("vec_id"),
-          posexplode(GraftFunctions.lshSignature(
-            col("embedding"), flat, nTables, bits))
-            .as(Seq("tbl", "bucket")))
+      signatures(s, vecs(s, d), nTables, bits, seed)
     }
+
+  /** (vec_id, tbl, bucket) signature rows of `v` — the one body behind
+    * the unsharded index ([[lshBuckets]]) and its shards
+    * ([[lshBucketsShard]]). */
+  private def signatures(s: SparkSession, v: DataFrame,
+      nTables: Int, bits: Int, seed: Long): DataFrame = {
+    GraftFunctions.ensureRegistered(s)
+    val flat: Seq[Double] = hyperplanes(nPlanes = nTables * bits,
+      dim = 64, seed).flatMap(_._2)
+    v.select(col("vec_id"),
+      posexplode(GraftFunctions.lshSignature(
+        col("embedding"), flat, nTables, bits))
+        .as(Seq("tbl", "bucket")))
+  }
+
+  /** Members of shard `shard` of `shards`: pmod(vec_id, shards). */
+  private def inShard(shard: Int, shards: Int): Column =
+    pmod(col("vec_id"), lit(shards)) === shard
 
   /** Multi-probe bucket list: the vector's own bucket plus every
     * 1-bit flip — probing Hamming-1 neighbors lifts per-table hit
@@ -192,9 +203,9 @@ object Similarity {
     * and never more than 4M rows regardless of heap, because past
     * ~1.6 GB-per-executor of replicated vectors the right
     * architecture is index SHARDING (queries replicate, index
-    * partitions by vec_id — [[shardedAnnTopK]], whose per-shard
-    * attach is n/S rows and fits where the unsharded 2M attach
-    * dies). Under the bound a too-small heap now backs off to the
+    * partitions by vec_id — [[annTopK]]'s sharded route, whose
+    * per-shard attach is n/S rows and fits where the unsharded 2M
+    * attach dies). Under the bound a too-small heap now backs off to the
     * wide path instead of OOMing.
     *
     * Derivation point (r18 advice, fixed r19): the bound is computed
@@ -331,10 +342,8 @@ object Similarity {
       val half = halfPairs(s, d)
       val full = half.unionAll(half.select(
         col("v2").as("v1"), col("v1").as("v2"), col("cos")))
-      val w = Window.partitionBy("v1")
-        .orderBy(col("cos").desc, col("v2"))
       full
-        .withColumn("rk", row_number().over(w))
+        .withColumn("rk", row_number().over(byCos))
         .filter(col("rk") <= 5)
         .select("v1", "rk", "v2", "cos")
         .orderBy("v1", "rk")
@@ -490,8 +499,6 @@ object Similarity {
       .select(col("vec_id").as("v1"), col("pcell"))
     val members = ranked.filter(col("prk") === 1)
       .select(col("vec_id").as("v2"), col("pcell"))
-    val wTop = Window.partitionBy("v1")
-      .orderBy(col("cos").desc, col("v2"))
     // No candidate dedup needed (unlike ann_lsh): cells PARTITION
     // the collection, so a (v1, v2) pair arises from exactly one
     // probed cell — skipping dropDuplicates saves a full exchange
@@ -506,7 +513,7 @@ object Similarity {
       .withColumn("cos", round(
         vecDot(col("ea"), col("eb")) / sqrt(col("na") * col("nb")), 4))
       .select("v1", "v2", "cos")
-      .withColumn("rk", row_number().over(wTop))
+      .withColumn("rk", row_number().over(byCos))
       .filter(col("rk") <= 3)
       .select("v1", "rk", "v2", "cos")
       .orderBy("v1", "rk")
@@ -538,16 +545,9 @@ object Similarity {
       attachMaxRows: Long = -1L): DataFrame = {
     val attachBound =
       if (attachMaxRows >= 0) attachMaxRows else attachBroadcastMaxRows(s)
-    val w = Window.partitionBy("v1")
-      .orderBy(col("cos").desc, col("v2"))
     val n = EngineConf.parquetRowCount(s, s"$d/embeddings.parquet")
-    if (n <= attachBound)
+    val candidates = if (n <= attachBound)
       lshCandidates(s, d, nTables, bits, seed, nH1, attachBound)
-        .withColumn("rk", dense_rank().over(w))
-        .filter(col("rk") <= 3)
-        .dropDuplicates("v1", "v2")
-        .select("v1", "rk", "v2", "cos")
-        .orderBy("v1", "rk")
     else {
       val bound = math.max(attachBound, 1L)
       val needed = (n + bound - 1) / bound
@@ -564,13 +564,18 @@ object Similarity {
         .map(i => shardTopKArtifact(s, d, i, shards, nTables, bits,
           seed, nH1))
         .reduce(_ unionAll _)
-        .withColumn("rk", dense_rank().over(w))
-        .filter(col("rk") <= 3)
-        .dropDuplicates("v1", "v2")
-        .select("v1", "rk", "v2", "cos")
-        .orderBy("v1", "rk")
     }
+    candidates
+      .withColumn("rk", dense_rank().over(byCos))
+      .filter(col("rk") <= 3)
+      .dropDuplicates("v1", "v2")
+      .select("v1", "rk", "v2", "cos")
+      .orderBy("v1", "rk")
   }
+
+  /** Per-query ranking: highest cosine first, ties by v2. */
+  private def byCos: WindowSpec =
+    Window.partitionBy("v1").orderBy(col("cos").desc, col("v2"))
 
   /** One shard's top-k as a disk-backed artifact (v1-clustered — the
     * re-rank's window key): building it is the shard's indexing JOB;
@@ -596,27 +601,20 @@ object Similarity {
     Cache.diskBacked(s, d,
       s"sim.lsh.$nTables.$bits.$seed.s$shard.of$shards",
       "embeddings.parquet", Seq("vec_id")) {
-      GraftFunctions.ensureRegistered(s)
-      val flat: Seq[Double] = hyperplanes(nPlanes = nTables * bits,
-        dim = 64, seed).flatMap(_._2)
-      vecs(s, d)
-        .filter(pmod(col("vec_id"), lit(shards)) === shard)
-        .select(col("vec_id"),
-          posexplode(GraftFunctions.lshSignature(
-            col("embedding"), flat, nTables, bits))
-            .as(Seq("tbl", "bucket")))
+      signatures(s, vecs(s, d).filter(inShard(shard, shards)),
+        nTables, bits, seed)
     }
 
-  /** PROTOTYPE of the >[[AttachBroadcastMaxRows]] design: sharded ANN
-    * top-k. The single-artifact path ends at ~4M vectors because the
-    * per-executor replicated vector set (~1.6 GB) stops fitting; past
-    * that the architecture is "queries replicate, index partitions":
+  /** ONE shard's top-k (v1, v2, cos) — the past-[[attachBroadcastMaxRows]]
+    * design ("queries replicate, index partitions"): in a deployment
+    * this is an independent per-shard JOB (its broadcasts live only
+    * for its duration), and [[annTopK]] re-ranks the union of the
+    * shards' artifacts.
     *
-    *  - the INDEX partitions by vec_id into `shards` independent
-    *    diskBacked artifacts (each built from its slice of the source;
-    *    at 100 TB each shard is owned by an executor group and its
-    *    vector attach broadcasts only n/S rows — back under the
-    *    memory bound);
+    *  - the INDEX partitions by vec_id into per-shard diskBacked
+    *    artifacts ([[lshBucketsShard]]); the member-side vector
+    *    attach broadcasts only n/S rows — back under the memory
+    *    bound, the bound this design buys;
     *  - QUERIES replicate: every query probes each shard's bucket
     *    index and takes a per-shard top-k, so only k·S narrow rows
     *    per query ever cross shard boundaries;
@@ -625,47 +623,19 @@ object Similarity {
     *    candidate pair lives in exactly one shard, and the global
     *    top-k is a subset of the per-shard top-k union (k per shard
     *    retained ≥ k globally needed). ShardSpec pins
-    *    shard-union == unsharded output row-for-row, at 2 and 3
-    *    shards.
+    *    sharded == unsharded output row-for-row through [[annTopK]],
+    *    at 2 and 3 shards.
     *
-    * Prototype honesty: the probe-side vector attach here broadcasts
-    * the FULL query set — right for the deployment shape (a query
-    * batch is small), right for these fixtures, but a corpus-sized
-    * SELF-join past 4M would co-partition that attach on vec_id
-    * instead (the wide path's trick). The per-shard H1 probe work is
-    * S× the unsharded probe work — that is the real, stated price of
-    * "queries replicate". */
-  private[operators] def shardedAnnTopK(s: SparkSession, d: String,
-      shards: Int, nTables: Int, bits: Int, seed: Long, nH1: Int,
-      k: Int = 3): DataFrame = {
-    val w = Window.partitionBy("v1")
-      .orderBy(col("cos").desc, col("v2"))
-    val perShard = (0 until shards).map(i =>
-      shardTopK(s, d, i, shards, nTables, bits, seed, nH1, k))
-    perShard.reduce(_ unionAll _)
-      .withColumn("rk", dense_rank().over(w))
-      .filter(col("rk") <= k)
-      .dropDuplicates("v1", "v2")
-      .select("v1", "rk", "v2", "cos")
-      .orderBy("v1", "rk")
-  }
-
-  /** ONE shard's top-k (v1, v2, cos) — in a deployment this is an
-    * independent per-shard JOB (its broadcasts live only for its
-    * duration); [[shardedAnnTopK]] composes all shards into one query
-    * for the spec-pinned equality proof. Memory honesty, measured at
-    * 2M/16 GiB (r18): in the ONE-QUERY composition every shard
-    * branch's relations coexist — S·(n + n/S) broadcast rows — so the
-    * query-side attach broadcasts only when that TOTAL fits the
-    * bound; past it the query side becomes a plain vec_id-hash join
-    * (a deployment's query batch is small and always broadcasts; the
-    * corpus self-join here is the stress shape). The member-side
-    * attach is the n/S-row broadcast the sharding exists to buy. */
+    * The query side is a plain vec_id join: annTopK only shards past
+    * the attach bound, where the full query set must not broadcast
+    * (the corpus self-join is the stress shape; a deployment's query
+    * batch is small and the planner broadcasts it on its own). The
+    * per-shard H1 probe work is S× the unsharded probe work — the
+    * real, stated price of "queries replicate". */
   private def shardTopK(s: SparkSession, d: String,
       shard: Int, shards: Int, nTables: Int, bits: Int, seed: Long,
-      nH1: Int, k: Int = 3): DataFrame = {
+      nH1: Int): DataFrame = {
     val v = vecs(s, d)
-    val n = EngineConf.parquetRowCount(s, s"$d/embeddings.parquet")
     def cosCol: Column = round(
       vecDot(col("ea"), col("eb")) / sqrt(col("na") * col("nb")), 4)
     val probes = (0 until shards)
@@ -674,27 +644,19 @@ object Similarity {
       .select(col("vec_id").as("v1"), col("tbl"),
         explode(when(col("tbl") < nH1, probeBuckets(bits))
           .otherwise(array(col("bucket")))).as("bucket"))
-    val qv = v.select(col("vec_id").as("v1"),
-      col("embedding").as("ea"), col("nsq").as("na"))
-    val attachQueries: DataFrame => DataFrame =
-      if (n * (shards + 1) <= attachBroadcastMaxRows(s))
-        df => df.join(broadcast(qv), "v1")
-      else df => df.join(qv, "v1")
     val index = lshBucketsShard(s, d, nTables, bits, seed, shard, shards)
       .select(col("vec_id").as("v2"), col("tbl"), col("bucket"))
-    val w = Window.partitionBy("v1")
-      .orderBy(col("cos").desc, col("v2"))
-    attachQueries(probes.join(index, Seq("tbl", "bucket"))
+    probes.join(index, Seq("tbl", "bucket"))
       .filter(col("v1") =!= col("v2"))
-      .select("v1", "v2"))
-      // the shard-local attach: n/S rows — the bound this design buys
-      .join(broadcast(v
-        .filter(pmod(col("vec_id"), lit(shards)) === shard)
+      .select("v1", "v2")
+      .join(v.select(col("vec_id").as("v1"),
+        col("embedding").as("ea"), col("nsq").as("na")), "v1")
+      .join(broadcast(v.filter(inShard(shard, shards))
         .select(col("vec_id").as("v2"),
           col("embedding").as("eb"), col("nsq").as("nb"))), "v2")
       .select(col("v1"), col("v2"), cosCol.as("cos"))
-      .withColumn("rk", dense_rank().over(w))
-      .filter(col("rk") <= k)
+      .withColumn("rk", dense_rank().over(byCos))
+      .filter(col("rk") <= 3)
       .select("v1", "v2", "cos")
   }
 

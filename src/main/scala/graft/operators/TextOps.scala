@@ -76,12 +76,17 @@ object TextOps {
     }),
 
     // Corpus stats per (lang, source): doc counts, char sums, vocab.
+    // avg_chars is the raw mean, deliberately NOT rounded: both
+    // engines divide the integer sum by the count in double, while
+    // round() diverges on exact .xx5 means (Spark rounds the decimal
+    // string, DuckDB the binary double: 10921 / 40 = 273.025 gives
+    // 273.03 vs 273.02).
     "text_stats" -> ((s, d) => {
       val docs = Tables.documents(s, d)
       val base = docs.groupBy("lang", "source")
         .agg(count(lit(1)).as("n_docs"),
           sum("n_chars").as("total_chars"),
-          round(avg("n_chars"), 2).as("avg_chars"))
+          avg("n_chars").as("avg_chars"))
       val vocab = docs
         .select(col("lang"), col("source"),
           explode(split(col("text"), " ")).as("w"))
@@ -168,38 +173,10 @@ object TextOps {
     // group-by-text survivor SQL: the fingerprint split is an
     // execution strategy, not a semantics change.
     "pipeline_corpus_prep" -> ((s, d) => {
-      graft.functions.GraftFunctions.ensureRegistered(s)
       val docs = Tables.documents(s, d)
         .withColumn("toks", size(split(col("text"), " ")).cast("long"))
-      // ONE fp pass (r19 optimization round, same rewrite as
-      // dedup_exact_fingerprint — see its comment): the per-fp doc
-      // list rides one hash aggregate over narrow (fp, doc_id, lang,
-      // toks) rows instead of re-evaluating rollingFingerprint over
-      // the full corpus once per branch (the before plan evaluated it
-      // 4×; plans/r19/pipeline_corpus_prep_before.txt).
-      // Cached for the same two-consumer-lineage reason as
-      // dedup_exact_fingerprint's dedup.fpGroups (see its comment).
-      val groups = graft.Cache.cached(s, d, "pipeline.fpGroups") {
-        docs.select(col("doc_id"), col("lang"), col("toks"),
-            graft.functions.GraftFunctions.rollingFingerprint(col("text"))
-              .as("fp"))
-          .groupBy("fp")
-          .agg(collect_list(
-            struct(col("doc_id"), col("lang"), col("toks"))).as("ds"))
-      }
-      val singles = groups.filter(size(col("ds")) === 1)
-        .select(col("ds")(0).getField("doc_id").as("doc_id"),
-          col("ds")(0).getField("lang").as("lang"),
-          col("ds")(0).getField("toks").as("toks"))
-      val collidedIds = groups.filter(size(col("ds")) > 1)
-        .select(explode(col("ds")).as("x"))
-        .select(col("x").getField("doc_id").as("doc_id"))
-      val verified = docs.join(broadcast(collidedIds), Seq("doc_id"))
-        .groupBy("text")
-        .agg(min("doc_id").as("doc_id"),
-          min_by(col("lang"), col("doc_id")).as("lang"),
-          min_by(col("toks"), col("doc_id")).as("toks"))
-        .select("doc_id", "lang", "toks")
+      val survivors = Dedup.fingerprintSurvivors(s, d, "pipeline.fpGroups",
+        docs, Seq("lang", "toks"))
       // The survivor set feeds BOTH packBins references (row prefix +
       // bucket offsets). Persist it via [[graft.Cache]] — AQE's stage
       // cache does not collapse the two lineages (verified: two
@@ -208,7 +185,8 @@ object TextOps {
       // runs once and only narrow (doc_id, lang, toks) triples are
       // ever re-read.
       packBins(graft.Cache.cached(s, d, "pipeline.corpusKept")(
-        singles.unionByName(verified).filter(col("toks") >= 15)),
+        survivors.select("doc_id", "lang", "toks")
+          .filter(col("toks") >= 15)),
         persistIntra =
           df => graft.Cache.cached(s, d, "pipeline.packIntra")(df))
     }),
@@ -834,7 +812,7 @@ object TextOps {
       """WITH base AS (
         |  SELECT lang, source, count(*) AS n_docs,
         |    CAST(sum(n_chars) AS BIGINT) AS total_chars,
-        |    round(avg(n_chars), 2) AS avg_chars
+        |    avg(n_chars) AS avg_chars
         |  FROM documents GROUP BY 1, 2
         |), vocab AS (
         |  SELECT lang, source, count(DISTINCT w) AS vocab

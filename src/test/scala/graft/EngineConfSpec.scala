@@ -75,7 +75,7 @@ class EngineConfSpec extends AnyFunSuite {
         == "true")
       assert(s.conf.get(
         "spark.sql.adaptive.coalescePartitions.initialPartitionNum")
-        == sys.env.getOrElse("SPARK_GRAFT_INITIAL_PARTITIONS", "256"))
+        == "256")
     } finally
       prev.fold(SparkSession.clearActiveSession())(
         SparkSession.setActiveSession)

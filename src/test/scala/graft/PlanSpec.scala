@@ -510,10 +510,11 @@ class PlanSpec extends SparkSpec {
 
   test("geo_zone_rank / geo_zone_components: bounded single-task" +
       " path, and construction runs ZERO Spark jobs") {
-    // The 30° zone universe proves ≤ 72² edges ≪ the 100k threshold
-    // with no job (staticMaxEdges), so BUILDING these queries must
-    // run nothing — the round-8 "construction is an action" contract
-    // is closed (round-12 advice). The bounded path itself must be
+    // The 30° zone universe proves ≤ 72² edges ≪ the one-task
+    // threshold (Graph.LocalMaxEdges) with no job (staticMaxEdges),
+    // so BUILDING these queries must run nothing — the round-8
+    // "construction is an action" contract is closed (round-12
+    // advice). The bounded path itself must be
     // the lazy single-task recurrence (Coalesce 1 + MapPartitions),
     // NOT the 20-exchange distributed iteration chain (9.2 s of
     // stage scheduling for 72 nodes when measured) and NOT an eager

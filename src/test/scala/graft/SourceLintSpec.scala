@@ -7,8 +7,9 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Guards against regrowth in `src/main`: sessions come from the one
-  * factory ([[EngineConf.builder]]), and the command-line mains are
-  * exactly the documented ones. A new one-off study belongs in a
+  * factory ([[EngineConf.builder]]), the command-line mains are
+  * exactly the documented ones, and connected components have one
+  * solver ([[operators.Graph]]). A new one-off study belongs in a
   * scratch copy or in `perfbench`, not in the library. */
 class SourceLintSpec extends AnyFunSuite {
 
@@ -47,6 +48,15 @@ class SourceLintSpec extends AnyFunSuite {
         .findFirstIn(src).isDefined => f
     }
     assert(builders.toSet == Set("graft/EngineConf.scala"))
+  }
+
+  test("one file declares a union-find find: the shared graph solver") {
+    val finds = sources.collect {
+      case (f, src) if "\\bdef\\s+find\\s*[\\[(]".r
+        .findFirstIn(src).isDefined => f
+    }
+    assert(finds.toSet == Set("graft/operators/Graph.scala"),
+      s"union-find copies in: ${finds.toSeq.sorted.mkString(", ")}")
   }
 
   test("the command-line mains are exactly the kept list") {

@@ -255,15 +255,15 @@ class DedupSpec extends SparkSpec {
     val edges = (0L until 99L)
       .flatMap(i => Seq((i, i + 1), (i + 1, i)))
       .toDF("a", "b")
-    // localSolveMaxEdges = 0 forces the DISTRIBUTED pointer-jump path
+    // localMaxEdges = 0 forces the DISTRIBUTED pointer-jump path
     // (the default would take the small-graph union-find shortcut)
-    val labels = Dedup.ccFixedPoint(edges, localSolveMaxEdges = 0)
+    val labels = Graph.ccFixedPoint[Long](edges, localMaxEdges = 0)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(labels.size == 100)
     assert(labels.values.forall(_ == 0L),
       "every chain node must label to the component min 0")
     // and the small-graph fast path agrees exactly
-    val fast = Dedup.ccFixedPoint(edges)
+    val fast = Graph.ccFixedPoint[Long](edges)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(fast == labels, "fast path diverges from pointer jump")
   }
@@ -290,8 +290,8 @@ class DedupSpec extends SparkSpec {
       val sym = raw.flatMap { case (a, b) => Seq((a, b), (b, a)) }
       // force the distributed path: comparing the fast path (itself a
       // union-find) against this spec's union-find would be circular
-      val labels = Dedup.ccFixedPoint(sym.toDF("a", "b"),
-          localSolveMaxEdges = 0).collect()
+      val labels = Graph.ccFixedPoint[Long](sym.toDF("a", "b"),
+          localMaxEdges = 0).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toMap
       val nodes = sym.map(_._1).distinct
       assert(labels.keySet == nodes.toSet)
@@ -314,8 +314,8 @@ class DedupSpec extends SparkSpec {
       .flatMap(i => Seq((i, i + 1), (i + 1, i)))
       .toDF("a", "b")
     val warnings = scala.collection.mutable.Buffer[String]()
-    val labels = Dedup.ccFixedPoint(edges, maxRounds = 5,
-        log = warnings += _, localSolveMaxEdges = 0)
+    val labels = Graph.ccFixedPoint[Long](edges, maxRounds = 5,
+        log = warnings += _, localMaxEdges = 0)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(warnings.exists(_.contains("extending once")),
       "the cap extension should have fired and logged")
@@ -326,13 +326,13 @@ class DedupSpec extends SparkSpec {
 
   test("ccFixedPoint converges to empty on an empty edge set") {
     // A corpus with zero near-dup pairs must yield zero clusters,
-    // not NPE the label-sum convergence check.
+    // not fail the convergence check.
     val s = spark; import s.implicits._
     val edges = Seq.empty[(Long, Long)].toDF("a", "b")
-    assert(Dedup.ccFixedPoint(edges).count() == 0)
-    // the distributed path too (localSolveMaxEdges = -1 disables the
+    assert(Graph.ccFixedPoint[Long](edges).count() == 0)
+    // the distributed path too (localMaxEdges = -1 disables the
     // fast path even for the empty frame)
-    assert(Dedup.ccFixedPoint(edges, localSolveMaxEdges = -1).count() == 0)
+    assert(Graph.ccFixedPoint[Long](edges, localMaxEdges = -1).count() == 0)
   }
 
   test("ccFixedPoint labels disjoint components independently") {
@@ -342,11 +342,16 @@ class DedupSpec extends SparkSpec {
     val edges = comps.flatMap { case (lo, hi, _) =>
       (lo until hi).flatMap(i => Seq((i, i + 1), (i + 1, i)))
     }.toDF("a", "b")
-    val labels = Dedup.ccFixedPoint(edges)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    comps.foreach { case (lo, hi, want) =>
-      (lo to hi).foreach(n => assert(labels(n) == want,
-        s"node $n labeled ${labels(n)}, expected $want"))
+    // both paths: the single-task union-find and (localMaxEdges = 0)
+    // the distributed pointer jump
+    Seq(Graph.LocalMaxEdges, 0L).foreach { localMax =>
+      val labels = Graph.ccFixedPoint[Long](edges, localMaxEdges = localMax)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+      comps.foreach { case (lo, hi, want) =>
+        (lo to hi).foreach(n => assert(labels(n) == want,
+          s"localMaxEdges $localMax: node $n labeled ${labels(n)}, " +
+            s"expected $want"))
+      }
     }
   }
 

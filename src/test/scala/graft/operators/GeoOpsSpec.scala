@@ -417,8 +417,8 @@ class GeoOpsSpec extends SparkSpec {
         org.apache.spark.sql.functions.col("d_zone"),
         org.apache.spark.sql.functions.col("n_voyages").as("w"))
     val fast = GeoOps.zoneRank(edges, iters = 10,
-      driverMaxEdges = Long.MaxValue).collect().map(_.toString).toSeq
-    val dist = GeoOps.zoneRank(edges, iters = 10, driverMaxEdges = 0L)
+      localMaxEdges = Long.MaxValue).collect().map(_.toString).toSeq
+    val dist = GeoOps.zoneRank(edges, iters = 10, localMaxEdges = 0L)
       .collect().map(_.toString).toSeq
     assert(fast.nonEmpty && fast == dist,
       "driver fast path diverges from the distributed power iteration")
@@ -436,7 +436,7 @@ class GeoOpsSpec extends SparkSpec {
       .contains("MapPartitions"),
       "static bound under threshold must take the single-task path")
     // bound exceeds the threshold -> distributed loop, no fast path
-    val dist = GeoOps.zoneRank(edges, iters = 2, driverMaxEdges = 10L,
+    val dist = GeoOps.zoneRank(edges, iters = 2, localMaxEdges = 10L,
       staticMaxEdges = Some(11L))
     assert(!dist.queryExecution.executedPlan.toString
       .contains("MapPartitions"),
@@ -451,7 +451,7 @@ class GeoOpsSpec extends SparkSpec {
     val cFast = GeoOps.zoneComponents(od, staticMaxEdges = Some(5184L))
     assert(cFast.queryExecution.executedPlan.toString
       .contains("MapPartitions"))
-    val cDist = GeoOps.zoneComponents(od, driverMaxEdges = 1L,
+    val cDist = GeoOps.zoneComponents(od, localMaxEdges = 1L,
       staticMaxEdges = Some(2L))
     assert(!cDist.queryExecution.executedPlan.toString
       .contains("MapPartitions"))
@@ -468,12 +468,12 @@ class GeoOpsSpec extends SparkSpec {
     // two basins (A-B-C chain, D-E) + an isolated self-lane zone F
     val od = Seq(("A", "B", 1L), ("C", "B", 1L), ("E", "D", 1L),
       ("F", "F", 2L)).toDF("o_zone", "d_zone", "w")
-    val fast = GeoOps.zoneComponents(od, driverMaxEdges = Long.MaxValue)
+    val fast = GeoOps.zoneComponents(od, localMaxEdges = Long.MaxValue)
       .collect().map(_.toString).toSeq
-    val dist = GeoOps.zoneComponents(od, driverMaxEdges = 0L)
+    val dist = GeoOps.zoneComponents(od, localMaxEdges = 0L)
       .collect().map(_.toString).toSeq
     assert(fast == dist, "union-find diverges from label propagation")
-    val m = GeoOps.zoneComponents(od, driverMaxEdges = Long.MaxValue)
+    val m = GeoOps.zoneComponents(od, localMaxEdges = Long.MaxValue)
       .collect().map(r => r.getString(0) -> (r.getString(1), r.getLong(2)))
       .toMap
     assert(m == Map(
@@ -484,9 +484,9 @@ class GeoOpsSpec extends SparkSpec {
       .select(org.apache.spark.sql.functions.col("o_zone"),
         org.apache.spark.sql.functions.col("d_zone"),
         org.apache.spark.sql.functions.col("n_voyages").as("w"))
-    val rf = GeoOps.zoneComponents(real, driverMaxEdges = Long.MaxValue)
+    val rf = GeoOps.zoneComponents(real, localMaxEdges = Long.MaxValue)
       .collect().map(_.toString).toSeq
-    val rd = GeoOps.zoneComponents(real, driverMaxEdges = 0L)
+    val rd = GeoOps.zoneComponents(real, localMaxEdges = 0L)
       .collect().map(_.toString).toSeq
     assert(rf.nonEmpty && rf == rd)
   }

@@ -215,9 +215,9 @@ class PropertySpec extends SparkSpec {
         n -> seen.min
       }.toMap
       val sizes = expected.groupBy(_._2).map { case (c, m) => c -> m.size }
-      val got = GeoOps.zoneComponents(
-        edges.toDF("o_zone", "d_zone", "w"),
-        driverMaxEdges = if (trial % 2 == 0) Long.MaxValue else 0L)
+      val lanes = edges.toDF("o_zone", "d_zone", "w")
+      val localMax = if (trial % 2 == 0) Long.MaxValue else 0L
+      val got = GeoOps.zoneComponents(lanes, localMaxEdges = localMax)
         .collect()
         .map(r => r.getString(0) -> (r.getString(1), r.getLong(2)))
         .toMap
@@ -225,6 +225,13 @@ class PropertySpec extends SparkSpec {
         n -> (c, sizes(c).toLong)
       }
       assert(got == want, s"trial $trial: components diverge from BFS")
+      // the shared solver itself, on String nodes
+      val labels = Graph.ccFixedPoint[String](
+          Graph.symmetric(lanes, "o_zone", "d_zone"),
+          localMaxEdges = localMax)
+        .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+      assert(labels == expected,
+        s"trial $trial: solver labels diverge from BFS")
     }
   }
 
@@ -256,7 +263,7 @@ class PropertySpec extends SparkSpec {
       val want = nodes.map(n => n -> r(idx(n))).toMap
       val got = GeoOps.zoneRank(edges.toDF("o_zone", "d_zone", "w"),
         iters = 10,
-        driverMaxEdges = if (trial % 2 == 0) Long.MaxValue else 0L)
+        localMaxEdges = if (trial % 2 == 0) Long.MaxValue else 0L)
         .collect().map(x => x.getString(0) -> x.getLong(1)).toMap
       assert(got == want, s"trial $trial: ranks diverge from the" +
         " dense reference")

@@ -3,14 +3,14 @@ package graft.operators
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** The sharded-index prototype (Similarity.shardedAnnTopK) — the
-  * declared design for collections past the single-artifact attach
-  * ceiling (~4M vectors): index partitions by vec_id into per-shard
-  * diskBacked artifacts, queries replicate, per-shard top-k unions
-  * into an EXACT global top-k. These specs pin the exactness claim
-  * (shard-union == unsharded, the property that makes sharding a
-  * deployment choice instead of a recall trade) and the shard
-  * partition invariants it rests on.
+/** The sharded route of Similarity.annTopK — the declared design for
+  * collections past the single-artifact attach ceiling (~4M vectors):
+  * index partitions by vec_id into per-shard diskBacked artifacts,
+  * queries replicate, per-shard top-k unions into an EXACT global
+  * top-k. These specs force the route with a small `attachMaxRows`
+  * and pin the exactness claim (shard-union == unsharded, the
+  * property that makes sharding a deployment choice instead of a
+  * recall trade) and the shard partition invariants it rests on.
   */
 class ShardSpec extends SparkSpec {
 
@@ -20,6 +20,27 @@ class ShardSpec extends SparkSpec {
     (Similarity.LshTables, Similarity.lshBits(n), Similarity.LshSeed)
   }
 
+  /** annTopK forced onto `shards` per-shard top-k artifacts: an attach
+    * bound of ceil(n / shards) rows. Asserts each artifact exists. */
+  private def shardedTopK(d: String, shards: Int): Seq[Seq[Any]] = {
+    val (tables, bits, seed) = dims(d)
+    val n = graft.EngineConf.parquetRowCount(spark,
+      s"$d/embeddings.parquet")
+    val out = Similarity
+      .annTopK(spark, d, tables, bits, seed, Similarity.AnnH1Tables,
+        attachMaxRows = (n + shards - 1) / shards)
+      .collect().map(_.toSeq).toSeq
+    val dirTag = d.replaceAll("[^A-Za-z0-9]", "_").toLowerCase
+    val topk = spark.catalog.listTables().collect().map(_.name)
+      .filter(t => t.contains(dirTag) && t.contains("sim_lsh_topk"))
+    (0 until shards).foreach { i =>
+      assert(topk.exists(_.contains(s"_s${i}_of${shards}_")),
+        s"no top-k artifact for shard $i of $shards at $d, saw: " +
+          topk.mkString(", "))
+    }
+    out
+  }
+
   test("2-shard union == unsharded ann top-k, row for row (sf0.01 " +
       "and sf0.1)") {
     for (d <- Seq(SparkSpec.sf001, SparkSpec.sf01)) {
@@ -27,10 +48,7 @@ class ShardSpec extends SparkSpec {
       val base = Similarity
         .annTopK(spark, d, tables, bits, seed, Similarity.AnnH1Tables)
         .collect().map(_.toSeq).toSeq
-      val sharded = Similarity
-        .shardedAnnTopK(spark, d, 2, tables, bits, seed,
-          Similarity.AnnH1Tables)
-        .collect().map(_.toSeq).toSeq
+      val sharded = shardedTopK(d, 2)
       assert(sharded == base,
         s"2-shard result diverges from unsharded at $d: " +
           s"${sharded.size} vs ${base.size} rows")
@@ -44,10 +62,7 @@ class ShardSpec extends SparkSpec {
     val base = Similarity
       .annTopK(spark, d, tables, bits, seed, Similarity.AnnH1Tables)
       .collect().map(_.toSeq).toSeq
-    val sharded = Similarity
-      .shardedAnnTopK(spark, d, 3, tables, bits, seed,
-        Similarity.AnnH1Tables)
-      .collect().map(_.toSeq).toSeq
+    val sharded = shardedTopK(d, 3)
     assert(sharded == base)
   }
 

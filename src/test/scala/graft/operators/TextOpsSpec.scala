@@ -3,8 +3,36 @@ package graft.operators
 import graft.SparkSpec
 
 /** Structural pins for the shard-packing operator (value-level gate
-  * is the DuckDB oracle). */
+  * is the DuckDB oracle), and the corpus means' tie behavior. */
 class TextOpsSpec extends SparkSpec {
+
+  test("avg_chars is the raw mean on an exact half-cent tie" +
+      " (text_stats, agg_grouping_sets, multimodal_join)") {
+    // 40 docs summing to 10921 chars: mean exactly 273.025, where a
+    // rounded mean splits the engines (Spark rounds the decimal
+    // string to 273.03, DuckDB the binary double to 273.02). The
+    // queries must report the mean itself, as DuckDB's avg does.
+    val s = spark
+    import s.implicits._
+    val nChars = Seq.fill(39)(273L) :+ 274L
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft-half-cent").toString
+    nChars.zipWithIndex
+      .map { case (n, i) => (i.toLong, "x" * n.toInt, "en", "web", n) }
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+      .write.parquet(s"$dir/documents.parquet")
+    nChars.indices
+      .map(i => (i.toLong, Seq(1.0f, 0.0f), 0))
+      .toDF("vec_id", "embedding", "label")
+      .write.parquet(s"$dir/embeddings.parquet")
+    val mean = 10921.0 / 40
+    val means = Seq("text_stats", "agg_grouping_sets", "multimodal_join")
+      .map(q => q -> graft.SparkEntry.queries(q)(spark, dir).collect()
+        .map(_.getAs[Double]("avg_chars")).toSeq)
+    assert(means == Seq("text_stats" -> Seq(mean),
+      "agg_grouping_sets" -> Seq(mean, mean, mean),
+      "multimodal_join" -> Seq(mean)))
+  }
 
   test("text_pack_bins: bins conserve docs and tokens, fill contiguously") {
     val rows = TextOps.queries("text_pack_bins")(spark, SparkSpec.sf001)
