@@ -110,12 +110,15 @@ object Bench {
     // Optional untimed full-suite passes BEFORE the timed reps
     // (SPARK_GRAFT_BENCH_WARMUP=n; default 0 = the methodology every
     // committed artifact was measured under). Rationale (r16
-    // KernelProbe): Spark compiles one generated class per plan and
-    // C2 only reaches steady state after ~3-4 invocations, so the
-    // codegen-heavy queries' pass2 reads the JIT ramp (~2.3 s for
-    // ann_ivf) instead of the plan cost (~0.57 s steady). With n ≥ 2,
-    // pass2 is invocation ≥ 4 of each generated class and tracks the
-    // plan. OPT-IN ONLY: flipping the default re-baselines the trend
+    // KernelProbe): the codegen-heavy queries' pass2 read ~2.3 s for
+    // ann_ivf against ~0.57 s steady, which r16 put down to the C2
+    // ramp of freshly generated classes. Most of that gap was Spark's
+    // 100-entry codegen cache: the suite generates ~1,500 classes, so
+    // pass2 recompiled nearly every class with Janino and re-ran it
+    // interpreted. EngineConf.tuned now sizes the cache to the working
+    // set, so pass2 reuses pass1's classes ("compiles2" in the
+    // artifact counts the rest) and the warmup passes only buy C2
+    // time. OPT-IN ONLY: flipping the default re-baselines the trend
     // row, which is a round-boundary decision (PLANS.md r17 item 1);
     // the artifact records the setting as "warmup":n so no run can be
     // misread against the wrong methodology.
@@ -131,7 +134,16 @@ object Bench {
     // brackets the timed region, not the (optional) warmup.
     val loadStart = loadavg()
     val probeStart = microProbe(spark)
-    val (rep1, probes1) = runPass()
+    // Janino compilations of a timed pass: classes it generated that
+    // the codegen cache did not hold. A warm pass should need ~none;
+    // a plan that inlines a per-run literal, or a suite that outgrows
+    // the cache (EngineConf.CodegenCacheEntries), shows up as a count.
+    def counted[T](pass: => T): (T, Long) = {
+      val c0 = EngineConf.codegenCompiles
+      val r = pass
+      (r, EngineConf.codegenCompiles - c0)
+    }
+    val ((rep1, probes1), compiles1) = counted(runPass())
     val top10 = rep1.sortBy(-_._2).take(10).map(_._1).sorted
     val rep2 = top10.map(n => n -> timed(n))
     Cache.clear(spark)
@@ -143,7 +155,7 @@ object Bench {
     // (8 false "regressions" flagged in r12 on rep1 data alone).
     // pass1−pass2 gap ≈ load + warmup; a real plan regression moves
     // BOTH passes.
-    val (pass2, probes2) = runPass()
+    val ((pass2, probes2), compiles2) = counted(runPass())
     Cache.clear(spark)
     // Totals count only SUCCESSFUL timings: a failed query's negative
     // marker must not subtract from the headline (a round with
@@ -195,6 +207,8 @@ object Bench {
        else excluded.toSeq.sorted
          .map("\"" + _ + "\"").mkString("\"excluded\":[", ",", "],")) +
       s""""warmup":$warmupPasses,""" +
+      // Ints, like "round": check.py's float-only map regex skips them.
+      s""""compiles1":$compiles1,"compiles2":$compiles2,""" +
       s""""errors":$errJson,"error_count":${errors.size},""" +
       f""""rep2_total":$rep2Total%.3f,"value":$total%.3f}"""
     val line = s"""{"metric":"total","unit":"sec","sf":"$sfDir",""" +

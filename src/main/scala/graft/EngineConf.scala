@@ -68,6 +68,39 @@ object EngineConf {
       // (32 cores × ~8 waves); other widths are a code change here.
       .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
         "256")
+      // Generated-class cache sized to the whole engine's working set.
+      // Spark keeps 100 compiled classes by default and evicts in LRU
+      // order; the 8 lanes_corpus queries need 154 and the 157-query
+      // suite ~1,500, so with the default every warm pass recompiled
+      // the evicted classes with Janino and ran them interpreted again
+      // until the JIT caught up (a warm lanes_corpus pass at sf0.01:
+      // 142 of its 154 classes). A cached class holds ~31 KB of live heap, so 2048
+      // entries cap the cost near 64 MB. The conf is static: the
+      // codegen cache is sized once, from the first session in the
+      // JVM, so it must come from this factory, not a `conf.set`.
+      .config("spark.sql.codegen.cache.maxEntries",
+        CodegenCacheEntries.toLong)
+      // The codegen cache is keyed by the compiling thread's class
+      // loader too. With per-session artifact isolation (Spark's
+      // default) each session's tasks run under their own executor
+      // class loader, and every `persist()` plans in a fresh clone of
+      // the session (CacheManager turns one AQE conf off in it), so
+      // each [[graft.Cache]] build got a new loader and recompiled
+      // its executor-side classes every pass (geo.od: 36 per pass).
+      // The engine adds no per-session jars or files, so one shared
+      // loader costs nothing. CodegenReuseSpec pins both settings:
+      // a warm lanes_corpus pass compiles no class.
+      .config("spark.sql.artifact.isolation.enabled", "false")
+
+  /** Generated classes Spark's codegen cache keeps (see [[tuned]]). */
+  val CodegenCacheEntries: Int = 2048
+
+  /** Janino compilations in this JVM so far: the count of Spark's
+    * codegen compile-time histogram. A delta over a region is the
+    * number of classes it generated that the cache did not hold. */
+  def codegenCompiles: Long =
+    org.apache.spark.metrics.source.CodegenMetrics
+      .METRIC_COMPILATION_TIME.getCount
 
   /** The one session factory for every entry point: [[tuned]] on a
     * `local[cpus]` master with as many shuffle partitions as cores,

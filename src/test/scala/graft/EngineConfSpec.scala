@@ -81,6 +81,19 @@ class EngineConfSpec extends AnyFunSuite {
         SparkSession.setActiveSession)
   }
 
+  test("the shared session sizes the codegen cache to the working set") {
+    // Unlike the runtime confs in the factory test above, this conf
+    // is static: the first session in a JVM sets it and a later
+    // getOrCreate cannot overwrite it, so it is read off the shared
+    // spec session, which the factory built.
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") ==
+      EngineConf.CodegenCacheEntries.toString)
+    // Read when a session is created, so it too is checked here: one
+    // executor class loader for every session and session clone.
+    assert(spark.conf.get("spark.sql.artifact.isolation.enabled") ==
+      "false")
+  }
+
   test("SPARK_GRAFT_CPUS: whole numbers >= 1, else every processor") {
     assert(EngineConf.parseCpus(Some("8")) == 8)
     assert(EngineConf.parseCpus(None) ==
