@@ -186,12 +186,19 @@ object Aggregates {
         .orderBy("l_returnflag")),
 
     // argmin/argmax: the order that maximizes/minimizes a measure.
+    // Price ties break by order key (the largest key among the maxima,
+    // the smallest among the minima), so the answer is total even when
+    // prices repeat.
     "agg_minmax_by" -> ((s, d) =>
       Tables.orders(s, d)
         .groupBy((col("o_custkey") % 10).as("cust_bucket"))
         .agg(
-          max_by(col("o_orderkey"), col("o_totalprice")).as("biggest_order"),
-          min_by(col("o_orderkey"), col("o_totalprice")).as("smallest_order"),
+          max_by(col("o_orderkey"),
+            struct(col("o_totalprice"), col("o_orderkey")))
+            .as("biggest_order"),
+          min_by(col("o_orderkey"),
+            struct(col("o_totalprice"), col("o_orderkey")))
+            .as("smallest_order"),
           round(max("o_totalprice"), 2).as("max_price"))
         .orderBy("cust_bucket")),
 
@@ -420,8 +427,10 @@ object Aggregates {
 
     "agg_minmax_by" ->
       """SELECT o_custkey % 10 AS cust_bucket,
-        | max_by(o_orderkey, o_totalprice) AS biggest_order,
-        | min_by(o_orderkey, o_totalprice) AS smallest_order,
+        | first(o_orderkey ORDER BY o_totalprice DESC, o_orderkey DESC)
+        |   AS biggest_order,
+        | first(o_orderkey ORDER BY o_totalprice, o_orderkey)
+        |   AS smallest_order,
         | round(max(o_totalprice), 2) AS max_price
         |FROM orders GROUP BY 1 ORDER BY cust_bucket""".stripMargin,
 

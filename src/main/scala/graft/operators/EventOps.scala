@@ -38,22 +38,16 @@ object EventOps {
 
     // 30-min-gap sessionization per user — the ShippingLanes transit
     // op: lag -> gap flag -> running-sum session id -> per-session agg.
-    "stream_session" -> ((s, d) => {
-      val wOrd = Window.partitionBy("user_id").orderBy("ts", "event_id")
-      val wRun = wOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      Tables.events(s, d)
-        .withColumn("prev_ts", lag(col("ts"), 1).over(wOrd))
-        .withColumn("new_sess",
-          when(col("prev_ts").isNull
-            || unix_micros(col("ts")) - unix_micros(col("prev_ts"))
-               > 1800L * 1000000L, 1).otherwise(0))
-        .withColumn("session_id", sum("new_sess").over(wRun))
-        .groupBy("user_id", "session_id")
+    // The session is the voyage of [[Voyages.segment]]; its running sum
+    // is a RANGE frame, equal to a ROWS frame because (ts, event_id) is
+    // a total order.
+    "stream_session" -> ((s, d) =>
+      Voyages.segment(Tables.events(s, d))
+        .groupBy(col("user_id"), col("voyage").as("session_id"))
         .agg(count(lit(1)).as("n_events"),
           min("ts").as("t_start"), max("ts").as("t_end"),
           round(sum("value"), 2).as("total_value"))
-        .orderBy("user_id", "session_id")
-    }),
+        .orderBy("user_id", "session_id")),
 
     // Watermark semantics in batch: drop events older than max(ts)-7d.
     // The max is a 1-row broadcast, not a driver-side collect.
@@ -172,16 +166,13 @@ object EventOps {
     // — the feed-health profile that justifies the 30-min session
     // cutoff empirically. One lag window + one partial+final agg on
     // the (bounded) bucket key; INTEGER end to end.
-    "events_gap_hist" -> ((s, d) => {
-      val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    "events_gap_hist" -> ((s, d) =>
       Tables.events(s, d)
-        .withColumn("gap_us",
-          unix_micros(col("ts")) - unix_micros(lag("ts", 1).over(w)))
+        .withColumn("gap_us", Voyages.gapUs)
         .filter(col("gap_us").isNotNull)
         .groupBy(expr("gap_us div 60000000").as("gap_min"))
         .agg(count(lit(1)).as("n"))
-        .orderBy("gap_min")
-    }),
+        .orderBy("gap_min")),
 
     // Behavior sequence mining: the event-type TRANSITION MATRIX —
     // per (from, to) pair, how many times type B directly followed
@@ -391,29 +382,16 @@ object EventOps {
     })
   )
 
-  /** The session-collapse SQL, shared by the stream_session oracle
-    * and the events_concurrency boundary CTE. */
-  private val sessionOracle: String =
-    """SELECT user_id, session_id, count(*) AS n_events,
-      | min(ts) AS t_start, max(ts) AS t_end,
-      | round(sum(value), 2) AS total_value
-      |FROM (
-      |  SELECT *, CAST(sum(new_sess) OVER (PARTITION BY user_id
-      |    ORDER BY ts, event_id
-      |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-      |    AS session_id
-      |  FROM (
-      |    SELECT *, CASE WHEN prev_ts IS NULL
-      |        OR epoch_us(ts) - epoch_us(prev_ts) > 1800000000
-      |      THEN 1 ELSE 0 END AS new_sess
-      |    FROM (
-      |      SELECT *, lag(ts) OVER (PARTITION BY user_id
-      |        ORDER BY ts, event_id) AS prev_ts
-      |      FROM events) a
-      |  ) b
-      |) c
-      |GROUP BY user_id, session_id
-      |ORDER BY user_id, session_id""".stripMargin
+  /** The session-collapse CTEs (seg → voy → sess), shared by the
+    * stream_session oracle and the events_concurrency boundary CTE. */
+  private val sessionCtes: String =
+    s"WITH ${Voyages.segVoySql("events")}, " +
+      """sess AS (
+        |  SELECT user_id, CAST(voyage AS BIGINT) AS session_id,
+        |    count(*) AS n_events, min(ts) AS t_start, max(ts) AS t_end,
+        |    round(sum(value), 2) AS total_value
+        |  FROM voy GROUP BY user_id, voyage
+        |)""".stripMargin
 
   val oracles: Map[String, String] = Map(
     "stream_tumbling" ->
@@ -432,14 +410,15 @@ object EventOps {
         |  WHERE epoch_us(ts) >= s AND epoch_us(ts) < s + 3600000000
         |) t GROUP BY 1, 2 ORDER BY w_start, event_type""".stripMargin,
 
-    "stream_session" -> sessionOracle,
+    "stream_session" -> (sessionCtes +
+      "\nSELECT * FROM sess ORDER BY user_id, session_id"),
 
     // Reuses the session SQL as a CTE; the global running sum is the
     // plain single window here (DuckDB's planner may serialize it —
     // that's the oracle's business; the ENGINE's two-phase form is
     // the graded plan).
     "events_concurrency" ->
-      (s"WITH sess AS (\n$sessionOracle\n), b AS (\n" +
+      (sessionCtes + ", b AS (\n" +
         """  SELECT t_start AS ts, 1 AS delta, user_id FROM sess
           |  UNION ALL SELECT t_end, -1, user_id FROM sess
           |)

@@ -26,7 +26,9 @@ object Filters {
           when(col("l_quantity") >= 40, "bulk")
             .when(col("l_quantity") >= 15, "mid")
             .otherwise("small").as("qty_band"))
-        .orderBy("l_orderkey", "l_linenumber")),
+        // every projected column: (l_orderkey, l_linenumber) repeats
+        // in scaled copies of lineitem
+        .orderBy("l_orderkey", "l_linenumber", "charge", "qty_band")),
 
     // Compound predicates: AND/OR/NOT, BETWEEN, IN, LIKE.
     "filter_complex" -> ((s, d) =>
@@ -85,7 +87,8 @@ object Filters {
         | CASE WHEN l_quantity >= 40 THEN 'bulk'
         |      WHEN l_quantity >= 15 THEN 'mid'
         |      ELSE 'small' END AS qty_band
-        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin,
+        |FROM lineitem
+        |ORDER BY l_orderkey, l_linenumber, charge, qty_band""".stripMargin,
 
     "filter_complex" ->
       """SELECT o_orderkey, o_orderstatus, o_orderpriority, o_totalprice

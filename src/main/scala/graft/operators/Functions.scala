@@ -64,7 +64,10 @@ object Functions {
           round(sqrt(col("l_extendedprice")), 4).as("sqr"),
           (col("l_orderkey") % 7).as("md"),
           signum(col("l_discount") - 0.05).cast("int").as("sg"))
-        .orderBy("l_orderkey", "l_linenumber")),
+        // every projected column: (l_orderkey, l_linenumber) repeats
+        // in scaled copies of lineitem
+        .orderBy("l_orderkey", "l_linenumber", "r1", "ab", "ce", "fl",
+          "sq", "lg", "l10", "sqr", "md", "sg")),
 
     // Array family with lambda functions over the embedding vectors.
     // Structural results + per-element rounds (no cross-element float
@@ -197,7 +200,8 @@ object Functions {
         | l_orderkey % 7 AS md,
         | CAST(sign(l_discount - 0.05) AS INTEGER) AS sg
         |FROM lineitem WHERE l_orderkey <= 400
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
+        |ORDER BY l_orderkey, l_linenumber, r1, ab, ce, fl, sq, lg, l10,
+        |  sqr, md, sg""".stripMargin,
 
     "array_funcs" ->
       """SELECT vec_id,

@@ -11,7 +11,8 @@ import org.apache.spark.sql.functions._
   *
   * The testdata carries no lat/lon, so positions are DERIVED from
   * events deterministically with pure integer arithmetic
-  * (`event_id · prime mod range`, then one exact decimal shift) —
+  * (`event_id · prime mod range`, then one exact decimal shift;
+  * [[Voyages]] defines it, with the zone and the voyage split) —
   * bit-identical in Spark and DuckDB, so the only cross-engine float
   * hazard left is libm transcendentals inside haversine, which differ
   * by ≤1 ulp and vanish under the 3-dp round (SURVEY §2.0 rule 2).
@@ -25,16 +26,6 @@ import org.apache.spark.sql.functions._
   */
 object GeoOps {
 
-  /** Deterministic pseudo-positions: two coprime multipliers walk the
-    * event_id space so consecutive points hop pseudo-randomly across
-    * the globe. lat ∈ [-90, 90), lon ∈ [-180, 180), centi-degree
-    * resolution. */
-  private def withPos(df: DataFrame): DataFrame = df
-    .withColumn("lat",
-      (col("event_id") * 7919 % 18000) / 100.0 - 90.0)
-    .withColumn("lon",
-      (col("event_id") * 104729 % 36000) / 100.0 - 180.0)
-
   val queries: Map[String, Q] = Map(
     // Per-vessel voyage length: haversine sum over consecutive
     // position reports, ordered by (ts, event_id) — a total order
@@ -42,40 +33,33 @@ object GeoOps {
     // future tie portably since DuckDB sorts ns-precision ts while
     // Spark sorts µs).
     "geo_track_length" -> ((s, d) =>
-      Geo.trackLength(withPos(Tables.events(s, d)), "user_id",
+      Geo.trackLength(Voyages.withPos(Tables.events(s, d)), "user_id",
           orderCols = Seq("ts", "event_id"))
         .orderBy("user_id")),
 
     // Zone transit counts: 30° grid cells, events + distinct vessels
     // per cell — integer outputs, no float hazard at all.
     "geo_zone_counts" -> ((s, d) =>
-      withPos(Tables.events(s, d))
-        .withColumn("zone", Geo.gridCell(col("lat"), col("lon"), 30.0))
+      Voyages.withPos(Tables.events(s, d))
+        .withColumn("zone", Voyages.zone(30.0))
         .groupBy("zone")
         .agg(count(lit(1)).as("n_events"),
           countDistinct("user_id").as("n_users"))
         .orderBy("zone")),
 
     // Voyage segmentation — THE core ShippingLanes transit op: split
-    // each vessel's position stream at >30-min report gaps (the same
-    // sessionization as stream_session), then measure each voyage
+    // each vessel's position stream at >30-min report gaps
+    // ([[Voyages.segment]], shared with stream_session and the OD
+    // build), then measure each voyage
     // (points + haversine length). Gap arithmetic is integer µs on
     // both engines (DuckDB reads ns, but the fixture is µs-aligned).
     // Two windows + one agg, ALL partitioned by user_id — the voyage
     // window is a sub-partition, so everything rides ONE exchange.
     "geo_voyages" -> ((s, d) => {
       import org.apache.spark.sql.expressions.Window
-      val byUser = Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
       val byVoyage = Window.partitionBy("user_id", "voyage")
         .orderBy("ts", "event_id")
-      withPos(Tables.events(s, d))
-        .withColumn("gap_us",
-          unix_micros(col("ts")) - unix_micros(lag("ts", 1).over(byUser)))
-        .withColumn("is_new",
-          when(col("gap_us").isNull
-            || col("gap_us") > 1800L * 1000000L, 1L).otherwise(0L))
-        .withColumn("voyage", sum("is_new").over(byUser))
+      Voyages.segment(Voyages.withPos(Tables.events(s, d)))
         .withColumn("prev_lat", lag(col("lat"), 1).over(byVoyage))
         .withColumn("prev_lon", lag(col("lon"), 1).over(byVoyage))
         .withColumn("hop_km",
@@ -106,13 +90,11 @@ object GeoOps {
     // the per-vessel total all partition by user_id.
     "geo_headings" -> ((s, d) => {
       import org.apache.spark.sql.expressions.Window
-      val byUser = Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
       val modal = Window.partitionBy("user_id")
         .orderBy(col("n_hops").desc, col("sector"))
-      withPos(Tables.events(s, d))
-        .withColumn("prev_lat", lag(col("lat"), 1).over(byUser))
-        .withColumn("prev_lon", lag(col("lon"), 1).over(byUser))
+      Voyages.withPos(Tables.events(s, d))
+        .withColumn("prev_lat", lag(col("lat"), 1).over(Voyages.byVessel))
+        .withColumn("prev_lon", lag(col("lon"), 1).over(Voyages.byVessel))
         .filter(col("prev_lat").isNotNull)
         .withColumn("sector",
           (floor(round(Geo.bearingDeg(col("prev_lat"), col("prev_lon"),
@@ -139,14 +121,10 @@ object GeoOps {
     // One exchange: the hop window and the per-vessel agg both
     // partition by user_id.
     "geo_speed_flags" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      val byUser = Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-      withPos(Tables.events(s, d))
-        .withColumn("gap_us",
-          unix_micros(col("ts")) - unix_micros(lag("ts", 1).over(byUser)))
-        .withColumn("prev_lat", lag(col("lat"), 1).over(byUser))
-        .withColumn("prev_lon", lag(col("lon"), 1).over(byUser))
+      Voyages.withPos(Tables.events(s, d))
+        .withColumn("gap_us", Voyages.gapUs)
+        .withColumn("prev_lat", lag(col("lat"), 1).over(Voyages.byVessel))
+        .withColumn("prev_lon", lag(col("lon"), 1).over(Voyages.byVessel))
         .filter(col("prev_lat").isNotNull && col("gap_us") > 0)
         .withColumn("speed_kmh",
           Geo.haversineKm(col("prev_lat"), col("prev_lon"),
@@ -185,9 +163,7 @@ object GeoOps {
     // broadcast edge table grid-blocked by bounding box, same
     // semantics.
     "geo_zone_polygon" -> ((s, d) => {
-      val pts = Tables.events(s, d)
-        .withColumn("py", col("event_id") * 7919 % 18000 - 9000)
-        .withColumn("px", col("event_id") * 104729 % 36000 - 18000)
+      val pts = Voyages.withPxPy(Tables.events(s, d))
       val zoneFlags = zonePolygons.map { case (z, verts) =>
         struct(lit(z).as("zone"), insideExpr(verts).as("inside"))
       }
@@ -240,21 +216,17 @@ object GeoOps {
     // by user_id and the (user, zone) agg's clustering is satisfied
     // by the same hash partitioning (user_id ⊆ group keys), exactly
     // like geo_voyages' per-voyage agg.
-    "geo_zone_dwell" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      val byUser = Window.partitionBy("user_id").orderBy("ts", "event_id")
-      withPos(Tables.events(s, d))
-        .withColumn("zone", Geo.gridCell(col("lat"), col("lon"), 30.0))
-        .withColumn("gap_us",
-          unix_micros(col("ts")) - unix_micros(lag("ts", 1).over(byUser)))
-        .withColumn("prev_zone", lag("zone", 1).over(byUser))
+    "geo_zone_dwell" -> ((s, d) =>
+      Voyages.withPos(Tables.events(s, d))
+        .withColumn("zone", Voyages.zone(30.0))
+        .withColumn("gap_us", Voyages.gapUs)
+        .withColumn("prev_zone", lag("zone", 1).over(Voyages.byVessel))
         .filter(col("prev_zone").isNotNull
-          && col("gap_us") <= 1800L * 1000000L)
+          && col("gap_us") <= Voyages.GapMicros)
         .groupBy(col("user_id"), col("prev_zone").as("zone"))
         .agg(expr("sum(gap_us) div 1000000").as("dwell_s"),
           count(lit(1)).as("n_hops"))
-        .orderBy("user_id", "zone")
-    }),
+        .orderBy("user_id", "zone")),
 
     // Origin→destination voyage flows — the literal "shipping lanes"
     // aggregate (see [[odMatrix]] for the pipeline and its scale
@@ -336,10 +308,7 @@ object GeoOps {
     // — candidate rows are BBOX HITS, not |zones| × |reports|, and
     // the window partitions by (zone, user_id).
     "geo_zone_entries" -> ((s, d) =>
-      zoneEntriesFrom(Tables.events(s, d)
-        .withColumn("py", col("event_id") * 7919 % 18000 - 9000)
-        .withColumn("px", col("event_id") * 104729 % 36000 - 18000),
-        zonePolygons))
+      zoneEntriesFrom(Voyages.withPxPy(Tables.events(s, d)), zonePolygons))
   )
 
   /** The OD voyage-flow matrix (o_zone, d_zone, n_voyages,
@@ -388,40 +357,32 @@ object GeoOps {
   /** The raw (uncached) OD pipeline — private[graft] so PlanSpec can
     * pin its exchange discipline directly; the declared queries go
     * through the persisted [[odMatrix]]. */
-  private[graft] def odMatrixBuild(s: SparkSession, d: String): DataFrame = {
-      import org.apache.spark.sql.expressions.Window
-      val byUser = Window.partitionBy("user_id").orderBy("ts", "event_id")
-      withPos(Tables.events(s, d))
-        .withColumn("zone", Geo.gridCell(col("lat"), col("lon"), odCellDeg))
-        .withColumn("gap_us",
-          unix_micros(col("ts")) - unix_micros(lag("ts", 1).over(byUser)))
-        .withColumn("is_new",
-          when(col("gap_us").isNull
-            || col("gap_us") > 1800L * 1000000L, 1L).otherwise(0L))
-        .withColumn("voyage", sum("is_new").over(byUser))
-        // Voyage-endpoint flags ride the SAME byUser window (same
-        // partition + order ⇒ no new exchange, no new sort): the
-        // cumsum construction gives every voyage exactly one row with
-        // is_new = 1 (its first) and exactly one row whose successor
-        // starts a new voyage or doesn't exist (its last, ends = 1 via
-        // lead's default). Filtering to those ≤ 2 rows per voyage
-        // BEFORE the endpoint aggregate replaces the old unbounded
-        // first/last window — whose plan cost was a SECOND full sort
-        // of every sessionized event row plus a (user, voyage, o, d)
-        // dedup aggregate — with an aggregate over O(voyages) rows
-        // (guide §2.4: don't re-sort what one pass already ordered).
-        // Equivalence: event_id is unique, so first/last over the
-        // (ts, event_id) order selected exactly these rows.
-        .withColumn("ends", lead(col("is_new"), 1, 1L).over(byUser))
-        .filter(col("is_new") === 1 || col("ends") === 1)
-        .groupBy("user_id", "voyage")
-        .agg(
-          max(when(col("is_new") === 1, col("zone"))).as("o_zone"),
-          max(when(col("ends") === 1, col("zone"))).as("d_zone"))
-        .groupBy("o_zone", "d_zone")
-        .agg(count(lit(1)).as("n_voyages"),
-          countDistinct("user_id").as("n_vessels"))
-    }
+  private[graft] def odMatrixBuild(s: SparkSession, d: String): DataFrame =
+    Voyages.segment(Voyages.withPos(Tables.events(s, d))
+        .withColumn("zone", Voyages.zone(odCellDeg)))
+      // Voyage-endpoint flags ride the SAME byVessel window (same
+      // partition + order ⇒ no new exchange, no new sort): the
+      // cumsum construction gives every voyage exactly one row with
+      // is_new = 1 (its first) and exactly one row whose successor
+      // starts a new voyage or doesn't exist (its last, ends = 1 via
+      // lead's default). Filtering to those ≤ 2 rows per voyage
+      // BEFORE the endpoint aggregate replaces the old unbounded
+      // first/last window — whose plan cost was a SECOND full sort
+      // of every sessionized event row plus a (user, voyage, o, d)
+      // dedup aggregate — with an aggregate over O(voyages) rows
+      // (guide §2.4: don't re-sort what one pass already ordered).
+      // Equivalence: event_id is unique, so first/last over the
+      // (ts, event_id) order selected exactly these rows.
+      .withColumn("ends",
+        lead(col("is_new"), 1, 1L).over(Voyages.byVessel))
+      .filter(col("is_new") === 1 || col("ends") === 1)
+      .groupBy("user_id", "voyage")
+      .agg(
+        max(when(col("is_new") === 1, col("zone"))).as("o_zone"),
+        max(when(col("ends") === 1, col("zone"))).as("d_zone"))
+      .groupBy("o_zone", "d_zone")
+      .agg(count(lit(1)).as("n_voyages"),
+        countDistinct("user_id").as("n_vessels"))
 
   /** Integer-exact PageRank over a weighted edge list (o_zone,
     * d_zone, w): ranks in PARTS PER MILLION, every step integer —
@@ -553,8 +514,6 @@ object GeoOps {
   private[operators] def zoneCandidates(
       pts: DataFrame,
       zones: Seq[(String, Seq[(Long, Long)])]): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val wUser = Window.partitionBy("user_id").orderBy("ts", "event_id")
     val elems = zones.map { case (z, verts) =>
       val minx = verts.map(_._1).min
       val maxx = verts.map(_._1).max
@@ -565,7 +524,7 @@ object GeoOps {
         struct(lit(z).as("zone"), insideExpr(verts).as("inside")))
     }
     pts
-      .withColumn("ord", row_number().over(wUser))
+      .withColumn("ord", row_number().over(Voyages.byVessel))
       .select(col("user_id"), col("ts"), col("event_id"), col("ord"),
         explode(filter(array(elems: _*), _.isNotNull)).as("zf"))
       .select(col("user_id"), col("ts"), col("event_id"), col("ord"),
@@ -689,38 +648,25 @@ object GeoOps {
   }
 
   /** The voyage-collapse CTE chain (pos → seg → voy → ends →
-    * collapsed) shared by the geo_od_matrix and geo_zone_rank
-    * oracles — one definition site for the sessionization SQL. */
+    * collapsed) shared by the OD-family oracles (geo_od_matrix,
+    * geo_lanes_top, geo_zone_rank, geo_zone_components); the
+    * segmentation itself is [[Voyages.segVoySql]]. */
   private def odCtesSql: String =
-    """WITH pos AS (
-      |  SELECT user_id, ts, event_id,
-      |    CAST(floor(((event_id * 7919 % 18000) / 100.0 - 90.0)
-      |      / 30.0) AS BIGINT) || ':' ||
-      |    CAST(floor(((event_id * 104729 % 36000) / 100.0 - 180.0)
-      |      / 30.0) AS BIGINT) AS zone
-      |  FROM events
-      |), seg AS (
-      |  SELECT *, CASE WHEN prev_us IS NULL
-      |      OR epoch_us(ts) - prev_us > 1800000000 THEN 1 ELSE 0
-      |    END AS is_new
-      |  FROM (SELECT *, lag(epoch_us(ts)) OVER win AS prev_us
-      |        FROM pos WINDOW win AS
-      |          (PARTITION BY user_id ORDER BY ts, event_id)) t
-      |), voy AS (
-      |  SELECT *, sum(is_new) OVER
-      |    (PARTITION BY user_id ORDER BY ts, event_id) AS voyage
-      |  FROM seg
-      |), ends AS (
-      |  SELECT user_id, voyage,
-      |    first_value(zone) OVER win AS o_zone,
-      |    last_value(zone) OVER win AS d_zone
-      |  FROM voy WINDOW win AS
-      |    (PARTITION BY user_id, voyage ORDER BY ts, event_id
-      |     ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-      |), collapsed AS (
-      |  SELECT user_id, voyage, o_zone, d_zone
-      |  FROM ends GROUP BY 1, 2, 3, 4
-      |)""".stripMargin
+    s"""WITH pos AS (
+       |  SELECT user_id, ts, event_id,
+       |    ${Voyages.zoneSql}
+       |  FROM events
+       |), ${Voyages.segVoySql("pos")}, ends AS (
+       |  SELECT user_id, voyage,
+       |    first_value(zone) OVER win AS o_zone,
+       |    last_value(zone) OVER win AS d_zone
+       |  FROM voy WINDOW win AS
+       |    (PARTITION BY user_id, voyage ORDER BY ts, event_id
+       |     ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
+       |), collapsed AS (
+       |  SELECT user_id, voyage, o_zone, d_zone
+       |  FROM ends GROUP BY 1, 2, 3, 4
+       |)""".stripMargin
 
   /** [[zoneRank]] replayed in SQL: the 10 power iterations UNROLLED
     * as chained CTEs (pr0 … pr10) — fixed iteration count, so no
@@ -773,8 +719,7 @@ object GeoOps {
   private def zonePolygonOracle: String =
     s"""WITH pts AS (
        |  SELECT event_id, user_id,
-       |    event_id * 7919 % 18000 - 9000 AS py,
-       |    event_id * 104729 % 36000 - 18000 AS px
+       |    ${Voyages.pxpySql}
        |  FROM events
        |), edges(zone, x1, y1, x2, y2) AS (VALUES
        |$edgeValuesSql
@@ -798,8 +743,7 @@ object GeoOps {
   private def zoneEntriesOracle: String =
     s"""WITH pts AS (
        |  SELECT event_id, user_id, ts,
-       |    event_id * 7919 % 18000 - 9000 AS py,
-       |    event_id * 104729 % 36000 - 18000 AS px
+       |    ${Voyages.pxpySql}
        |  FROM events
        |), edges(zone, x1, y1, x2, y2) AS (VALUES
        |$edgeValuesSql
@@ -938,16 +882,15 @@ object GeoOps {
     * the events-scan + distinct pipeline). */
   private def cells30(s: SparkSession, d: String): DataFrame =
     graft.Cache.cached(s, d, "geo.cells30")(
-      presenceCells(withPos(Tables.events(s, d)), cellDeg = 30.0))
+      presenceCells(Voyages.withPos(Tables.events(s, d)), cellDeg = 30.0))
 
   val oracles: Map[String, String] = Map(
     // Mirrors Geo.haversineKm / Geo.trackLength arithmetic exactly:
     // radians(Δ)/2 inside sin, pow(·, 2), 2·R·asin(sqrt(a)).
     "geo_track_length" ->
-      """WITH pos AS (
+      s"""WITH pos AS (
         |  SELECT user_id, ts, event_id,
-        |    (event_id * 7919 % 18000) / 100.0 - 90.0 AS lat,
-        |    (event_id * 104729 % 36000) / 100.0 - 180.0 AS lon
+        |    ${Voyages.posSql}
         |  FROM events
         |), hops AS (
         |  SELECT user_id, lat, lon,
@@ -966,11 +909,8 @@ object GeoOps {
         |FROM hops GROUP BY user_id ORDER BY user_id""".stripMargin,
 
     "geo_zone_counts" ->
-      """SELECT
-        |  CAST(floor(((event_id * 7919 % 18000) / 100.0 - 90.0)
-        |    / 30.0) AS BIGINT) || ':' ||
-        |  CAST(floor(((event_id * 104729 % 36000) / 100.0 - 180.0)
-        |    / 30.0) AS BIGINT) AS zone,
+      s"""SELECT
+        |  ${Voyages.zoneSql},
         |  count(*) AS n_events,
         |  count(DISTINCT user_id) AS n_users
         |FROM events GROUP BY 1 ORDER BY zone""".stripMargin,
@@ -1014,23 +954,11 @@ object GeoOps {
           |ORDER BY zone""".stripMargin),
 
     "geo_voyages" ->
-      """WITH pos AS (
+      s"""WITH pos AS (
         |  SELECT user_id, ts, event_id,
-        |    (event_id * 7919 % 18000) / 100.0 - 90.0 AS lat,
-        |    (event_id * 104729 % 36000) / 100.0 - 180.0 AS lon
+        |    ${Voyages.posSql}
         |  FROM events
-        |), seg AS (
-        |  SELECT *, CASE WHEN prev_us IS NULL
-        |      OR epoch_us(ts) - prev_us > 1800000000 THEN 1 ELSE 0
-        |    END AS is_new
-        |  FROM (SELECT *, lag(epoch_us(ts)) OVER win AS prev_us
-        |        FROM pos WINDOW win AS
-        |          (PARTITION BY user_id ORDER BY ts, event_id)) t
-        |), voy AS (
-        |  SELECT *, sum(is_new) OVER
-        |    (PARTITION BY user_id ORDER BY ts, event_id) AS voyage
-        |  FROM seg
-        |), hops AS (
+        |), ${Voyages.segVoySql("pos")}, hops AS (
         |  SELECT user_id, voyage, lat, lon,
         |    lag(lat) OVER win AS prev_lat,
         |    lag(lon) OVER win AS prev_lon
@@ -1053,10 +981,9 @@ object GeoOps {
     // bearing = pmod(degrees(atan2(y, x)), 360) with Spark's pmod
     // spelled as fmod(fmod(v, 360) + 360, 360).
     "geo_headings" ->
-      """WITH pos AS (
+      s"""WITH pos AS (
         |  SELECT user_id, ts, event_id,
-        |    (event_id * 7919 % 18000) / 100.0 - 90.0 AS lat,
-        |    (event_id * 104729 % 36000) / 100.0 - 180.0 AS lon
+        |    ${Voyages.posSql}
         |  FROM events
         |), hops AS (
         |  SELECT user_id, lat, lon,
@@ -1090,17 +1017,16 @@ object GeoOps {
     // Mirrors the haversine arithmetic of the other geo oracles; the
     // gap is integer µs on both engines.
     "geo_speed_flags" ->
-      """WITH pos AS (
+      s"""WITH pos AS (
         |  SELECT user_id, ts, event_id,
-        |    (event_id * 7919 % 18000) / 100.0 - 90.0 AS lat,
-        |    (event_id * 104729 % 36000) / 100.0 - 180.0 AS lon
+        |    ${Voyages.posSql}
         |  FROM events
-        |), hops AS (
+        |), ${Voyages.segSql("pos")}, hops AS (
         |  SELECT user_id, lat, lon,
         |    lag(lat) OVER win AS plat,
         |    lag(lon) OVER win AS plon,
-        |    epoch_us(ts) - lag(epoch_us(ts)) OVER win AS gap_us
-        |  FROM pos
+        |    gap_us
+        |  FROM seg
         |  WINDOW win AS (PARTITION BY user_id ORDER BY ts, event_id)
         |), spd AS (
         |  SELECT user_id,
@@ -1125,14 +1051,8 @@ object GeoOps {
     // Same islanding formulation; DuckDB's sum is HUGEINT — cast back
     // to BIGINT to match Spark's long.
     "geo_meeting_streaks" ->
-      """WITH pos AS (
-        |  SELECT DISTINCT user_id,
-        |    CAST(floor(((event_id * 7919 % 18000) / 100.0 - 90.0)
-        |      / 30.0) AS BIGINT) || ':' ||
-        |    CAST(floor(((event_id * 104729 % 36000) / 100.0 - 180.0)
-        |      / 30.0) AS BIGINT) AS zone,
-        |    date_trunc('hour', ts) AS hr
-        |  FROM events
+      s"""WITH pos AS (
+        |  ${Voyages.presenceSql}
         |), meets AS (
         |  SELECT DISTINCT a.user_id AS u1, b.user_id AS u2,
         |    epoch_us(a.hr) // 3600000000 AS hidx
@@ -1153,39 +1073,31 @@ object GeoOps {
 
     // Mirrors geo_zone_dwell: zone of the earlier report, integer µs
     // gaps, whole-second integer division (DuckDB's sum is HUGEINT —
-    // cast back to BIGINT to match Spark's long).
+    // cast back to BIGINT to match Spark's long). A hop within a
+    // voyage (is_new = 0) is exactly a hop with a predecessor and a
+    // gap of at most 30 minutes.
     "geo_zone_dwell" ->
-      """WITH zoned AS (
+      s"""WITH zoned AS (
         |  SELECT user_id, ts, event_id,
-        |    CAST(floor(((event_id * 7919 % 18000) / 100.0 - 90.0)
-        |      / 30.0) AS BIGINT) || ':' ||
-        |    CAST(floor(((event_id * 104729 % 36000) / 100.0 - 180.0)
-        |      / 30.0) AS BIGINT) AS zone
+        |    ${Voyages.zoneSql}
         |  FROM events
-        |), hops AS (
-        |  SELECT user_id,
-        |    lag(zone) OVER win AS zone,
-        |    epoch_us(ts) - lag(epoch_us(ts)) OVER win AS gap_us
-        |  FROM zoned
-        |  WINDOW win AS (PARTITION BY user_id ORDER BY ts, event_id)
+        |), ${Voyages.segSql("zoned")}, hops AS (
+        |  SELECT user_id, is_new, gap_us,
+        |    lag(zone) OVER (PARTITION BY user_id ORDER BY ts, event_id)
+        |      AS zone
+        |  FROM seg
         |)
         |SELECT user_id, zone,
         |  CAST(sum(gap_us) // 1000000 AS BIGINT) AS dwell_s,
         |  count(*) AS n_hops
-        |FROM hops WHERE zone IS NOT NULL AND gap_us <= 1800000000
+        |FROM hops WHERE is_new = 0
         |GROUP BY 1, 2 ORDER BY user_id, zone""".stripMargin,
 
     // Independent formulation: canonical (a<b<c) 3-way self-join —
     // no orientation, each triangle materialized exactly once.
     "geo_triangles" ->
-      """WITH pos AS (
-        |  SELECT DISTINCT user_id,
-        |    CAST(floor(((event_id * 7919 % 18000) / 100.0 - 90.0)
-        |      / 30.0) AS BIGINT) || ':' ||
-        |    CAST(floor(((event_id * 104729 % 36000) / 100.0 - 180.0)
-        |      / 30.0) AS BIGINT) AS zone,
-        |    date_trunc('hour', ts) AS hr
-        |  FROM events
+      s"""WITH pos AS (
+        |  ${Voyages.presenceSql}
         |), pairs AS (
         |  SELECT a.user_id AS u1, b.user_id AS u2
         |  FROM pos a JOIN pos b
@@ -1203,51 +1115,17 @@ object GeoOps {
         |  UNION ALL SELECT c FROM tri
         |) t GROUP BY 1 ORDER BY user_id""".stripMargin,
 
-    "geo_lanes_top" ->
-      """WITH pos AS (
-        |  SELECT user_id, ts, event_id,
-        |    CAST(floor(((event_id * 7919 % 18000) / 100.0 - 90.0)
-        |      / 30.0) AS BIGINT) || ':' ||
-        |    CAST(floor(((event_id * 104729 % 36000) / 100.0 - 180.0)
-        |      / 30.0) AS BIGINT) AS zone
-        |  FROM events
-        |), seg AS (
-        |  SELECT *, CASE WHEN prev_us IS NULL
-        |      OR epoch_us(ts) - prev_us > 1800000000 THEN 1 ELSE 0
-        |    END AS is_new
-        |  FROM (SELECT *, lag(epoch_us(ts)) OVER win AS prev_us
-        |        FROM pos WINDOW win AS
-        |          (PARTITION BY user_id ORDER BY ts, event_id)) t
-        |), voy AS (
-        |  SELECT *, sum(is_new) OVER
-        |    (PARTITION BY user_id ORDER BY ts, event_id) AS voyage
-        |  FROM seg
-        |), ends AS (
-        |  SELECT user_id, voyage,
-        |    first_value(zone) OVER win AS o_zone,
-        |    last_value(zone) OVER win AS d_zone
-        |  FROM voy WINDOW win AS
-        |    (PARTITION BY user_id, voyage ORDER BY ts, event_id
-        |     ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-        |), collapsed AS (
-        |  SELECT user_id, voyage, o_zone, d_zone
-        |  FROM ends GROUP BY 1, 2, 3, 4
-        |)
+    "geo_lanes_top" -> (odCtesSql +
+      """
         |SELECT o_zone, d_zone, count(*) AS n_voyages,
         |  count(DISTINCT user_id) AS n_vessels
         |FROM collapsed WHERE o_zone <> d_zone
         |GROUP BY 1, 2
-        |ORDER BY n_voyages DESC, o_zone, d_zone LIMIT 20""".stripMargin,
+        |ORDER BY n_voyages DESC, o_zone, d_zone LIMIT 20""".stripMargin),
 
     "geo_co_presence" ->
-      """WITH pos AS (
-        |  SELECT DISTINCT user_id,
-        |    CAST(floor(((event_id * 7919 % 18000) / 100.0 - 90.0)
-        |      / 30.0) AS BIGINT) || ':' ||
-        |    CAST(floor(((event_id * 104729 % 36000) / 100.0 - 180.0)
-        |      / 30.0) AS BIGINT) AS zone,
-        |    date_trunc('hour', ts) AS hr
-        |  FROM events
+      s"""WITH pos AS (
+        |  ${Voyages.presenceSql}
         |)
         |SELECT a.user_id AS u1, b.user_id AS u2, count(*) AS n_meet
         |FROM pos a JOIN pos b

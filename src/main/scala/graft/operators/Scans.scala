@@ -18,11 +18,13 @@ object Scans {
     "scan_parquet" -> ((s, d) =>
       Tables.nation(s, d).orderBy("n_nationkey")),
 
-    // Column pruning: only 2 of 10 lineitem columns reach the reader.
+    // Column pruning: only 3 of the lineitem columns reach the reader.
+    // Ordered by every projected column: (l_orderkey, l_linenumber)
+    // repeats in scaled copies of lineitem.
     "scan_projection" -> ((s, d) =>
       Tables.lineitem(s, d)
         .select("l_orderkey", "l_linenumber", "l_quantity")
-        .orderBy("l_orderkey", "l_linenumber")),
+        .orderBy("l_orderkey", "l_linenumber", "l_quantity")),
 
     // Predicate pushdown: shipdate filter lands in PushedFilters.
     "scan_filter_pushdown" -> ((s, d) =>
@@ -273,7 +275,7 @@ object Scans {
 
     "scan_projection" ->
       """SELECT l_orderkey, l_linenumber, l_quantity FROM lineitem
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
+        |ORDER BY l_orderkey, l_linenumber, l_quantity""".stripMargin,
 
     "scan_filter_pushdown" ->
       """SELECT l_orderkey, l_linenumber, l_shipdate, l_quantity FROM lineitem

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.operators.Voyages
+
 /** Typed event row for the custom-state operators. */
 case class EventRow(event_id: Long, ts: java.sql.Timestamp, user_id: Long,
     event_type: String, value: Double)
@@ -72,6 +74,13 @@ object Streams {
 
   private def micros(t: java.sql.Timestamp): Long =
     t.getTime * 1000L + (t.getNanos / 1000L) % 1000L
+
+  /** One key's micro-batch input in event-time order, as
+    * (epoch micros, row): the input is unordered, and (ts, event_id)
+    * is the batch queries' total order. */
+  private def inEventTime(it: Iterator[EventRow]): Seq[(Long, EventRow)] =
+    it.map(e => (micros(e.ts), e)).toSeq
+      .sortBy { case (t, e) => (t, e.event_id) }
 
   private def toTs(m: Long): java.sql.Timestamp = {
     val t = new java.sql.Timestamp(m / 1000000L * 1000L)
@@ -171,20 +180,16 @@ object Streams {
     */
   def statefulSessions(events: Dataset[EventRow]): Dataset[SessionOut] = {
     import events.sparkSession.implicits._
-    val gapMicros = 1800L * 1000000L
     events.groupByKey(_.user_id)
       .flatMapGroupsWithState[SessionState, SessionOut](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (uid: Long, it: Iterator[EventRow], state: GroupState[SessionState]) =>
-          // micro-batch input is unordered: sort this batch's events
-          val evs = it.toSeq.sortBy(e => (micros(e.ts), e.event_id))
           var open = state.getOption
           val out = Seq.newBuilder[SessionOut]
-          evs.foreach { e =>
-            val t = micros(e.ts)
+          inEventTime(it).foreach { case (t, e) =>
             open match {
               case Some(s) if t < s.last => () // late straggler: drop
-              case Some(s) if t - s.last <= gapMicros =>
+              case Some(s) if t - s.last <= Voyages.GapMicros =>
                 open = Some(s.copy(last = t, n = s.n + 1,
                   sum = s.sum + e.value))
               case Some(s) =>
@@ -200,16 +205,6 @@ object Streams {
       }
   }
 
-  /** The derived-position 30° zone — graft.operators.GeoOps's
-    * withPos ∘ gridCell in plain Scala (event_id is non-negative, so
-    * Scala % == SQL %; the floor/division sequence is the same IEEE
-    * arithmetic both engines run). */
-  private def zoneOf(eventId: Long): String = {
-    val lat = (eventId * 7919 % 18000) / 100.0 - 90.0
-    val lon = (eventId * 104729 % 36000) / 100.0 - 180.0
-    s"${math.floor(lat / 30.0).toLong}:${math.floor(lon / 30.0).toLong}"
-  }
-
   /** Streaming twin of geo_od_matrix's per-voyage collapse: voyages
     * close and emit their (origin zone, destination zone, points) the
     * moment the >30-min report gap that ends them arrives — the
@@ -222,20 +217,17 @@ object Streams {
     * with a stale position and extend the voyage). */
   def statefulVoyages(events: Dataset[EventRow]): Dataset[VoyageOut] = {
     import events.sparkSession.implicits._
-    val gapMicros = 1800L * 1000000L
     events.groupByKey(_.user_id)
       .flatMapGroupsWithState[VoyageState, VoyageOut](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (uid: Long, it: Iterator[EventRow], state: GroupState[VoyageState]) =>
-          val evs = it.toSeq.sortBy(e => (micros(e.ts), e.event_id))
           var open = state.getOption
           val out = Seq.newBuilder[VoyageOut]
-          evs.foreach { e =>
-            val t = micros(e.ts)
-            val z = zoneOf(e.event_id)
+          inEventTime(it).foreach { case (t, e) =>
+            val z = Voyages.zoneOf(e.event_id)
             open match {
               case Some(v) if t < v.last => () // late straggler: drop
-              case Some(v) if t - v.last <= gapMicros =>
+              case Some(v) if t - v.last <= Voyages.GapMicros =>
                 open = Some(v.copy(last = t, dZone = z, n = v.n + 1))
               case Some(v) =>
                 out += VoyageOut(uid, v.oZone, v.dZone, v.n)
@@ -266,11 +258,9 @@ object Streams {
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (uid: Long, it: Iterator[EventRow],
             state: GroupState[TransitionState]) =>
-          val evs = it.toSeq.sortBy(e => (micros(e.ts), e.event_id))
           var last = state.getOption
           val out = Seq.newBuilder[TransitionOut]
-          evs.foreach { e =>
-            val t = micros(e.ts)
+          inEventTime(it).foreach { case (t, e) =>
             if (!last.exists(t < _.last)) { // late straggler: drop
               last.foreach(l => out += TransitionOut(uid, l.lastType,
                 e.event_type))
@@ -295,11 +285,9 @@ object Streams {
       .flatMapGroupsWithState[GapFillState, GapFillOut](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (uid: Long, it: Iterator[EventRow], state: GroupState[GapFillState]) =>
-          val evs = it.toSeq.sortBy(e => (micros(e.ts), e.event_id))
           var s = state.getOption.getOrElse(GapFillState(0.0, false, -1L))
           val out = Seq.newBuilder[GapFillOut]
-          evs.foreach { e =>
-            val t = micros(e.ts)
+          inEventTime(it).foreach { case (t, e) =>
             if (t >= s.last) { // late straggler: drop
               if (e.event_type == "purchase")
                 s = GapFillState(e.value, hasValue = true, t)
@@ -332,15 +320,12 @@ object Streams {
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (uid: Long, it: Iterator[EventRow],
             state: GroupState[ZoneEntryState]) =>
-          val evs = it.toSeq.sortBy(e => (micros(e.ts), e.event_id))
           var s = state.getOption.getOrElse(
             ZoneEntryState(Map.empty, Long.MinValue))
           val out = Seq.newBuilder[ZoneEntryOut]
-          evs.foreach { e =>
-            val t = micros(e.ts)
+          inEventTime(it).foreach { case (t, e) =>
             if (t >= s.last) { // late straggler: drop
-              val py = e.event_id * 7919 % 18000 - 9000
-              val px = e.event_id * 104729 % 36000 - 18000
+              val (px, py) = Voyages.pxpy(e.event_id)
               val now = zones.map { case (z, verts) =>
                 z -> graft.operators.GeoOps.insideOf(verts, px, py)
               }.toMap
@@ -372,11 +357,9 @@ object Streams {
       .flatMapGroupsWithState[FunnelState, FunnelOut](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (uid: Long, it: Iterator[EventRow], state: GroupState[FunnelState]) =>
-          val evs = it.toSeq.sortBy(e => (micros(e.ts), e.event_id))
           var s = state.getOption.getOrElse(FunnelState(-1L, -1L, -1L))
           val out = Seq.newBuilder[FunnelOut]
-          evs.foreach { e =>
-            val t = micros(e.ts)
+          inEventTime(it).foreach { case (t, e) =>
             if (e.event_type == "view" && s.t1 < 0) {
               s = s.copy(t1 = t)
               out += FunnelOut(uid, "1_view", toTs(t))

@@ -8,9 +8,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Guards against regrowth in `src/main`: sessions come from the one
   * factory ([[EngineConf.builder]]), the command-line mains are
-  * exactly the documented ones, and connected components have one
-  * solver ([[operators.Graph]]). A new one-off study belongs in a
-  * scratch copy or in `perfbench`, not in the library. */
+  * exactly the documented ones, connected components have one solver
+  * ([[operators.Graph]]), and the voyage-segmentation rules have one
+  * definition per dialect ([[operators.Voyages]]). A new one-off
+  * study belongs in a scratch copy or in `perfbench`, not in the
+  * library. */
 class SourceLintSpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala")
@@ -57,6 +59,23 @@ class SourceLintSpec extends AnyFunSuite {
     }
     assert(finds.toSet == Set("graft/operators/Graph.scala"),
       s"union-find copies in: ${finds.toSeq.sorted.mkString(", ")}")
+  }
+
+  test("the voyage rules are defined once per dialect, in Voyages") {
+    // derived lat, derived lon, the 30-min gap, the report-gap column;
+    // Voyages has at most one copy per dialect (Column, Scala, SQL)
+    val rules = Seq("7919\\s*%\\s*18000", "104729\\s*%\\s*36000",
+      "1800L\\s*\\*\\s*1000000L|1800000000", "unix_micros\\(lag\\(")
+    rules.foreach { rule =>
+      val hits = sources.toSeq.sortBy(_._1).flatMap { case (f, src) =>
+        rule.r.findAllMatchIn(src).map(_ => f)
+      }
+      val elsewhere = hits.filter(_ != "graft/operators/Voyages.scala")
+      assert(elsewhere.isEmpty,
+        s"/$rule/ outside Voyages: ${elsewhere.distinct.mkString(", ")}")
+      assert(hits.nonEmpty && hits.size <= 3,
+        s"/$rule/ has ${hits.size} definitions in Voyages")
+    }
   }
 
   test("the command-line mains are exactly the kept list") {
