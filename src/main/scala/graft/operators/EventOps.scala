@@ -486,13 +486,10 @@ object EventOps {
         |ORDER BY event_id""".stripMargin,
 
     "events_gap_hist" ->
-      """SELECT gap_us // 60000000 AS gap_min, count(*) AS n
-        |FROM (
-        |  SELECT epoch_us(ts) - lag(epoch_us(ts)) OVER
-        |    (PARTITION BY user_id ORDER BY ts, event_id) AS gap_us
-        |  FROM events
-        |) t WHERE gap_us IS NOT NULL
-        |GROUP BY 1 ORDER BY gap_min""".stripMargin,
+      s"""SELECT gap_us // 60000000 AS gap_min, count(*) AS n
+         |FROM (SELECT ${Voyages.gapSql} FROM events) t
+         |WHERE gap_us IS NOT NULL
+         |GROUP BY 1 ORDER BY gap_min""".stripMargin,
 
     "events_markov" ->
       """WITH trans AS (

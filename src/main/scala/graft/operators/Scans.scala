@@ -27,11 +27,12 @@ object Scans {
         .orderBy("l_orderkey", "l_linenumber", "l_quantity")),
 
     // Predicate pushdown: shipdate filter lands in PushedFilters.
+    // Ordered by every projected column, as scan_projection is.
     "scan_filter_pushdown" -> ((s, d) =>
       Tables.lineitem(s, d)
         .filter(col("l_shipdate") <= lit("1996-01-01").cast("timestamp"))
         .select("l_orderkey", "l_linenumber", "l_shipdate", "l_quantity")
-        .orderBy("l_orderkey", "l_linenumber")),
+        .orderBy("l_orderkey", "l_linenumber", "l_shipdate", "l_quantity")),
 
     // Parse the JSON payload column into typed flat columns.
     "source_json_payload" -> ((s, d) =>
@@ -280,7 +281,7 @@ object Scans {
     "scan_filter_pushdown" ->
       """SELECT l_orderkey, l_linenumber, l_shipdate, l_quantity FROM lineitem
         |WHERE l_shipdate <= TIMESTAMP '1996-01-01 00:00:00'
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
+        |ORDER BY l_orderkey, l_linenumber, l_shipdate, l_quantity""".stripMargin,
 
     "source_json_payload" ->
       """SELECT event_id, event_type,

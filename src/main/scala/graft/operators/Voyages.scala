@@ -28,7 +28,8 @@ import org.apache.spark.sql.functions._
   * interpolating the Scala ones, so the oracles stay an independent
   * reference: a wrong constant on either side fails the oracle
   * compare. SourceLintSpec keeps these rules out of every other
-  * file in `src/main`. */
+  * file in `src/main`, but for one Column copy of the report gap:
+  * `window_lag_lead` lags the µs column, which runs faster there. */
 private[graft] object Voyages {
 
   /** The voyage gap: a report more than this many µs after its
@@ -125,14 +126,19 @@ private[graft] object Voyages {
     s"SELECT DISTINCT user_id,\n    $zoneSql,\n" +
       "    date_trunc('hour', ts) AS hr\n  FROM events"
 
+  /** Select item `gap_us`: µs since the vessel's previous report;
+    * NULL on its first. */
+  val gapSql: String =
+    "epoch_us(ts) - lag(epoch_us(ts)) OVER\n" +
+      "      (PARTITION BY user_id ORDER BY ts, event_id) AS gap_us"
+
   /** CTE `seg` over `src` (user_id, ts, event_id, …): adds `gap_us`
     * and `is_new`. No leading WITH or comma. */
   def segSql(src: String): String =
     s"""seg AS (
        |  SELECT *, CASE WHEN gap_us IS NULL OR gap_us > 1800000000
        |      THEN 1 ELSE 0 END AS is_new
-       |  FROM (SELECT *, epoch_us(ts) - lag(epoch_us(ts)) OVER
-       |          (PARTITION BY user_id ORDER BY ts, event_id) AS gap_us
+       |  FROM (SELECT *, $gapSql
        |        FROM $src) t
        |)""".stripMargin
 

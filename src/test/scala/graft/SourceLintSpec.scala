@@ -62,19 +62,31 @@ class SourceLintSpec extends AnyFunSuite {
   }
 
   test("the voyage rules are defined once per dialect, in Voyages") {
-    // derived lat, derived lon, the 30-min gap, the report-gap column;
-    // Voyages has at most one copy per dialect (Column, Scala, SQL)
-    val rules = Seq("7919\\s*%\\s*18000", "104729\\s*%\\s*36000",
-      "1800L\\s*\\*\\s*1000000L|1800000000", "unix_micros\\(lag\\(")
-    rules.foreach { rule =>
+    // derived lat, derived lon, the 30-min gap, the report-gap column
+    // (Column, then SQL); Voyages has at most one copy per dialect
+    // (Column, Scala, SQL). window_lag_lead keeps its own Column gap:
+    // lagging the µs column is faster there than Voyages.gapUs' lag
+    // of ts, which geo_voyages' plan fixes.
+    val voyages = "graft/operators/Voyages.scala"
+    val rules = Seq("7919\\s*%\\s*18000" -> Set(voyages),
+      "104729\\s*%\\s*36000" -> Set(voyages),
+      "1800L\\s*\\*\\s*1000000L|1800000000" -> Set(voyages),
+      "unix_micros\\(lag\\(|lag\\(\\s*unix_micros\\(" ->
+        Set(voyages, "graft/operators/Windows.scala"),
+      "lag\\(\\s*epoch_us\\(ts\\)" -> Set(voyages))
+    rules.foreach { case (rule, allowed) =>
       val hits = sources.toSeq.sortBy(_._1).flatMap { case (f, src) =>
         rule.r.findAllMatchIn(src).map(_ => f)
       }
-      val elsewhere = hits.filter(_ != "graft/operators/Voyages.scala")
+      val elsewhere = hits.filterNot(allowed)
       assert(elsewhere.isEmpty,
-        s"/$rule/ outside Voyages: ${elsewhere.distinct.mkString(", ")}")
-      assert(hits.nonEmpty && hits.size <= 3,
-        s"/$rule/ has ${hits.size} definitions in Voyages")
+        s"/$rule/ outside ${allowed.mkString(", ")}: " +
+          elsewhere.distinct.mkString(", "))
+      val defs = hits.count(_ == voyages)
+      assert(defs >= 1 && defs <= 3,
+        s"/$rule/ has $defs definitions in Voyages")
+      assert(hits.size - defs <= 1, s"/$rule/ has ${hits.size - defs} " +
+        "copies outside Voyages")
     }
   }
 
