@@ -106,11 +106,32 @@ object Cache {
     * into a bucketed parquet scan.
     *
     * Bucketing is part of the contract, not a convenience: the
-    * artifact is CLUSTERED BY the downstream join key (LSH:
-    * (tbl, bucket); IVF: pcell), so the index side of the candidate
-    * join arrives pre-partitioned and pays NO exchange — and for IVF,
-    * where BOTH probe and member sides derive from the same artifact,
-    * the probe join needs no shuffle at all.
+    * artifact is CLUSTERED BY the key its consumers partition on (the
+    * LSH and IVF indexes: vec_id, so a query vector's rows stay in one
+    * partition through the candidate join; the pair graph: d1; a
+    * shard's top-k: v1), so that side arrives pre-partitioned and pays
+    * NO exchange.
+    *
+    * The bucket COUNT is sized from the data and the session, not
+    * fixed by the caller: the build is persisted and materialized
+    * once, and its measured in-memory bytes give one bucket per
+    * `spark.sql.adaptive.advisoryPartitionSizeInBytes` (64 MB by
+    * default), but never fewer than the session's default
+    * parallelism ([[bucketCount]]); the write then reads the cache.
+    * Each bucket is one file and one task of every later scan, so
+    * the count is paid at every open. The fixed 32 buckets this
+    * replaced wrote the 34 KB `dedup.pairs` artifact of sf0.1 as a
+    * 32-task stage (8 waves on 4 cores) and made each open a 32-task
+    * scan: 128 of a warm `lanes_corpus` pass's 161 tasks. The floor
+    * is one wave, not one bucket, because the bucket count is also
+    * the task count of every consumer that partitions on the bucket
+    * key: Spark accepts the scan's partitioning for a window or
+    * aggregate on vec_id however few buckets it has, so a 1-bucket
+    * LSH or IVF index ran ann_lsh's, ann_ivf's and dedup_embed_ann's
+    * candidate ranking in one task (llm_corpus warm 3.1–3.7 s → 7.4–
+    * 11.9 s per query, sf0.1, 4 cores). The count is recorded in the
+    * version's `meta` and read back on attach, so every process
+    * declares the layout the files were written with.
     *
     * Freshness: a meta file pins the artifact to a fingerprint
     * (file count : bytes : max mtime) of the source parquet it was
@@ -143,12 +164,15 @@ object Cache {
     *
     * Catalog entries are per-JVM (in-memory catalog): each process
     * attaches the shared files via CREATE TABLE … CLUSTERED BY …
-    * LOCATION from the schema stored in meta; the table name embeds
-    * the fingerprint hash so a stale catalog entry can never alias a
-    * different version's files. Superseded version dirs are deleted
-    * after a successful publish — they are unreachable for any
-    * process that fingerprints the current source, and an in-flight
-    * scan of one survives on POSIX unlink semantics.
+    * LOCATION from the schema and bucket count stored in meta; the
+    * table name embeds the fingerprint hash so a stale catalog entry
+    * can never alias a different version's files. A rebuild of the
+    * SAME version (its dir was deleted under a live session) drops
+    * this JVM's entry before attaching: the entry's file listing and
+    * bucket spec describe the deleted files. Superseded version dirs
+    * are deleted after a successful publish — they are unreachable
+    * for any process that fingerprints the current source, and an
+    * in-flight scan of one survives on POSIX unlink semantics.
     *
     * The returned frame still goes through [[cached]] (persisted
     * MEMORY_AND_DISK): repeated consumers inside one query pass hit
@@ -169,7 +193,7 @@ object Cache {
     * IN FLIGHT when the GC fires, which the 10-minute grace bounds
     * (see [[gcStale]]). */
   def diskBacked(s: SparkSession, dir: String, name: String,
-      sourceTable: String, bucketCols: Seq[String], buckets: Int = 32)
+      sourceTable: String, bucketCols: Seq[String])
       (build: => DataFrame): DataFrame = {
     val key = (s, dir, name)
     val fp = layoutFp(s, s"$dir/$sourceTable")
@@ -182,8 +206,7 @@ object Cache {
       }
     }
     val out = cached(s, dir, name)(
-      ensureArtifact(s, dir, name, sourceTable, bucketCols, buckets)(
-        build))
+      ensureArtifact(s, dir, name, sourceTable, bucketCols)(build))
     memo.synchronized { attachedFp(key) = fp }
     out
   }
@@ -215,12 +238,20 @@ object Cache {
     }
   }
 
-  /** Layout-versioned source fingerprint. "v2:" = artifact LAYOUT
-    * version (one file per bucket since the writeBucketed repartition
-    * fix) — bumping it invalidates artifacts written under an older
+  /** Layout-versioned source fingerprint. "v3:" = artifact LAYOUT
+    * version (v2: one file per bucket since the writeBucketed
+    * repartition fix; v3: a size-derived bucket count recorded in
+    * meta) — bumping it invalidates artifacts written under an older
     * layout even when the source fingerprint still matches. */
   private def layoutFp(s: SparkSession, path: String): String =
-    "v2:" + fingerprint(s, path)
+    "v3:" + fingerprint(s, path)
+
+  /** Buckets for an artifact of `bytes` in a session that runs
+    * `parallelism` tasks at once: one per `advisory` bytes, rounded
+    * up, and at least one wave (see [[diskBacked]]). */
+  private[graft] def bucketCount(bytes: Long, advisory: Long,
+      parallelism: Int): Int =
+    math.max(parallelism.toLong, (bytes + advisory - 1) / advisory).toInt
 
   /** Root under which all processes share index artifacts. A val so
     * tests can read it; the layout below it is
@@ -232,18 +263,23 @@ object Cache {
       .digest(x.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       .take(6).map(b => f"$b%02x").mkString
 
-  /** The version's stored schema DDL when its meta records exactly
-    * `fp` — the reader-side validation step: a version dir is used
-    * only if its own meta re-states the fingerprint the reader just
-    * computed (path names are never trusted). */
+  /** The version's stored (bucket count, schema DDL) when its meta
+    * records exactly `fp` — the reader-side validation step: a version
+    * dir is used only if its own meta re-states the fingerprint the
+    * reader just computed (path names are never trusted). Meta is
+    * `fp \n buckets \n schemaDdl`. */
   private def validMeta(verDir: java.nio.file.Path,
-      fp: String): Option[String] = {
+      fp: String): Option[(Int, String)] = {
     val metaPath = verDir.resolve("meta")
     if (!java.nio.file.Files.exists(metaPath)) None
     else {
       val m = new String(java.nio.file.Files.readAllBytes(metaPath),
         java.nio.charset.StandardCharsets.UTF_8)
-      if (m.startsWith(fp + "\n")) Some(m.split("\n", 2)(1)) else None
+      m.split("\n", 3) match {
+        case Array(`fp`, b, ddl) if b.toIntOption.exists(_ >= 1) =>
+          Some((b.toInt, ddl))
+        case _ => None
+      }
     }
   }
 
@@ -275,7 +311,7 @@ object Cache {
     * writers must not interleave); cross-process races resolve at the
     * rename(2). */
   private def ensureArtifact(s: SparkSession, dir: String, name: String,
-      sourceTable: String, bucketCols: Seq[String], buckets: Int)
+      sourceTable: String, bucketCols: Seq[String])
       (build: => DataFrame): DataFrame = synchronized {
     val fp = layoutFp(s, s"$dir/$sourceTable")
     val h = sha12(fp)
@@ -285,27 +321,53 @@ object Cache {
     val table = s"graft_idx_${san(dir)}_${san(name)}_$h"
     val dataPath = s"$verDir/data"
     validMeta(verDir, fp) match {
-      case Some(schemaDdl) =>
+      case Some((buckets, schemaDdl)) =>
         attach(s, table, schemaDdl, bucketCols, buckets, dataPath)
       case None =>
-        val df = build
-        val schemaDdl = df.schema.toDDL
-        // Private build dir; `meta` is written LAST so a dir that
-        // carries one is complete by construction.
-        val tmp = root.resolve(s".tmp_${pid}_${System.nanoTime()}")
-        val tmpTable = s"${table}_w$pid"
-        s.sql(s"DROP TABLE IF EXISTS $tmpTable")
-        graft.sources.IO.writeBucketed(df, tmpTable, buckets, bucketCols,
-          Some(s"$tmp/data"))
-        s.sql(s"DROP TABLE $tmpTable") // external: the files survive
-        java.nio.file.Files.write(tmp.resolve("meta"),
-          (fp + "\n" + schemaDdl)
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        publish(tmp, verDir, fp)
-        gcStale(root, keep = verDir.getFileName.toString)
-        attach(s, table, schemaDdl, bucketCols, buckets, dataPath)
+        // Persist and materialize once: the measured bytes size the
+        // bucket count, and the write reads the cache instead of
+        // re-running the build lineage.
+        val df = build.persist(StorageLevel.MEMORY_AND_DISK)
+        try {
+          df.write.format("noop").mode("overwrite").save()
+          val buckets = bucketCount(cachedBytes(s, df),
+            s.sessionState.conf.getConf(
+              org.apache.spark.sql.internal.SQLConf
+                .ADVISORY_PARTITION_SIZE_IN_BYTES),
+            s.sparkContext.defaultParallelism)
+          val schemaDdl = df.schema.toDDL
+          // Private build dir; `meta` is written LAST so a dir that
+          // carries one is complete by construction.
+          val tmp = root.resolve(s".tmp_${pid}_${System.nanoTime()}")
+          val tmpTable = s"${table}_w$pid"
+          s.sql(s"DROP TABLE IF EXISTS $tmpTable")
+          graft.sources.IO.writeBucketed(df, tmpTable, buckets, bucketCols,
+            Some(s"$tmp/data"))
+          s.sql(s"DROP TABLE $tmpTable") // external: the files survive
+          java.nio.file.Files.write(tmp.resolve("meta"),
+            s"$fp\n$buckets\n$schemaDdl"
+              .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+          publish(tmp, verDir, fp)
+          gcStale(root, keep = verDir.getFileName.toString)
+          // An entry registered before this build lists files (and may
+          // declare a bucket count) that are gone.
+          s.sql(s"DROP TABLE IF EXISTS $table")
+          // A lost publish race adopts the winner's recorded layout.
+          val (published, ddl) = validMeta(verDir, fp).getOrElse(
+            throw new IllegalStateException(
+              s"diskBacked: $verDir vanished after publish"))
+          attach(s, table, ddl, bucketCols, published, dataPath)
+        } finally df.unpersist(blocking = false)
     }
   }
+
+  /** Bytes of `df`'s materialized cache (the columnar buffers Spark
+    * measured while building them). */
+  private def cachedBytes(s: SparkSession, df: DataFrame): Long =
+    s.sharedState.cacheManager.lookupCachedData(
+      org.apache.spark.sql.classic.ClassicConversions.castToImpl(df))
+      .map(_.cachedRepresentation.computeStats().sizeInBytes.toLong)
+      .getOrElse(0L)
 
   /** Atomically rename the complete temp dir into place. Losing the
     * race to another process's publish is benign: validate the

@@ -28,7 +28,7 @@ object IndexProbe {
   /** The shared synthetic index: per-k aggregates over `emb.parquet`
     * in `dir`, disk-backed and bucketed by k. */
   def indexFrame(s: SparkSession, dir: String, name: String): DataFrame =
-    Cache.diskBacked(s, dir, name, "emb.parquet", Seq("k"), buckets = 4) {
+    Cache.diskBacked(s, dir, name, "emb.parquet", Seq("k")) {
       builds.incrementAndGet()
       s.read.parquet(s"$dir/emb.parquet")
         .groupBy("k").agg(count(lit(1)).as("n"), sum("id").as("s"))

@@ -24,7 +24,8 @@ object GraftFunctions {
     "char_ngrams" -> (es => expressions.CharNgrams(es(0), es(1))),
     "lsh_signature" ->
       (es => expressions.LshSignature(es(0), es(1), es(2))),
-    "simhash64" -> (es => expressions.SimHash64(es(0))))
+    "simhash64" -> (es => expressions.SimHash64(es(0))),
+    "minhash3" -> (es => expressions.MinHash3(es(0), es(1))))
 
   def ensureRegistered(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
@@ -102,6 +103,17 @@ object GraftFunctions {
     * Requires a registration path on the session. */
   def simHash64(text: Column): Column =
     call_function("simhash64", text)
+
+  /** One-pass MinHash signature over 3-word shingles: `n` running
+    * minima of Spark's `hash(shingle, i)` (see
+    * [[expressions.MinHash3]]); NULL below 3 tokens. The explode +
+    * `min(hash(sh, lit(i)))` aggregate stays as the executable spec
+    * (operators.Dedup.minhash, equality asserted in DedupSpec).
+    * Requires a registration path on the session. */
+  def minHash3(text: Column, n: Int): Column = {
+    import org.apache.spark.sql.functions.lit
+    call_function("minhash3", text, lit(n))
+  }
 }
 
 /** Session-extension registration: add to `spark.sql.extensions`. */
@@ -136,5 +148,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new ExpressionInfo(
         classOf[expressions.SimHash64].getName, "simhash64"),
       (es: Seq[Expression]) => expressions.SimHash64(es(0))))
+    ext.injectFunction((
+      FunctionIdentifier("minhash3"),
+      new ExpressionInfo(
+        classOf[expressions.MinHash3].getName, "minhash3"),
+      (es: Seq[Expression]) => expressions.MinHash3(es(0), es(1))))
   }
 }

@@ -41,34 +41,27 @@ object Dedup {
     * already carries — and the DuckDB oracle computes ground truth
     * from the text, so no oracle value depends on the representation).
     *
-    * The MinHash signature columns do NOT ride this aggregation since
-    * the r19 OPTIMIZATION round: at the r19-build's 16×3 banding they
-    * are 48 `min(hash(sh, i))` accumulators over every shingle
-    * INSTANCE, and the only consumer that rebuilds this frame warm is
-    * dedup_near — which never reads them (dedup_minhash and
-    * dedup_clusters read the disk-backed pair artifact and skip the
-    * build entirely). Riding here they tripled dedup_near's warm cost
-    * when the band fix tripled MinhashFuncs (quiet bench 1.35 →
-    * 2.55 s); they now live in [[minhashSigs]], paid only when the
-    * pair artifact is actually (re)built. Guide §1.2: don't compute
-    * what the query throws away.
+    * The MinHash signatures do NOT ride this aggregation: they are
+    * row-local ([[minhashSigs]], one native pass over the text), and
+    * the only consumer that rebuilds this frame warm is dedup_near,
+    * which never reads them.
     *
     * The slice length is clamped at 0 — docs under 3 whitespace
     * tokens yield no shingles (and so never appear in shingle-based
     * dedup output) instead of crashing on a negative slice length. */
   private def shingleSets(s: SparkSession, d: String): DataFrame =
     graft.Cache.cached(s, d, "dedup.shingleSets") {
-      shingleRows(s, d)
+      shingleRows(Tables.documents(s, d))
         .groupBy("doc_id")
         .agg(first("lang").as("lang"), first("n_chars").as("n_chars"),
           collect_set(xxhash64(col("sh"))).as("shset"))
     }
 
-  /** Exploded raw-string shingle rows (doc_id, lang, n_chars, sh) —
-    * the shared lineage under [[shingleSets]] and [[minhashSigs]].
-    * Not cached: both consumers aggregate it away immediately. */
-  private def shingleRows(s: SparkSession, d: String): DataFrame =
-    Tables.documents(s, d)
+  /** Exploded raw-string shingle rows (doc_id, lang, n_chars, sh) of
+    * `docs` — the shared lineage under [[shingleSets]] and the
+    * [[minhash]] spec. Not cached: both aggregate it away at once. */
+  private def shingleRows(docs: DataFrame): DataFrame =
+    docs
       .withColumn("ws", split(col("text"), " "))
       .select(col("doc_id"), col("lang"), col("n_chars"),
         explode(expr(
@@ -76,26 +69,37 @@ object Dedup {
             " (w, i) -> concat(w, ' ', element_at(ws, i + 2), ' '," +
             " element_at(ws, i + 3)))")).as("sh"))
 
-  /** The [[MinhashFuncs]] MinHash signature values per doc, as
-    * min(hash(sh, i)) over the raw shingle STRINGS — the same
-    * min-of-murmur3-(value, seed) definition the r9
-    * array_min/transform form computed (min over the multiset == min
-    * over the set), with partial aggregation making them map-side.
-    * Split out of [[shingleSets]] in the r19 optimization round (see
-    * its doc): this frame is only ever built under the disk-backed
-    * pair-artifact build, so a warm process (and every bench pass
-    * after the first) never pays the 48-accumulator scan. The extra
-    * corpus pass this costs ON artifact build is one explode +
-    * hash-agg — amortized into the once-per-corpus-snapshot indexing
-    * job, exactly like the LSH/IVF index builds. */
-  private def minhashSigs(s: SparkSession, d: String): DataFrame =
-    graft.Cache.cached(s, d, "dedup.mhSigs") {
-      val aggs = (0 until MinhashFuncs).map(i =>
-        min(hash(col("sh"), lit(i))).as(s"mh_$i"))
-      shingleRows(s, d)
-        .groupBy("doc_id")
-        .agg(aggs.head, aggs.tail: _*)
-    }
+  /** The [[MinhashFuncs]] MinHash signature per doc (doc_id, sig:
+    * array<int>), sig(i) = min over the doc's 3-word shingles of
+    * Spark's murmur3 `hash(sh, i)` — the declared path, ROW-LOCAL:
+    * one native [[GraftFunctions.minHash3]] pass over the text
+    * hashes each shingle's bytes once and folds the [[MinhashFuncs]]
+    * seeds from that hash. Docs under 3 tokens have no shingle and
+    * no row. [[minhash]] is its executable spec (DedupSpec asserts
+    * equality over the corpus and edge strings); it is not the
+    * declared path because its aggregate folds the exploded shingles
+    * back to one row per doc through an exchange (0.84–1.17 s of the
+    * cold `dedup.pairs` build's 4.1–4.7 s, sf0.1, 4 cores). */
+  private[operators] def minhashSigs(docs: DataFrame): DataFrame = {
+    GraftFunctions.ensureRegistered(docs.sparkSession)
+    docs.select(col("doc_id"),
+      GraftFunctions.minHash3(col("text"), MinhashFuncs).as("sig"))
+      .filter(col("sig").isNotNull)
+  }
+
+  /** The composable form of [[minhashSigs]], kept as its executable
+    * spec: explode the shingles, then one `min(hash(sh, lit(i)))`
+    * accumulator per function (min over the multiset == min over the
+    * set), folded back to (doc_id, sig: array<int>). */
+  private[operators] def minhash(docs: DataFrame): DataFrame = {
+    val aggs = (0 until MinhashFuncs).map(i =>
+      min(hash(col("sh"), lit(i))).as(s"mh_$i"))
+    shingleRows(docs)
+      .groupBy("doc_id")
+      .agg(aggs.head, aggs.tail: _*)
+      .select(col("doc_id"),
+        array((0 until MinhashFuncs).map(i => col(s"mh_$i")): _*).as("sig"))
+  }
 
   /** Exploded (doc_id, lang, n_chars, sh) shingle rows, derived from
     * the persisted set frame — CPU-cheap per use, no second
@@ -385,17 +389,18 @@ object Dedup {
   private val MinhashRows = 3
   private[operators] val MinhashFuncs = MinhashBands * MinhashRows
 
-  /** The (doc_id, band, h0..h{rows-1}) LSH banding rows, from the
-    * [[minhashSigs]] signature frame (same min-of-murmur3-(value,
-    * seed) values the r9 array_min/transform fold computed). */
+  /** The (doc_id, band, h0..h{rows-1}) LSH banding rows, built row
+    * by row from the [[minhashSigs]] signature array: band b's rows
+    * are sig(rows·b) … sig(rows·b + rows − 1). No aggregate and no
+    * exchange sits under the band self-join. */
   private def minhashBands(s: SparkSession,
       d: String): DataFrame = {
-    val mh = minhashSigs(s, d).select(
-      col("doc_id") +: (0 until MinhashFuncs).map(i => col(s"mh_$i")): _*)
+    val sig = col("sig")
     val bandStructs = (0 until MinhashBands).map(b =>
       struct(lit(b).as("band") +: (0 until MinhashRows).map(r =>
-        col(s"mh_${MinhashRows * b + r}").as(s"h$r")): _*))
-    mh.select(col("doc_id"), explode(array(bandStructs: _*)).as("bd"))
+        sig(MinhashRows * b + r).as(s"h$r")): _*))
+    minhashSigs(Tables.documents(s, d))
+      .select(col("doc_id"), explode(array(bandStructs: _*)).as("bd"))
       .select(col("doc_id") +: (col("bd.band").as("band") +:
         (0 until MinhashRows).map(r => col(s"bd.h$r").as(s"h$r"))): _*)
   }

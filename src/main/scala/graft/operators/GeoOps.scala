@@ -311,19 +311,6 @@ object GeoOps {
       zoneEntriesFrom(Voyages.withPxPy(Tables.events(s, d)), zonePolygons))
   )
 
-  /** The OD voyage-flow matrix (o_zone, d_zone, n_voyages,
-    * n_vessels), UNSORTED, persisted per (session, sf-dir):
-    * sessionize each vessel's reports into voyages (the geo_voyages
-    * segmentation), take each voyage's first and last 30° zone, and
-    * count voyages + distinct vessels per (origin, destination)
-    * pair. Everything up to the per-voyage collapse rides ONE
-    * user_id exchange (the voyage window is a sub-partition; the
-    * endpoint frames reuse it); the result is zones² rows at most —
-    * tiny at any scale, so the persisted frame is cheap to hold and
-    * every downstream consumer (the OD query itself, lanes-top,
-    * PageRank, components) skips the corpus-scale sessionization.
-    * A single-point voyage maps to its own diagonal cell (o = d),
-    * which is meaningful (intra-zone movement), not an artifact. */
   /** Grid size the OD pipeline bins with — the single source the
     * static edge bound below is derived from. */
   private[graft] val odCellDeg: Double = 30.0
@@ -351,6 +338,19 @@ object GeoOps {
     z * z
   }
 
+  /** The OD voyage-flow matrix (o_zone, d_zone, n_voyages,
+    * n_vessels), UNSORTED, persisted per (session, sf-dir):
+    * sessionize each vessel's reports into voyages (the geo_voyages
+    * segmentation), take each voyage's first and last 30° zone, and
+    * count voyages + distinct vessels per (origin, destination)
+    * pair. Everything up to the per-voyage collapse rides ONE
+    * user_id exchange (the voyage window is a sub-partition; the
+    * endpoint frames reuse it); the result is zones² rows at most —
+    * tiny at any scale, so the persisted frame is cheap to hold and
+    * every downstream consumer (the OD query itself, lanes-top,
+    * PageRank, components) skips the corpus-scale sessionization.
+    * A single-point voyage maps to its own diagonal cell (o = d),
+    * which is meaningful (intra-zone movement), not an artifact. */
   private[operators] def odMatrix(s: SparkSession, d: String): DataFrame =
     graft.Cache.cached(s, d, "geo.od")(odMatrixBuild(s, d))
 
@@ -416,8 +416,9 @@ object GeoOps {
     * but a 1°-grid planet (~65k zones) can exceed it.
     *
     * PATH DISPATCH ([[Graph.oneTask]]): when the caller can PROVE an
-    * edge-count bound from the zone universe (`staticMaxEdges` — the
-    * 30° grid admits ≤ 12·6 = 72 zones, so ≤ 72² = 5,184 OD edges),
+    * edge-count bound from the zone universe (`staticMaxEdges` — at
+    * the 30° grid [[zoneCount]] admits ≤ 7·13 = 91 zones, so
+    * [[odMaxEdges]] is 91² = 8,281 OD edges),
     * the path is chosen with no Spark job and construction is
     * plan-only (PlanSpec asserts zero jobs). */
   private[operators] def zoneRank(edges: DataFrame, iters: Int,
@@ -766,10 +767,6 @@ object GeoOps {
        |FROM seq WHERE inside AND (prev_in IS NULL OR NOT prev_in)
        |GROUP BY zone ORDER BY zone""".stripMargin
 
-  /** Co-presence pairs over any positioned frame (user_id, lat, lon,
-    * ts) at a given grid size. Split out + package-visible so the
-    * hot-cell spec can measure candidate volume at different grid
-    * sizes on synthetic dense traffic. */
   /** Per-vertex triangle counts over a canonical (u1 < u2, distinct)
     * edge set — geo_triangles' body, package-visible so PropertySpec
     * can prove the degree-ordered orientation against a brute-force
@@ -804,6 +801,10 @@ object GeoOps {
       .orderBy("user_id")
   }
 
+  /** Co-presence pairs over any positioned frame (user_id, lat, lon,
+    * ts) at a given grid size. Split out + package-visible so the
+    * hot-cell spec can measure candidate volume at different grid
+    * sizes on synthetic dense traffic. */
   private[operators] def coPresence(pos: DataFrame,
       cellDeg: Double): DataFrame =
     coPresenceFrom(presenceCells(pos, cellDeg))

@@ -9,10 +9,11 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Guards against regrowth in `src/main`: sessions come from the one
   * factory ([[EngineConf.builder]]), the command-line mains are
   * exactly the documented ones, connected components have one solver
-  * ([[operators.Graph]]), and the voyage-segmentation rules have one
-  * definition per dialect ([[operators.Voyages]]). A new one-off
-  * study belongs in a scratch copy or in `perfbench`, not in the
-  * library. */
+  * ([[operators.Graph]]), the voyage-segmentation rules have one
+  * definition per dialect ([[operators.Voyages]]), and the MinHash
+  * signature aggregate survives only as the spec of the native
+  * kernel. A new one-off study belongs in a scratch copy or in
+  * `perfbench`, not in the library. */
 class SourceLintSpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala")
@@ -88,6 +89,36 @@ class SourceLintSpec extends AnyFunSuite {
       assert(hits.size - defs <= 1, s"/$rule/ has ${hits.size - defs} " +
         "copies outside Voyages")
     }
+  }
+
+  test("the per-shingle MinHash aggregate lives only in its spec") {
+    // `min(hash(sh, lit(i)))` re-aggregates exploded shingles back to
+    // one row per doc; the declared path is the row-local native
+    // minhash3, and Dedup.minhash keeps the aggregate as its
+    // executable spec.
+    val dedup = "graft/operators/Dedup.scala"
+    val rule = "\\bhash\\([^()]*(\\([^()]*\\))?[^()]*,\\s*lit\\(".r
+    def code(src: String): Seq[(String, Int)] =
+      src.linesIterator.zipWithIndex.filterNot { case (l, _) =>
+        val t = l.trim
+        t.startsWith("*") || t.startsWith("/*") || t.startsWith("//")
+      }.toSeq
+    val hits = sources.toSeq.sortBy(_._1).flatMap { case (f, src) =>
+      code(src).collect {
+        case (l, i) if rule.findFirstIn(l).isDefined => f -> i
+      }
+    }
+    assert(hits.map(_._1).toSet == Set(dedup),
+      s"MinHash aggregate outside the spec: ${hits.map(_._1).distinct}")
+    val defs = code(sources(dedup)).collect {
+      case (l, i) if "\\bdef\\s".r.findFirstIn(l).isDefined => l -> i
+    }
+    val spec = defs.indexWhere(_._1.contains("def minhash("))
+    assert(spec >= 0, "Dedup.minhash (the spec) is gone")
+    val (from, until) = (defs(spec)._2,
+      defs.lift(spec + 1).map(_._2).getOrElse(Int.MaxValue))
+    assert(hits.forall { case (_, i) => i > from && i < until },
+      "the MinHash aggregate appears outside Dedup.minhash")
   }
 
   test("the command-line mains are exactly the kept list") {

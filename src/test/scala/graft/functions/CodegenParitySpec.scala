@@ -7,10 +7,10 @@ import graft.{RowNorm, SparkEntry, SparkSpec}
   *
   * Every custom Catalyst `Expression` here ships BOTH a `doGenCode`
   * and an `eval` path (SimHash64, LshSignature, CharNgrams,
-  * FingerprintHash, RayCast, VecDot). On a real cluster the engine
-  * does not get to choose which one runs: whole-stage codegen falls
-  * back to interpreted evaluation whenever a generated method blows
-  * the JIT/classfile budget, a plan is too wide, or compilation
+  * FingerprintHash, RayCast, VecDot, MinHash3). On a real cluster the
+  * engine does not get to choose which one runs: whole-stage codegen
+  * falls back to interpreted evaluation whenever a generated method
+  * blows the JIT/classfile budget, a plan is too wide, or compilation
   * fails — silently, per stage, per executor. If the two paths ever
   * disagree, the SAME query returns different results depending on
   * plan width and fallback luck: the worst kind of at-scale bug,
@@ -62,6 +62,9 @@ class CodegenParitySpec extends SparkSpec {
   // variant), CharNgrams (text_char_ngrams), FingerprintHash
   // (text_fingerprint), RayCast (geo_zone_polygon), VecDot
   // (similarity_knn + the verify stages of the embed dedups).
+  // MinHash3 is pinned in DedupSpec instead, under the same two
+  // modes: dedup_minhash reads the on-disk pair artifact, so a second
+  // query pass would not run the kernel again.
   private val targets = Seq(
     "text_char_ngrams" -> SparkSpec.sf0001,
     "text_fingerprint" -> SparkSpec.sf0001,

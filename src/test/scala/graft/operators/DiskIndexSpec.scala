@@ -28,8 +28,9 @@ class DiskIndexSpec extends SparkSpec {
     val dir = s"$scratch/$tag"
     writeSource(dir, 100)
     var builds = 0
-    def frame = Cache.diskBacked(spark, dir, s"test.idx.$tag",
-        "emb.parquet", Seq("k"), buckets = 4) {
+    val name = s"test.idx.$tag"
+    def frame = Cache.diskBacked(spark, dir, name, "emb.parquet",
+        Seq("k")) {
       builds += 1
       spark.read.parquet(s"$dir/emb.parquet")
         .groupBy("k").agg(count(lit(1)).as("n"), sum("id").as("s"))
@@ -40,6 +41,22 @@ class DiskIndexSpec extends SparkSpec {
     def tableName: String = spark.catalog.listTables().collect()
       .map(_.name).find(_.contains(s"test_idx_$tag"))
       .getOrElse(fail(s"no catalog table registered for $tag"))
+    /** The one published version dir of this artifact. */
+    def versionDir: java.nio.file.Path = {
+      import scala.jdk.CollectionConverters._
+      val root = java.nio.file.Paths.get(Cache.SharedRoot)
+        .resolve(dir.replaceAll("[^A-Za-z0-9]", "_"))
+        .resolve(name.replaceAll("[^A-Za-z0-9]", "_"))
+      val vs = java.nio.file.Files.list(root).iterator().asScala
+        .filter(_.getFileName.toString.startsWith("v_")).toSeq
+      assert(vs.size == 1, s"expected one version dir, saw $vs")
+      vs.head
+    }
+    def metaLines: Seq[String] = java.nio.file.Files
+      .readAllLines(versionDir.resolve("meta")).toArray.toSeq
+      .map(_.toString)
+    def rows: Seq[Seq[Any]] =
+      frame.orderBy("k").collect().map(_.toSeq).toSeq
   }
 
   test("first entry builds once; re-entry after clear() reads the " +
@@ -91,10 +108,63 @@ class DiskIndexSpec extends SparkSpec {
     val r2 = fx.frame.orderBy("k").collect().map(_.toSeq).toSeq
     assert(fx.builds == 1, "catalog re-attach must not rebuild")
     assert(r1 == r2)
-    val desc = spark.sql(s"DESCRIBE EXTENDED ${fx.tableName}")
-      .collect().map(_.toString).mkString("\n")
-    assert(desc.contains("Num Buckets") && desc.contains("4"),
-      s"re-attached table lost its bucket spec:\n$desc")
+    // The bucket count is sized from the data and the session: a
+    // ~100-byte artifact records one wave (the session's default
+    // parallelism) in its meta, and the fresh catalog declares it.
+    val wave = spark.sparkContext.defaultParallelism.toString
+    assert(fx.metaLines(1) == wave,
+      s"meta must record $wave buckets: ${fx.metaLines}")
+    val buckets = spark.sql(s"DESCRIBE EXTENDED ${fx.tableName}")
+      .collect().find(_.getString(0) == "Num Buckets").map(_.getString(1))
+    assert(buckets.contains(wave),
+      s"re-attached table must declare the recorded count, saw $buckets")
+  }
+
+  test("bucket count: one per advisory partition size, at least one " +
+      "wave") {
+    val adv = 64L << 20
+    Seq(1, 4).foreach { wave =>
+      assert(Cache.bucketCount(0L, adv, wave) == wave)
+      assert(Cache.bucketCount(34L << 10, adv, wave) == wave)
+      assert(Cache.bucketCount(adv, adv, wave) == wave)
+    }
+    assert(Cache.bucketCount(adv + 1, adv, 1) == 2)
+    assert(Cache.bucketCount(10 * adv - 1, adv, 4) == 10)
+    assert(Cache.bucketCount(10 * adv + 1, adv, 4) == 11)
+  }
+
+  test("a v2-layout artifact at the version path is rebuilt, not read") {
+    val fx = new Fixture("v2")
+    val r1 = fx.rows
+    val meta = fx.metaLines
+    assert(meta.size == 3 && meta.head.startsWith("v3:"), s"meta: $meta")
+    // The v2 meta: `v2:<fingerprint>` then the DDL, no bucket count.
+    java.nio.file.Files.writeString(fx.versionDir.resolve("meta"),
+      "v2:" + meta.head.stripPrefix("v3:") + "\n" + meta(2))
+    spark.sql(s"DROP TABLE ${fx.tableName}")
+    Cache.clear(spark, fx.name)
+    assert(fx.rows == r1)
+    assert(fx.builds == 2, "a v2 artifact must be rebuilt")
+    assert(fx.metaLines.head.startsWith("v3:"))
+  }
+
+  test("a version deleted under a live session rebuilds once and " +
+      "re-attaches through a fresh catalog entry") {
+    val fx = new Fixture("del")
+    val r1 = fx.rows
+    val tbl = fx.tableName
+    // The catalog entry stays registered; its files go.
+    val ver = fx.versionDir
+    import scala.jdk.CollectionConverters._
+    java.nio.file.Files.walk(ver).iterator().asScala.toSeq.reverse
+      .foreach(java.nio.file.Files.delete(_))
+    Cache.clear(spark, fx.name)
+    assert(fx.rows == r1, "the rebuilt entry must return the same rows")
+    assert(fx.builds == 2, "the deleted version must rebuild once")
+    assert(fx.tableName == tbl)
+    Cache.clear(spark, fx.name)
+    assert(fx.rows == r1)
+    assert(fx.builds == 2, "the rebuilt version must be read, not rebuilt")
   }
 
   test("a changed source fingerprint invalidates the artifact and " +
