@@ -112,26 +112,26 @@ object Cache {
     * shard's top-k: v1), so that side arrives pre-partitioned and pays
     * NO exchange.
     *
-    * The bucket COUNT is sized from the data and the session, not
-    * fixed by the caller: the build is persisted and materialized
-    * once, and its measured in-memory bytes give one bucket per
-    * `spark.sql.adaptive.advisoryPartitionSizeInBytes` (64 MB by
-    * default), but never fewer than the session's default
-    * parallelism ([[bucketCount]]); the write then reads the cache.
-    * Each bucket is one file and one task of every later scan, so
-    * the count is paid at every open. The fixed 32 buckets this
-    * replaced wrote the 34 KB `dedup.pairs` artifact of sf0.1 as a
-    * 32-task stage (8 waves on 4 cores) and made each open a 32-task
-    * scan: 128 of a warm `lanes_corpus` pass's 161 tasks. The floor
-    * is one wave, not one bucket, because the bucket count is also
-    * the task count of every consumer that partitions on the bucket
-    * key: Spark accepts the scan's partitioning for a window or
-    * aggregate on vec_id however few buckets it has, so a 1-bucket
-    * LSH or IVF index ran ann_lsh's, ann_ivf's and dedup_embed_ann's
-    * candidate ranking in one task (llm_corpus warm 3.1–3.7 s → 7.4–
-    * 11.9 s per query, sf0.1, 4 cores). The count is recorded in the
-    * version's `meta` and read back on attach, so every process
-    * declares the layout the files were written with.
+    * The bucket COUNT is the writing session's default parallelism:
+    * one wave of tasks, recorded in the version's `meta` and read back
+    * on attach, so every process knows the layout the files were
+    * written with. Each bucket is one file and one task of every later
+    * scan, and also the task count of every consumer that partitions
+    * on the bucket key: Spark accepts the scan's partitioning for a
+    * window or aggregate on vec_id however few buckets it has. So a
+    * count below one wave leaves cores idle (a 1-bucket LSH or IVF
+    * index ran ann_lsh's, ann_ivf's and dedup_embed_ann's candidate
+    * ranking in one task: llm_corpus warm 3.1–3.7 s → 7.4–11.9 s per
+    * query, sf0.1, 4 cores), and a count above it pays extra waves at
+    * every open (the fixed 32 buckets this replaced wrote the 34 KB
+    * `dedup.pairs` artifact of sf0.1 as a 32-task stage, 8 waves on 4
+    * cores, and made each open a 32-task scan: 128 of a warm
+    * `lanes_corpus` pass's 161 tasks). No artifact measured so far
+    * fills one wave of 64 MB partitions, so the count has no size
+    * term. A reader with more cores than the writer declares the
+    * table unbucketed ([[declaredBuckets]]): its consumers then pay
+    * one exchange at the reader's width instead of running in the
+    * writer's few tasks.
     *
     * Freshness: a meta file pins the artifact to a fingerprint
     * (file count : bytes : max mtime) of the source parquet it was
@@ -165,11 +165,14 @@ object Cache {
     * Catalog entries are per-JVM (in-memory catalog): each process
     * attaches the shared files via CREATE TABLE … CLUSTERED BY …
     * LOCATION from the schema and bucket count stored in meta; the
-    * table name embeds the fingerprint hash so a stale catalog entry
-    * can never alias a different version's files. A rebuild of the
-    * SAME version (its dir was deleted under a live session) drops
-    * this JVM's entry before attaching: the entry's file listing and
-    * bucket spec describe the deleted files. Superseded version dirs
+    * table name embeds the fingerprint hash and the recorded bucket
+    * count, so a stale catalog entry can never alias a different
+    * version's files or declare another bucket spec. An attach that
+    * finds its table registered drops the catalog's cached relation
+    * first: the SAME version may have been rebuilt since (its dir
+    * deleted under a live session and republished by this or another
+    * process), and the cached relation lists the deleted files.
+    * Superseded version dirs
     * are deleted after a successful publish — they are unreachable
     * for any process that fingerprints the current source, and an
     * in-flight scan of one survives on POSIX unlink semantics.
@@ -240,18 +243,20 @@ object Cache {
 
   /** Layout-versioned source fingerprint. "v3:" = artifact LAYOUT
     * version (v2: one file per bucket since the writeBucketed
-    * repartition fix; v3: a size-derived bucket count recorded in
+    * repartition fix; v3: the writer's bucket count recorded in
     * meta) — bumping it invalidates artifacts written under an older
     * layout even when the source fingerprint still matches. */
   private def layoutFp(s: SparkSession, path: String): String =
     "v3:" + fingerprint(s, path)
 
-  /** Buckets for an artifact of `bytes` in a session that runs
-    * `parallelism` tasks at once: one per `advisory` bytes, rounded
-    * up, and at least one wave (see [[diskBacked]]). */
-  private[graft] def bucketCount(bytes: Long, advisory: Long,
-      parallelism: Int): Int =
-    math.max(parallelism.toLong, (bytes + advisory - 1) / advisory).toInt
+  /** The bucket count a reader with `parallelism` cores declares for
+    * an artifact written as `recorded` buckets: the recorded count
+    * when it fills the reader's wave, else none, so a narrower
+    * writer's layout never caps a wider reader's consumers at the
+    * writer's task count (see [[diskBacked]]). */
+  private[graft] def declaredBuckets(recorded: Int,
+      parallelism: Int): Option[Int] =
+    Some(recorded).filter(_ >= parallelism)
 
   /** Root under which all processes share index artifacts. A val so
     * tests can read it; the layout below it is
@@ -292,16 +297,24 @@ object Cache {
           catch { case _: java.io.IOException => () })
     }
 
-  /** Register `table` over the published files (idempotent per
-    * catalog). The bucket spec in the DDL matches the writer's, so
-    * bucketed reads stay valid in every attaching process. */
+  /** Register `table` over the published files, bucketed by
+    * `bucketCols` into `buckets` when given. A table this catalog
+    * already holds is re-listed instead: callers attach only when
+    * their memo entry is gone, and the files may have been
+    * republished since the catalog cached the relation. */
   private def attach(s: SparkSession, table: String, schemaDdl: String,
-      bucketCols: Seq[String], buckets: Int, dataPath: String): DataFrame = {
-    if (!s.catalog.tableExists(table))
+      bucketCols: Seq[String], buckets: Option[Int],
+      dataPath: String): DataFrame = {
+    if (s.catalog.tableExists(table))
+      s.sessionState.catalog.invalidateCachedTable(
+        org.apache.spark.sql.catalyst.TableIdentifier(table))
+    else {
+      val cols = bucketCols.mkString(", ")
+      val clustered = buckets.fold("")(n =>
+        s"CLUSTERED BY ($cols) SORTED BY ($cols) INTO $n BUCKETS ")
       s.sql(s"CREATE TABLE $table ($schemaDdl) USING PARQUET " +
-        s"CLUSTERED BY (${bucketCols.mkString(", ")}) " +
-        s"SORTED BY (${bucketCols.mkString(", ")}) " +
-        s"INTO $buckets BUCKETS LOCATION '$dataPath'")
+        s"${clustered}LOCATION '$dataPath'")
+    }
     s.table(table)
   }
 
@@ -320,54 +333,29 @@ object Cache {
     val verDir = root.resolve(s"v_$h")
     val table = s"graft_idx_${san(dir)}_${san(name)}_$h"
     val dataPath = s"$verDir/data"
-    validMeta(verDir, fp) match {
-      case Some((buckets, schemaDdl)) =>
-        attach(s, table, schemaDdl, bucketCols, buckets, dataPath)
-      case None =>
-        // Persist and materialize once: the measured bytes size the
-        // bucket count, and the write reads the cache instead of
-        // re-running the build lineage.
-        val df = build.persist(StorageLevel.MEMORY_AND_DISK)
-        try {
-          df.write.format("noop").mode("overwrite").save()
-          val buckets = bucketCount(cachedBytes(s, df),
-            s.sessionState.conf.getConf(
-              org.apache.spark.sql.internal.SQLConf
-                .ADVISORY_PARTITION_SIZE_IN_BYTES),
-            s.sparkContext.defaultParallelism)
-          val schemaDdl = df.schema.toDDL
-          // Private build dir; `meta` is written LAST so a dir that
-          // carries one is complete by construction.
-          val tmp = root.resolve(s".tmp_${pid}_${System.nanoTime()}")
-          val tmpTable = s"${table}_w$pid"
-          s.sql(s"DROP TABLE IF EXISTS $tmpTable")
-          graft.sources.IO.writeBucketed(df, tmpTable, buckets, bucketCols,
-            Some(s"$tmp/data"))
-          s.sql(s"DROP TABLE $tmpTable") // external: the files survive
-          java.nio.file.Files.write(tmp.resolve("meta"),
-            s"$fp\n$buckets\n$schemaDdl"
-              .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          publish(tmp, verDir, fp)
-          gcStale(root, keep = verDir.getFileName.toString)
-          // An entry registered before this build lists files (and may
-          // declare a bucket count) that are gone.
-          s.sql(s"DROP TABLE IF EXISTS $table")
-          // A lost publish race adopts the winner's recorded layout.
-          val (published, ddl) = validMeta(verDir, fp).getOrElse(
-            throw new IllegalStateException(
-              s"diskBacked: $verDir vanished after publish"))
-          attach(s, table, ddl, bucketCols, published, dataPath)
-        } finally df.unpersist(blocking = false)
+    val parallelism = s.sparkContext.defaultParallelism
+    val (recorded, schemaDdl) = validMeta(verDir, fp).getOrElse {
+      val df = build
+      // Private build dir; `meta` is written LAST so a dir that
+      // carries one is complete by construction.
+      val tmp = root.resolve(s".tmp_${pid}_${System.nanoTime()}")
+      val tmpTable = s"${table}_w$pid"
+      s.sql(s"DROP TABLE IF EXISTS $tmpTable")
+      graft.sources.IO.writeBucketed(df, tmpTable, parallelism, bucketCols,
+        Some(s"$tmp/data"))
+      s.sql(s"DROP TABLE $tmpTable") // external: the files survive
+      java.nio.file.Files.write(tmp.resolve("meta"),
+        s"$fp\n$parallelism\n${df.schema.toDDL}"
+          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      publish(tmp, verDir, fp)
+      gcStale(root, keep = verDir.getFileName.toString)
+      // A lost publish race adopts the winner's recorded layout.
+      validMeta(verDir, fp).getOrElse(throw new IllegalStateException(
+        s"diskBacked: $verDir vanished after publish"))
     }
+    attach(s, s"${table}_b$recorded", schemaDdl, bucketCols,
+      declaredBuckets(recorded, parallelism), dataPath)
   }
-
-  /** Bytes of `df`'s materialized cache (the columnar buffers Spark
-    * measured while building them). */
-  private def cachedBytes(s: SparkSession, df: DataFrame): Long =
-    s.sharedState.cacheManager.lookupCachedData(
-      org.apache.spark.sql.classic.ClassicConversions.castToImpl(df))
-      .map(_.cachedRepresentation.computeStats().sizeInBytes.toLong)
-      .getOrElse(0L)
 
   /** Atomically rename the complete temp dir into place. Losing the
     * race to another process's publish is benign: validate the

@@ -34,9 +34,12 @@ object IndexProbe {
         .groupBy("k").agg(count(lit(1)).as("n"), sum("id").as("s"))
     }
 
+  /** Args: `dir name [cpus]`; `cpus` (default 4) sizes the probe's
+    * local master, and with it the bucket count a build records. */
   def main(args: Array[String]): Unit = {
     val Array(dir, name) = args.take(2)
-    val spark = EngineConf.builder(4).getOrCreate()
+    val cpus = args.lift(2).fold(4)(_.toInt)
+    val spark = EngineConf.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val jobs = new AtomicInteger(0)
     val l = new SparkListener {

@@ -59,6 +59,52 @@ class DiskIndexSpec extends SparkSpec {
       frame.orderBy("k").collect().map(_.toSeq).toSeq
   }
 
+  /** The table's declared bucket count, None when unbucketed. */
+  private def numBuckets(table: String): Option[String] =
+    spark.sql(s"DESCRIBE EXTENDED $table").collect()
+      .find(_.getString(0) == "Num Buckets").map(_.getString(1))
+
+  /** The command that runs [[graft.IndexProbe]] in a fresh JVM (fresh
+    * Cache memo and catalog) over (dir, name) with a `cpus`-core
+    * master. This JVM's --add-opens/-D flags pass through
+    * (Spark-on-JDK17 needs them; sbt injected them into THIS fork). */
+  private def probeCmd(dir: String, name: String,
+      cpus: Int): java.util.List[String] = {
+    import scala.jdk.CollectionConverters._
+    val jvmArgs = java.lang.management.ManagementFactory
+      .getRuntimeMXBean.getInputArguments.asScala.toList
+    val passThrough = jvmArgs.zipWithIndex.flatMap { case (a, i) =>
+      if (a == "--add-opens" || a == "--add-exports")
+        List(a, jvmArgs(i + 1))
+      else if (a.startsWith("-Dspark.") || a.startsWith("--add-opens="))
+        List(a)
+      else Nil
+    }
+    (List(System.getProperty("java.home") + "/bin/java") ++ passThrough ++
+      List("-Xmx2g", "-cp", System.getProperty("java.class.path"),
+        "graft.IndexProbe", dir, name, cpus.toString)).asJava
+  }
+
+  /** Waits for a started probe and returns its INDEXPROBE line. */
+  private def probeLine(proc: Process): String = {
+    val out = new String(proc.getInputStream.readAllBytes(),
+      java.nio.charset.StandardCharsets.UTF_8)
+    assert(proc.waitFor(240, java.util.concurrent.TimeUnit.SECONDS),
+      s"probe timed out; output:\n${out.takeRight(2000)}")
+    assert(proc.exitValue() == 0,
+      s"probe exited ${proc.exitValue()}:\n${out.takeRight(2000)}")
+    out.linesIterator.find(_.startsWith("INDEXPROBE"))
+      .getOrElse(fail(s"no INDEXPROBE line:\n${out.takeRight(2000)}"))
+  }
+
+  private def probe(dir: String, name: String, cpus: Int = 4): String =
+    probeLine(new ProcessBuilder(probeCmd(dir, name, cpus))
+      .redirectErrorStream(true).start())
+
+  private def field(line: String, k: String): Long =
+    s""""$k":(-?\\d+)""".r.findFirstMatchIn(line)
+      .getOrElse(fail(s"no $k in: $line")).group(1).toLong
+
   test("first entry builds once; re-entry after clear() reads the " +
       "artifact with the same values and zero rebuilds") {
     val fx = new Fixture("a")
@@ -108,29 +154,22 @@ class DiskIndexSpec extends SparkSpec {
     val r2 = fx.frame.orderBy("k").collect().map(_.toSeq).toSeq
     assert(fx.builds == 1, "catalog re-attach must not rebuild")
     assert(r1 == r2)
-    // The bucket count is sized from the data and the session: a
-    // ~100-byte artifact records one wave (the session's default
-    // parallelism) in its meta, and the fresh catalog declares it.
+    // The bucket count is the writing session's default parallelism:
+    // meta records it, and the fresh catalog declares it.
     val wave = spark.sparkContext.defaultParallelism.toString
     assert(fx.metaLines(1) == wave,
       s"meta must record $wave buckets: ${fx.metaLines}")
-    val buckets = spark.sql(s"DESCRIBE EXTENDED ${fx.tableName}")
-      .collect().find(_.getString(0) == "Num Buckets").map(_.getString(1))
-    assert(buckets.contains(wave),
-      s"re-attached table must declare the recorded count, saw $buckets")
+    assert(numBuckets(fx.tableName).contains(wave),
+      s"re-attached table must declare the recorded count")
   }
 
-  test("bucket count: one per advisory partition size, at least one " +
-      "wave") {
-    val adv = 64L << 20
-    Seq(1, 4).foreach { wave =>
-      assert(Cache.bucketCount(0L, adv, wave) == wave)
-      assert(Cache.bucketCount(34L << 10, adv, wave) == wave)
-      assert(Cache.bucketCount(adv, adv, wave) == wave)
-    }
-    assert(Cache.bucketCount(adv + 1, adv, 1) == 2)
-    assert(Cache.bucketCount(10 * adv - 1, adv, 4) == 10)
-    assert(Cache.bucketCount(10 * adv + 1, adv, 4) == 11)
+  test("a reader declares the recorded bucket count only when it " +
+      "fills the reader's wave") {
+    assert(Cache.declaredBuckets(4, 4) == Some(4))
+    assert(Cache.declaredBuckets(32, 4) == Some(32))
+    assert(Cache.declaredBuckets(1, 1) == Some(1))
+    assert(Cache.declaredBuckets(1, 4) == None)
+    assert(Cache.declaredBuckets(2, 4) == None)
   }
 
   test("a v2-layout artifact at the version path is rebuilt, not read") {
@@ -149,7 +188,7 @@ class DiskIndexSpec extends SparkSpec {
   }
 
   test("a version deleted under a live session rebuilds once and " +
-      "re-attaches through a fresh catalog entry") {
+      "re-attaches through the re-listed catalog entry") {
     val fx = new Fixture("del")
     val r1 = fx.rows
     val tbl = fx.tableName
@@ -212,35 +251,8 @@ class DiskIndexSpec extends SparkSpec {
     assert(graft.IndexProbe.builds.get == before + 1,
       "first process must build exactly once")
     // Second process: fresh JVM = fresh Cache memo + fresh catalog.
-    // Pass through this JVM's --add-opens/-D flags (Spark-on-JDK17
-    // needs them; sbt injected them into THIS fork).
-    import scala.jdk.CollectionConverters._
-    val jvmArgs = java.lang.management.ManagementFactory
-      .getRuntimeMXBean.getInputArguments.asScala.toList
-    val passThrough = jvmArgs.zipWithIndex.flatMap { case (a, i) =>
-      if (a == "--add-opens" || a == "--add-exports")
-        List(a, jvmArgs(i + 1))
-      else if (a.startsWith("-Dspark.") || a.startsWith("--add-opens="))
-        List(a)
-      else Nil
-    }
-    val cmd = List(
-      System.getProperty("java.home") + "/bin/java") ++ passThrough ++
-      List("-Xmx2g", "-cp", System.getProperty("java.class.path"),
-        "graft.IndexProbe", dir, name)
-    val pb = new ProcessBuilder(cmd.asJava).redirectErrorStream(true)
-    val proc = pb.start()
-    val out = new String(proc.getInputStream.readAllBytes(),
-      java.nio.charset.StandardCharsets.UTF_8)
-    assert(proc.waitFor(180, java.util.concurrent.TimeUnit.SECONDS),
-      s"second-process probe timed out; output:\n${out.takeRight(2000)}")
-    assert(proc.exitValue() == 0,
-      s"probe exited ${proc.exitValue()}:\n${out.takeRight(2000)}")
-    val line = out.linesIterator.find(_.startsWith("INDEXPROBE"))
-      .getOrElse(fail(s"no INDEXPROBE line:\n${out.takeRight(2000)}"))
-    def field(k: String): Long =
-      s""""$k":(-?\\d+)""".r.findFirstMatchIn(line)
-        .getOrElse(fail(s"no $k in: $line")).group(1).toLong
+    val line = probe(dir, name)
+    def field(k: String): Long = DiskIndexSpec.this.field(line, k)
     assert(field("builds") == 0,
       s"second process re-ran the build lineage: $line")
     assert(field("construct_jobs") == 0,
@@ -256,41 +268,17 @@ class DiskIndexSpec extends SparkSpec {
     val dir = s"/tmp/graft_diskidx_xproc/race${System.nanoTime()}"
     val name = "test.idx.race"
     writeSource(dir, 100)
-    import scala.jdk.CollectionConverters._
-    val jvmArgs = java.lang.management.ManagementFactory
-      .getRuntimeMXBean.getInputArguments.asScala.toList
-    val passThrough = jvmArgs.zipWithIndex.flatMap { case (a, i) =>
-      if (a == "--add-opens" || a == "--add-exports")
-        List(a, jvmArgs(i + 1))
-      else if (a.startsWith("-Dspark.") || a.startsWith("--add-opens="))
-        List(a)
-      else Nil
-    }
-    val cmd = List(
-      System.getProperty("java.home") + "/bin/java") ++ passThrough ++
-      List("-Xmx2g", "-cp", System.getProperty("java.class.path"),
-        "graft.IndexProbe", dir, name)
     val procs = (1 to 2).map { _ =>
-      new ProcessBuilder(cmd.asJava).redirectErrorStream(true).start()
+      new ProcessBuilder(probeCmd(dir, name, 4)).redirectErrorStream(true)
+        .start()
     }
-    val outs = procs.map { p =>
-      val out = new String(p.getInputStream.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8)
-      assert(p.waitFor(240, java.util.concurrent.TimeUnit.SECONDS),
-        s"racer timed out:\n${out.takeRight(1500)}")
-      assert(p.exitValue() == 0,
-        s"racer exited ${p.exitValue()}:\n${out.takeRight(1500)}")
-      out.linesIterator.find(_.startsWith("INDEXPROBE"))
-        .getOrElse(fail(s"no INDEXPROBE line:\n${out.takeRight(1500)}"))
-    }
-    def field(line: String, k: String): Long =
-      s""""$k":(-?\\d+)""".r.findFirstMatchIn(line)
-        .getOrElse(fail(s"no $k in: $line")).group(1).toLong
+    val outs = procs.map(probeLine)
     // Both processes return identical values regardless of who won.
     assert(field(outs(0), "rows") == field(outs(1), "rows") &&
       field(outs(0), "total") == field(outs(1), "total"),
       s"racers disagree: ${outs(0)} vs ${outs(1)}")
     // Exactly one published version dir; no leftover temp dirs.
+    import scala.jdk.CollectionConverters._
     val root = java.nio.file.Paths.get(graft.Cache.SharedRoot)
       .resolve(dir.replaceAll("[^A-Za-z0-9]", "_"))
       .resolve(name.replaceAll("[^A-Za-z0-9]", "_"))
@@ -300,6 +288,58 @@ class DiskIndexSpec extends SparkSpec {
       s"expected one published version, saw: $children")
     assert(!children.exists(_.startsWith(".tmp_")),
       s"leftover temp dirs after the race: $children")
+  }
+
+  test("a version another process republishes after it was deleted " +
+      "under this live session is read with the new file listing, no " +
+      "rebuild here") {
+    val dir = s"/tmp/graft_diskidx_xproc/repub${System.nanoTime()}"
+    val name = "test.idx.repub"
+    writeSource(dir, 100)
+    val before = graft.IndexProbe.builds.get
+    def rows = graft.IndexProbe.indexFrame(spark, dir, name)
+      .orderBy("k").collect().map(_.toSeq).toSeq
+    val r1 = rows
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get(graft.Cache.SharedRoot)
+      .resolve(dir.replaceAll("[^A-Za-z0-9]", "_"))
+      .resolve(name.replaceAll("[^A-Za-z0-9]", "_"))
+    java.nio.file.Files.walk(root).iterator().asScala.toSeq.reverse
+      .filter(_ != root).foreach(java.nio.file.Files.delete(_))
+    val line = probe(dir, name)
+    assert(field(line, "builds") == 1,
+      s"the second process must rebuild the deleted version: $line")
+    Cache.clear(spark, name)
+    assert(rows == r1, "the republished version must return the same rows")
+    assert(graft.IndexProbe.builds.get == before + 1,
+      "this process must read the republished files, not rebuild")
+  }
+
+  test("an index written by a 1-core process is read unbucketed by a " +
+      "4-core session, so its consumers are not capped at one task") {
+    val dir = s"/tmp/graft_diskidx_xproc/narrow${System.nanoTime()}"
+    val name = "test.idx.narrow"
+    writeSource(dir, 100)
+    val line = probe(dir, name, cpus = 1)
+    assert(field(line, "builds") == 1, line)
+    assert(spark.sparkContext.defaultParallelism == 4)
+    val before = graft.IndexProbe.builds.get
+    val df = graft.IndexProbe.indexFrame(spark, dir, name)
+    assert(graft.IndexProbe.builds.get == before,
+      "a narrower writer's artifact is read, not rebuilt")
+    val tbl = spark.catalog.listTables().collect().map(_.name)
+      .find(_.contains("test_idx_narrow"))
+      .getOrElse(fail("no catalog table registered"))
+    assert(tbl.endsWith("_b1"), s"table must carry the recorded count: $tbl")
+    assert(numBuckets(tbl).isEmpty, s"$tbl must be declared unbucketed")
+    // A consumer keyed on the bucket column shuffles to this
+    // session's width instead of inheriting one partition.
+    val agg = df.groupBy("k").agg(sum("n").as("n"))
+    val plan = agg.queryExecution.explainString(ExplainMode.fromString("formatted"))
+    assert(plan.linesIterator.exists(_.trim.matches("\\(\\d+\\) Exchange")),
+      s"expected an exchange on k:\n$plan")
+    assert(df.agg(count(lit(1)), sum("s")).head().toSeq ==
+      Seq(field(line, "rows"), field(line, "total")))
   }
 
   test("ann_ivf reads the vec_id-bucketed artifact: no index build in " +
