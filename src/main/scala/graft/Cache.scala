@@ -127,8 +127,9 @@ object Cache {
     * `dedup.pairs` artifact of sf0.1 as a 32-task stage, 8 waves on 4
     * cores, and made each open a 32-task scan: 128 of a warm
     * `lanes_corpus` pass's 161 tasks). No artifact measured so far
-    * fills one wave of 64 MB partitions, so the count has no size
-    * term. A reader with more cores than the writer declares the
+    * comes near one wave of 64 MB partitions (the largest, the IVF
+    * index of the 10x ScalingBench dir, is 37 MB of parquet), so the
+    * count has no size term. A reader with more cores than the writer declares the
     * table unbucketed ([[declaredBuckets]]): its consumers then pay
     * one exchange at the reader's width instead of running in the
     * writer's few tasks.
@@ -149,11 +150,11 @@ object Cache {
     *      its source fingerprint — versions are immutable, so readers
     *      never observe in-place mutation;
     *   2. a builder writes data into a private `.tmp_<pid>_<nonce>`
-    *      dir, writes `meta` (fingerprint + schema DDL) LAST, then
-    *      atomically rename(2)s the whole dir into place — a version
-    *      dir that exists is therefore always complete, and a crashed
-    *      builder leaves only an unreferenced temp dir (GC'd after an
-    *      hour by the next builder);
+    *      dir, writes `meta` (fingerprint, bucket count, schema DDL)
+    *      LAST, then atomically rename(2)s the whole dir into place —
+    *      a version dir that exists is therefore always complete, and
+    *      a crashed builder leaves only an unreferenced temp dir
+    *      (GC'd after an hour by the next builder);
     *   3. losing a publish race is benign: the mover that finds the
     *      destination already present VALIDATES the winner's meta
     *      against its own fingerprint and adopts it, discarding its
@@ -172,10 +173,10 @@ object Cache {
     * first: the SAME version may have been rebuilt since (its dir
     * deleted under a live session and republished by this or another
     * process), and the cached relation lists the deleted files.
-    * Superseded version dirs
-    * are deleted after a successful publish — they are unreachable
-    * for any process that fingerprints the current source, and an
-    * in-flight scan of one survives on POSIX unlink semantics.
+    * Superseded version dirs are deleted after a successful publish —
+    * they are unreachable for any process that fingerprints the
+    * current source, and an in-flight scan of one survives on POSIX
+    * unlink semantics.
     *
     * The returned frame still goes through [[cached]] (persisted
     * MEMORY_AND_DISK): repeated consumers inside one query pass hit
