@@ -196,8 +196,18 @@ object Tables {
       spark.conf.set(k, "true")
   }
 
-  /** events with `ts` normalized to session-TZ TimestampType, whatever
-    * vintage the parquet is:
+  /** events with `ts` normalized by [[normalizeEvents]]. */
+  def events(spark: SparkSession, dir: String): DataFrame =
+    loaded(spark, dir, "events") {
+      // Runtime-settable; must be on BEFORE the read in case the data is
+      // the ns vintage (the read itself throws without it).
+      ensureNanosAsLong(spark)
+      normalizeEvents(spark.read.parquet(path(dir, "events")))
+    }
+
+  /** A raw events read, batch or streaming, checked against the
+    * declared schema and with `ts` normalized to session-TZ
+    * TimestampType, whatever vintage the parquet is:
     *  - bigint (ns-as-long vintage): integer-divide ns→µs (`ts div
     *    1000`, NOT double division which loses precision above 2^53 ns)
     *    — matches DuckDB's native ns→µs truncation exactly.
@@ -206,21 +216,16 @@ object Tables {
     *    (build.sbt, Verify, Bench), so the cast is value-preserving
     *    and output schemas stay identical across vintages.
     *  - TimestampType: already what we want. */
-  def events(spark: SparkSession, dir: String): DataFrame =
-    loaded(spark, dir, "events") {
-      // Runtime-settable; must be on BEFORE the read in case the data is
-      // the ns vintage (the read itself throws without it).
-      ensureNanosAsLong(spark)
-      val raw = spark.read.parquet(path(dir, "events"))
-      assertSchema("events", raw.schema)
-      raw.schema("ts").dataType match {
-        case LongType =>
-          raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-        case TimestampNTZType =>
-          raw.withColumn("ts", col("ts").cast("timestamp"))
-        case TimestampType => raw
-        case other => throw new IllegalStateException( // unreachable past assertSchema
-          s"Tables.events.ts: got ${other.sql}")
-      }
+  private[graft] def normalizeEvents(raw: DataFrame): DataFrame = {
+    assertSchema("events", raw.schema)
+    raw.schema("ts").dataType match {
+      case LongType =>
+        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
+      case TimestampNTZType =>
+        raw.withColumn("ts", col("ts").cast("timestamp"))
+      case TimestampType => raw
+      case other => throw new IllegalStateException( // unreachable past assertSchema
+        s"Tables.events.ts: got ${other.sql}")
     }
+  }
 }

@@ -17,19 +17,28 @@ import org.apache.spark.sql.functions.call_function
   */
 object GraftFunctions {
 
-  private val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    "vec_dot" -> (es => VecDot(es(0), es(1))),
-    "fingerprint_hash" -> (es => expressions.FingerprintHash(es(0))),
-    "ray_cast" -> (es => expressions.RayCast(es(0), es(1), es(2))),
-    "char_ngrams" -> (es => expressions.CharNgrams(es(0), es(1))),
-    "lsh_signature" ->
-      (es => expressions.LshSignature(es(0), es(1), es(2))),
-    "simhash64" -> (es => expressions.SimHash64(es(0))),
-    "minhash3" -> (es => expressions.MinHash3(es(0), es(1))))
+  /** Every native function as (SQL name, expression class, builder):
+    * the one list both registration paths read. */
+  private[functions] val natives
+      : Seq[(String, Class[_ <: Expression], Seq[Expression] => Expression)] =
+    Seq(
+      ("vec_dot", classOf[VecDot], es => VecDot(es(0), es(1))),
+      ("fingerprint_hash", classOf[expressions.FingerprintHash],
+        es => expressions.FingerprintHash(es(0))),
+      ("ray_cast", classOf[expressions.RayCast],
+        es => expressions.RayCast(es(0), es(1), es(2))),
+      ("char_ngrams", classOf[expressions.CharNgrams],
+        es => expressions.CharNgrams(es(0), es(1))),
+      ("lsh_signature", classOf[expressions.LshSignature],
+        es => expressions.LshSignature(es(0), es(1), es(2))),
+      ("simhash64", classOf[expressions.SimHash64],
+        es => expressions.SimHash64(es(0))),
+      ("minhash3", classOf[expressions.MinHash3],
+        es => expressions.MinHash3(es(0), es(1))))
 
   def ensureRegistered(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    builders.foreach { case (name, b) =>
+    natives.foreach { case (name, _, b) =>
       if (!reg.functionExists(FunctionIdentifier(name)))
         reg.createOrReplaceTempFunction(name, b, "built-in")
     }
@@ -118,40 +127,9 @@ object GraftFunctions {
 
 /** Session-extension registration: add to `spark.sql.extensions`. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("vec_dot"),
-      new ExpressionInfo(classOf[VecDot].getName, "vec_dot"),
-      (es: Seq[Expression]) => VecDot(es(0), es(1))))
-    ext.injectFunction((
-      FunctionIdentifier("fingerprint_hash"),
-      new ExpressionInfo(
-        classOf[expressions.FingerprintHash].getName, "fingerprint_hash"),
-      (es: Seq[Expression]) => expressions.FingerprintHash(es(0))))
-    ext.injectFunction((
-      FunctionIdentifier("ray_cast"),
-      new ExpressionInfo(classOf[expressions.RayCast].getName, "ray_cast"),
-      (es: Seq[Expression]) => expressions.RayCast(es(0), es(1), es(2))))
-    ext.injectFunction((
-      FunctionIdentifier("char_ngrams"),
-      new ExpressionInfo(
-        classOf[expressions.CharNgrams].getName, "char_ngrams"),
-      (es: Seq[Expression]) => expressions.CharNgrams(es(0), es(1))))
-    ext.injectFunction((
-      FunctionIdentifier("lsh_signature"),
-      new ExpressionInfo(
-        classOf[expressions.LshSignature].getName, "lsh_signature"),
-      (es: Seq[Expression]) =>
-        expressions.LshSignature(es(0), es(1), es(2))))
-    ext.injectFunction((
-      FunctionIdentifier("simhash64"),
-      new ExpressionInfo(
-        classOf[expressions.SimHash64].getName, "simhash64"),
-      (es: Seq[Expression]) => expressions.SimHash64(es(0))))
-    ext.injectFunction((
-      FunctionIdentifier("minhash3"),
-      new ExpressionInfo(
-        classOf[expressions.MinHash3].getName, "minhash3"),
-      (es: Seq[Expression]) => expressions.MinHash3(es(0), es(1))))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftFunctions.natives.foreach { case (name, cls, b) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name), b))
+    }
 }

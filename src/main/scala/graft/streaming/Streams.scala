@@ -1,6 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -91,27 +93,18 @@ object Streams {
   /** File-source entry: stream the events table from a directory of
     * parquet files. The schema is pinned from a RAW batch read (the
     * PHYSICAL schema — pinning the post-conversion timestamp schema
-    * would mis-read a bigint-nanos file), then the same per-vintage ts
-    * normalization as `Tables.events` is applied on the stream: bigint
-    * nanos → `timestamp_micros(ts div 1000)`, TIMESTAMP_NTZ →
-    * session-TZ cast, TimestampType → passthrough. */
+    * would mis-read a bigint-nanos file), then
+    * [[graft.Tables.normalizeEvents]] applies the batch loader's
+    * per-vintage ts normalization on the stream. */
   def eventsStream(spark: SparkSession, dir: String): DataFrame = {
     // Session-lifetime conf flip, documented at Tables.ensureNanosAsLong.
     graft.Tables.ensureNanosAsLong(spark)
     val rawSchema = spark.read.parquet(s"$dir/events.parquet").schema
-    graft.Tables.assertSchema("events", rawSchema)
     // The file source monitors a DIRECTORY; pathGlobFilter pins it to
     // the events table within the shared scale-factor dir.
-    val raw = spark.readStream.schema(rawSchema)
+    graft.Tables.normalizeEvents(spark.readStream.schema(rawSchema)
       .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
-    rawSchema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        raw.withColumn("ts", col("ts").cast("timestamp"))
-      case _ => raw
-    }
+      .parquet(dir))
   }
 
   /** 1-hour tumbling counts+sums per event type (twin of
@@ -156,189 +149,153 @@ object Streams {
       .dropDuplicatesWithinWatermark("user_id", "event_type")
       .select("user_id", "event_type", "event_id", "ts")
 
-  /** Sessionization with EXPLICIT custom state via
-    * flatMapGroupsWithState — the escape hatch for session semantics
-    * `session_window` can't express (e.g. value-dependent gaps, session
-    * caps). Per-key state is one open session; closed sessions emit as
-    * soon as the gap that closes them is seen. The final open session
-    * per user stays in state (would emit on timeout in production —
-    * see the scaladoc note).
+  /** The per-vessel event-time fold every custom-state twin runs on:
+    * groups the events by `user_id`, replays each key's micro-batch
+    * in (ts, event_id) order and writes the key's last state back.
+    * `step(uid, emit)` is called once per key and micro-batch; it
+    * returns the per-report update `(state, t, report) => state`,
+    * with `t` the report's epoch µs and `state` None before the key's
+    * first report, and emits output through `emit`. State is one `S`
+    * per key, so the store holds O(active keys) rows, never O(events),
+    * and keys shard across shuffle partitions. The last state per key
+    * stays in the store when input ends (NoTimeout; production would
+    * emit it on a timeout).
     *
-    * LATE EVENTS: a cross-micro-batch straggler (event time before
-    * the key's stored `last`) is DROPPED, the same policy the
+    * LATE EVENTS: `mark` reads the state's event-time high-water
+    * mark. A report below the stored mark is a cross-micro-batch
+    * straggler and is DROPPED before `step` sees it, the policy the
     * engine's watermark applies to late rows before stateful ops.
-    * Without the guard a stale report would extend the open session
-    * and drag `last` backwards, silently diverging from the batch
-    * collapse. Within a micro-batch, sorting handles disorder;
-    * stream == batch parity therefore requires only that batches
-    * arrive per-key non-overlapping in event time (StreamingSpec
-    * proves parity on ordered splits and pins the drop on a
-    * crafted straggler).
-    *
-    * At scale: state size is O(active keys), not O(events); keys
-    * shard across shuffle partitions.
-    */
-  def statefulSessions(events: Dataset[EventRow]): Dataset[SessionOut] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessionState, SessionOut](
+    * Kept, a stale report would extend an open voyage and drag its
+    * `last` and `d_zone` backwards, emit a transition pair out of
+    * sequence or roll a carried value back. Within a micro-batch the
+    * replay order handles disorder, so stream == batch parity needs
+    * only that batches arrive per key non-overlapping in event time
+    * (StreamingSpec proves parity on ordered splits and pins the drop
+    * on a crafted straggler for every twin). A twin without a mark
+    * sees every report. */
+  private def fold[S <: Product : TypeTag, O <: Product : TypeTag](
+      events: Dataset[EventRow], mark: Option[S => Long])(
+      step: (Long, O => Unit) => (Option[S], Long, EventRow) => S)
+      : Dataset[O] =
+    events.groupByKey(_.user_id)(Encoders.scalaLong)
+      .flatMapGroupsWithState[S, O](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (uid: Long, it: Iterator[EventRow], state: GroupState[SessionState]) =>
-          var open = state.getOption
-          val out = Seq.newBuilder[SessionOut]
+        (uid: Long, it: Iterator[EventRow], state: GroupState[S]) =>
+          val out = Seq.newBuilder[O]
+          val update = step(uid, out += _)
+          var cur = state.getOption
           inEventTime(it).foreach { case (t, e) =>
-            open match {
-              case Some(s) if t < s.last => () // late straggler: drop
-              case Some(s) if t - s.last <= Voyages.GapMicros =>
-                open = Some(s.copy(last = t, n = s.n + 1,
-                  sum = s.sum + e.value))
-              case Some(s) =>
-                out += SessionOut(uid, s.n, toTs(s.start), toTs(s.last),
-                  math.round(s.sum * 100).toDouble / 100)
-                open = Some(SessionState(t, t, 1, e.value))
-              case None =>
-                open = Some(SessionState(t, t, 1, e.value))
-            }
+            if (!cur.exists(s => mark.exists(t < _(s))))
+              cur = Some(update(cur, t, e))
           }
-          open.foreach(state.update)
+          cur.foreach(state.update)
           out.result().iterator
+      }(Encoders.product[S], Encoders.product[O])
+
+  /** The >30-min split on top of [[fold]], for sessions and voyages:
+    * a report more than [[Voyages.GapMicros]] after the open
+    * segment's `last` report closes it (`close` emits it) and opens
+    * the next; any other report `extend`s the open segment. `last` is
+    * also the fold's mark. */
+  private def gapSplit[S <: Product : TypeTag, O <: Product : TypeTag](
+      events: Dataset[EventRow], last: S => Long)(
+      open: (Long, EventRow) => S, extend: (S, Long, EventRow) => S,
+      close: (Long, S) => O): Dataset[O] =
+    fold[S, O](events, Some(last)) { (uid, emit) => (cur, t, e) =>
+      cur match {
+        case Some(s) if t - last(s) <= Voyages.GapMicros => extend(s, t, e)
+        case Some(s) => emit(close(uid, s)); open(t, e)
+        case None => open(t, e)
       }
-  }
+    }
+
+  /** Sessionization with EXPLICIT custom state ([[fold]]) — the escape
+    * hatch for session semantics `session_window` can't express (e.g.
+    * value-dependent gaps, session caps). Per-key state is one open
+    * session; closed sessions emit as soon as the gap that closes them
+    * is seen. The final open session per user stays in state. */
+  def statefulSessions(events: Dataset[EventRow]): Dataset[SessionOut] =
+    gapSplit[SessionState, SessionOut](events, _.last)(
+      open = (t, e) => SessionState(t, t, 1, e.value),
+      extend = (s, t, e) =>
+        s.copy(last = t, n = s.n + 1, sum = s.sum + e.value),
+      close = (uid, s) => SessionOut(uid, s.n, toTs(s.start), toTs(s.last),
+        math.round(s.sum * 100).toDouble / 100))
 
   /** Streaming twin of geo_od_matrix's per-voyage collapse: voyages
     * close and emit their (origin zone, destination zone, points) the
     * moment the >30-min report gap that ends them arrives — the
     * live shipping-lanes feed (the OD matrix is a downstream
     * aggregation of this stream). Same state discipline as
-    * [[statefulSessions]]: one open voyage per vessel, O(active keys)
-    * state, the final open voyage stays in state when input ends —
-    * and the same LATE-EVENT guard: a straggler behind the vessel's
-    * stored `last` is dropped (it would otherwise overwrite d_zone
-    * with a stale position and extend the voyage). */
-  def statefulVoyages(events: Dataset[EventRow]): Dataset[VoyageOut] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[VoyageState, VoyageOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (uid: Long, it: Iterator[EventRow], state: GroupState[VoyageState]) =>
-          var open = state.getOption
-          val out = Seq.newBuilder[VoyageOut]
-          inEventTime(it).foreach { case (t, e) =>
-            val z = Voyages.zoneOf(e.event_id)
-            open match {
-              case Some(v) if t < v.last => () // late straggler: drop
-              case Some(v) if t - v.last <= Voyages.GapMicros =>
-                open = Some(v.copy(last = t, dZone = z, n = v.n + 1))
-              case Some(v) =>
-                out += VoyageOut(uid, v.oZone, v.dZone, v.n)
-                open = Some(VoyageState(z, t, z, 1))
-              case None =>
-                open = Some(VoyageState(z, t, z, 1))
-            }
-          }
-          open.foreach(state.update)
-          out.result().iterator
-      }
-  }
+    * [[statefulSessions]]: one open voyage per vessel, the final open
+    * voyage stays in state when input ends. */
+  def statefulVoyages(events: Dataset[EventRow]): Dataset[VoyageOut] =
+    gapSplit[VoyageState, VoyageOut](events, _.last)(
+      open = (t, e) => {
+        val z = Voyages.zoneOf(e.event_id)
+        VoyageState(z, t, z, 1)
+      },
+      extend = (v, t, e) =>
+        v.copy(last = t, dZone = Voyages.zoneOf(e.event_id), n = v.n + 1),
+      close = (uid, v) => VoyageOut(uid, v.oZone, v.dZone, v.n))
 
   /** Streaming twin of events_markov's pair stream: each event emits
     * the (previous type → this type) transition for its user the
     * moment it arrives; the batch transition MATRIX is the tiny
     * (from, to) aggregation of this stream. State per key is ONE
-    * string plus the event-time high-water mark — and the same
-    * LATE-EVENT guard as [[statefulSessions]]: a straggler behind
-    * the stored mark is dropped rather than emitting a transition
-    * pair out of sequence. The live form of sequence mining (a
-    * downstream windowed agg gives per-hour transition matrices for
-    * drift detection). */
-  def statefulTransitions(events: Dataset[EventRow]): Dataset[TransitionOut] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[TransitionState, TransitionOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (uid: Long, it: Iterator[EventRow],
-            state: GroupState[TransitionState]) =>
-          var last = state.getOption
-          val out = Seq.newBuilder[TransitionOut]
-          inEventTime(it).foreach { case (t, e) =>
-            if (!last.exists(t < _.last)) { // late straggler: drop
-              last.foreach(l => out += TransitionOut(uid, l.lastType,
-                e.event_type))
-              last = Some(TransitionState(e.event_type, t))
-            }
-          }
-          last.foreach(state.update)
-          out.result().iterator
-      }
-  }
+    * string plus the event-time mark. The live form of sequence
+    * mining (a downstream windowed agg gives per-hour transition
+    * matrices for drift detection). */
+  def statefulTransitions(events: Dataset[EventRow]): Dataset[TransitionOut] =
+    fold[TransitionState, TransitionOut](events, Some(_.last)) {
+      (uid, emit) => (prev, t, e) =>
+        prev.foreach(p => emit(TransitionOut(uid, p.lastType, e.event_type)))
+        TransitionState(e.event_type, t)
+    }
 
   /** Streaming twin of window_gap_fill (last-observation-carried-
     * forward): every event emits the user's last KNOWN purchase value
     * the moment it arrives — the live sensor-repair feed. State per
-    * key is one double + the high-water mark; same late-straggler
-    * drop as [[statefulSessions]] (a stale report must not roll the
-    * carried value backwards). StreamingSpec proves the emitted
-    * stream equals the batch LOCF window across split micro-batches. */
-  def statefulGapFill(events: Dataset[EventRow]): Dataset[GapFillOut] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[GapFillState, GapFillOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (uid: Long, it: Iterator[EventRow], state: GroupState[GapFillState]) =>
-          var s = state.getOption.getOrElse(GapFillState(0.0, false, -1L))
-          val out = Seq.newBuilder[GapFillOut]
-          inEventTime(it).foreach { case (t, e) =>
-            if (t >= s.last) { // late straggler: drop
-              if (e.event_type == "purchase")
-                s = GapFillState(e.value, hasValue = true, t)
-              else s = s.copy(last = t)
-              out += GapFillOut(uid, e.event_id, e.event_type,
-                if (s.hasValue) Double.box(s.value) else null)
-            }
-          }
-          state.update(s)
-          out.result().iterator
-      }
-  }
+    * key is one double + the event-time mark. StreamingSpec proves
+    * the emitted stream equals the batch LOCF window across split
+    * micro-batches. */
+  def statefulGapFill(events: Dataset[EventRow]): Dataset[GapFillOut] =
+    fold[GapFillState, GapFillOut](events, Some(_.last)) {
+      (uid, emit) => (prev, t, e) =>
+        val s =
+          if (e.event_type == "purchase")
+            GapFillState(e.value, hasValue = true, t)
+          else prev.fold(GapFillState(0.0, false, t))(_.copy(last = t))
+        emit(GapFillOut(uid, e.event_id, e.event_type,
+          if (s.hasValue) Double.box(s.value) else null))
+        s
+    }
 
   /** Streaming twin of geo_zone_entries (port-call counting): a
     * vessel's report emits a (zone, entry) record the moment it
     * crosses INTO a polygon zone — the live berth/port-arrival feed.
     * Per-key state is the vessel's current inside-set (|zones|
-    * booleans) + the event-time high-water mark, with the same
-    * late-straggler drop as the other custom-state ops. The ray cast
-    * is GeoOps.insideOf — the plain-Scala twin of the native RayCast
+    * booleans) + the event-time mark. The ray cast is
+    * GeoOps.insideOf — the plain-Scala twin of the native RayCast
     * expression, so stream == batch parity (StreamingSpec, split
     * micro-batches) transitively proves all three formulations
     * agree. An absent zone key counts as outside, so a vessel's
     * first inside report IS an entry — the batch lag-null semantics. */
   def statefulZoneEntries(events: Dataset[EventRow]): Dataset[ZoneEntryOut] = {
-    import events.sparkSession.implicits._
     val zones = graft.operators.GeoOps.zonePolygons
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[ZoneEntryState, ZoneEntryOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (uid: Long, it: Iterator[EventRow],
-            state: GroupState[ZoneEntryState]) =>
-          var s = state.getOption.getOrElse(
-            ZoneEntryState(Map.empty, Long.MinValue))
-          val out = Seq.newBuilder[ZoneEntryOut]
-          inEventTime(it).foreach { case (t, e) =>
-            if (t >= s.last) { // late straggler: drop
-              val (px, py) = Voyages.pxpy(e.event_id)
-              val now = zones.map { case (z, verts) =>
-                z -> graft.operators.GeoOps.insideOf(verts, px, py)
-              }.toMap
-              now.foreach { case (z, in) =>
-                if (in && !s.inside.getOrElse(z, false))
-                  out += ZoneEntryOut(uid, z, e.ts)
-              }
-              s = ZoneEntryState(now, t)
-            }
-          }
-          state.update(s)
-          out.result().iterator
-      }
+    fold[ZoneEntryState, ZoneEntryOut](events, Some(_.last)) {
+      (uid, emit) => (prev, t, e) =>
+        val (px, py) = Voyages.pxpy(e.event_id)
+        val now = zones.map { case (z, verts) =>
+          z -> graft.operators.GeoOps.insideOf(verts, px, py)
+        }.toMap
+        val before = prev.fold(Map.empty[String, Boolean])(_.inside)
+        now.foreach { case (z, in) =>
+          if (in && !before.getOrElse(z, false))
+            emit(ZoneEntryOut(uid, z, e.ts))
+        }
+        ZoneEntryState(now, t)
+    }
   }
 
   /** Streaming twin of events_funnel: per-user funnel PROGRESSION
@@ -346,37 +303,30 @@ object Streams {
     * user's earliest qualifying event for a stage is seen (stage k
     * must strictly follow the user's stage-(k−1) time, the batch
     * query's semantics). State per key is three epoch-micros longs,
-    * O(active users) total. Greedy in-order processing equals the
-    * batch min-based formulation when the feed is ts-ordered (same
-    * caveat as [[dedup]]); an out-of-order view behind the watermark
-    * could lower t1 in batch but not here — production would pair
-    * this with a watermark-delayed source sort. */
-  def statefulFunnel(events: Dataset[EventRow]): Dataset[FunnelOut] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[FunnelState, FunnelOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (uid: Long, it: Iterator[EventRow], state: GroupState[FunnelState]) =>
-          var s = state.getOption.getOrElse(FunnelState(-1L, -1L, -1L))
-          val out = Seq.newBuilder[FunnelOut]
-          inEventTime(it).foreach { case (t, e) =>
-            if (e.event_type == "view" && s.t1 < 0) {
-              s = s.copy(t1 = t)
-              out += FunnelOut(uid, "1_view", toTs(t))
-            } else if (e.event_type == "click"
-                && s.t1 >= 0 && s.t2 < 0 && t > s.t1) {
-              s = s.copy(t2 = t)
-              out += FunnelOut(uid, "2_click", toTs(t))
-            } else if (e.event_type == "purchase"
-                && s.t2 >= 0 && s.t3 < 0 && t > s.t2) {
-              s = s.copy(t3 = t)
-              out += FunnelOut(uid, "3_purchase", toTs(t))
-            }
-          }
-          state.update(s)
-          out.result().iterator
-      }
-  }
+    * O(active users) total. It has no mark, so [[fold]] drops no
+    * report: a late first view still sets t1, as the batch `min`
+    * does. Greedy in-order processing equals the batch min-based
+    * formulation when the feed is ts-ordered (same caveat as
+    * [[dedup]]); an out-of-order view behind the watermark could
+    * lower t1 in batch but not here — production would pair this
+    * with a watermark-delayed source sort. */
+  def statefulFunnel(events: Dataset[EventRow]): Dataset[FunnelOut] =
+    fold[FunnelState, FunnelOut](events, None) {
+      (uid, emit) => (prev, t, e) =>
+        val s = prev.getOrElse(FunnelState(-1L, -1L, -1L))
+        if (e.event_type == "view" && s.t1 < 0) {
+          emit(FunnelOut(uid, "1_view", toTs(t)))
+          s.copy(t1 = t)
+        } else if (e.event_type == "click"
+            && s.t1 >= 0 && s.t2 < 0 && t > s.t1) {
+          emit(FunnelOut(uid, "2_click", toTs(t)))
+          s.copy(t2 = t)
+        } else if (e.event_type == "purchase"
+            && s.t2 >= 0 && s.t3 < 0 && t > s.t2) {
+          emit(FunnelOut(uid, "3_purchase", toTs(t)))
+          s.copy(t3 = t)
+        } else s
+    }
 
   /** Stream-stream interval self-join (streaming twin of
     * join_theta_range): each click paired with the same user's views

@@ -25,6 +25,22 @@ class SourceLintSpec extends AnyFunSuite {
       .map(p => root.relativize(p).toString -> Files.readString(p))
       .toMap
 
+  /** The non-comment lines of `src`, with their 0-based line index. */
+  private def code(src: String): Seq[(String, Int)] =
+    src.linesIterator.zipWithIndex.filterNot { case (l, _) =>
+      val t = l.trim
+      t.startsWith("*") || t.startsWith("/*") || t.startsWith("//")
+    }.toSeq
+
+  /** (file, line index) of every code line in `src/main` matching
+    * `rule`, one entry per match. */
+  private def codeHits(rule: String): Seq[(String, Int)] =
+    sources.toSeq.sortBy(_._1).flatMap { case (f, src) =>
+      code(src).flatMap { case (l, i) =>
+        rule.r.findAllMatchIn(l).map(_ => f -> i)
+      }
+    }
+
   private val kept = Set(
     "graft.Bench", "graft.Verify", "graft.Explain", "graft.ScaleFixture",
     "graft.ScalingBench", "graft.streaming.StreamScale",
@@ -97,17 +113,8 @@ class SourceLintSpec extends AnyFunSuite {
     // minhash3, and Dedup.minhash keeps the aggregate as its
     // executable spec.
     val dedup = "graft/operators/Dedup.scala"
-    val rule = "\\bhash\\([^()]*(\\([^()]*\\))?[^()]*,\\s*lit\\(".r
-    def code(src: String): Seq[(String, Int)] =
-      src.linesIterator.zipWithIndex.filterNot { case (l, _) =>
-        val t = l.trim
-        t.startsWith("*") || t.startsWith("/*") || t.startsWith("//")
-      }.toSeq
-    val hits = sources.toSeq.sortBy(_._1).flatMap { case (f, src) =>
-      code(src).collect {
-        case (l, i) if rule.findFirstIn(l).isDefined => f -> i
-      }
-    }
+    val hits =
+      codeHits("\\bhash\\([^()]*(\\([^()]*\\))?[^()]*,\\s*lit\\(")
     assert(hits.map(_._1).toSet == Set(dedup),
       s"MinHash aggregate outside the spec: ${hits.map(_._1).distinct}")
     val defs = code(sources(dedup)).collect {
@@ -119,6 +126,21 @@ class SourceLintSpec extends AnyFunSuite {
       defs.lift(spec + 1).map(_._2).getOrElse(Int.MaxValue))
     assert(hits.forall { case (_, i) => i > from && i < until },
       "the MinHash aggregate appears outside Dedup.minhash")
+  }
+
+  test("the stateful stream twins share one per-vessel fold and one" +
+      " voyage split") {
+    // Streams.fold is the only flatMapGroupsWithState call: the
+    // late-report rule, the replay order and the state write live
+    // there once. Streams.gapSplit is the only Scala use of the voyage
+    // gap, shared by the session and voyage twins.
+    val streams = "graft/streaming/Streams.scala"
+    val folds = codeHits("\\bflatMapGroupsWithState\\b")
+    assert(folds.map(_._1) == Seq(streams),
+      s"flatMapGroupsWithState sites: ${folds.mkString(", ")}")
+    val gaps = codeHits("\\bVoyages\\.GapMicros\\b").filter(_._1 == streams)
+    assert(gaps.size == 1, s"Voyages.GapMicros in Streams at lines " +
+      gaps.map(_._2 + 1).mkString(", "))
   }
 
   test("the command-line mains are exactly the kept list") {

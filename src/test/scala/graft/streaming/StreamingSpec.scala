@@ -1,9 +1,10 @@
 package graft.streaming
 
 import graft.SparkSpec
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 case class Ev(event_id: Long, ts: java.sql.Timestamp, user_id: Long,
     event_type: String, value: Double)
@@ -289,6 +290,92 @@ class StreamingSpec extends SparkSpec {
     assert(trans.length == 3 &&
       trans.forall(r => r.getString(1) == "view" && r.getString(2) == "view"),
       s"straggler emitted a transition: ${trans.mkString(";")}")
+  }
+
+  test("late-report rule, every twin: a marked twin drops the" +
+      " cross-batch straggler as if it never came; the funnel keeps it") {
+    // The timeline of the straggler case above: batch 1 reports at
+    // 10:00, 10:10, 10:20; batch 2 a 10:05 straggler and a 10:25
+    // report; batch 3 a 12:00 gap-closer. The straggler's event_id
+    // (17) places it in alpha_basin, where no other report is, so the
+    // zone-entry twin would see it too. Each twin's output over the
+    // three batches is compared with two references: the same batches
+    // without the straggler, and one in-order batch with it.
+    val s = spark
+    import s.implicits._
+    implicit val ctx = s.sqlContext
+    def ev(id: Long, minute: Int, typ: String) =
+      Ev(id, java.sql.Timestamp.valueOf(
+        java.time.LocalDateTime.of(2024, 1, 1, 10, 0).plusMinutes(minute)),
+        1L, typ, 1.0)
+    val straggler = ev(17, 5, "click")
+    val b1 = Seq(ev(1, 0, "view"), ev(2, 10, "view"), ev(3, 20, "view"))
+    val b2 = Seq(straggler, ev(5, 25, "view"))
+    val b3 = Seq(ev(6, 120, "view"))
+    def run(name: String, twin: Dataset[EventRow] => Dataset[_],
+        batches: Seq[Seq[Ev]]): Seq[String] = {
+      val ms = MemoryStream[Ev]
+      val q = twin(ms.toDF().as[EventRow]).toDF().writeStream
+        .format("memory").queryName(name).outputMode("append").start()
+      try batches.foreach { b => ms.addData(b); q.processAllAvailable() }
+      finally q.stop()
+      spark.table(name).collect().map(_.mkString("|")).toSeq.sorted
+    }
+    val twins = Seq[(String, Dataset[EventRow] => Dataset[_], Boolean)](
+      ("sessions", Streams.statefulSessions, true),
+      ("voyages", Streams.statefulVoyages, true),
+      ("transitions", Streams.statefulTransitions, true),
+      ("gapfill", Streams.statefulGapFill, true),
+      ("zoneentries", Streams.statefulZoneEntries, true),
+      ("funnel", Streams.statefulFunnel, false))
+    twins.foreach { case (name, twin, marked) =>
+      val late = run(s"t_lr_$name", twin, Seq(b1, b2, b3))
+      val without = run(s"t_lr_${name}_without", twin,
+        Seq(b1, b2.filterNot(_ == straggler), b3))
+      val inOrder = run(s"t_lr_${name}_inorder", twin, Seq(b1 ++ b2 ++ b3))
+      assert(without != inOrder, s"$name: the straggler changes nothing")
+      if (marked) assert(late == without,
+        s"$name kept the straggler: ${late.mkString("; ")}")
+      else assert(late == inOrder,
+        s"$name dropped the straggler: ${late.mkString("; ")}")
+    }
+  }
+
+  test("statefulVoyages' state store holds VoyageState (oZone, last," +
+      " dZone, n), and sum(n) is the open voyages' points") {
+    // The ais_stream benchmark reads value.groupState.n from this
+    // checkpoint to count the rows left in open voyages; a renamed or
+    // wrapped state class would break it and stop old checkpoints
+    // from restoring.
+    val s = spark
+    import s.implicits._
+    implicit val ctx = s.sqlContext
+    val ckpt = java.nio.file.Files
+      .createTempDirectory("graft-voy-state").toString
+    val (b1, b2) = batchEvents.splitAt(batchEvents.length / 2)
+    val ms = MemoryStream[Ev]
+    val q = Streams.statefulVoyages(ms.toDF().as[EventRow]).writeStream
+      .format("memory").queryName("t_voy_store").outputMode("append")
+      .option("checkpointLocation", ckpt).start()
+    try {
+      ms.addData(b1); q.processAllAvailable()
+      ms.addData(b2); q.processAllAvailable()
+    } finally q.stop()
+    val store = spark.read.format("statestore").load(ckpt)
+    def struct(t: StructType, f: String) =
+      t(f).dataType.asInstanceOf[StructType]
+    assert(struct(struct(store.schema, "value"), "groupState").fieldNames
+      .toSeq == Seq("oZone", "last", "dZone", "n"))
+    // independent truth: per vessel, the reports after its last
+    // >30-min gap form the voyage still open when input ends
+    val openPoints = batchEvents.groupBy(_.user_id).values.map { evs =>
+      val ts = evs.map(e =>
+        e.ts.getTime * 1000L + (e.ts.getNanos / 1000L) % 1000L).sorted
+      ts.size - ts.indices.filter(i => i > 0
+        && ts(i) - ts(i - 1) > 1800L * 1000000L).lastOption.getOrElse(0)
+    }.sum.toLong
+    assert(store.selectExpr("sum(value.groupState.n)").head().getLong(0)
+      == openPoints)
   }
 
   test("stateful transitions: pair stream aggregates to the batch" +
