@@ -109,8 +109,15 @@ object Cache {
     * artifact is CLUSTERED BY the key its consumers partition on (the
     * LSH and IVF indexes: vec_id, so a query vector's rows stay in one
     * partition through the candidate join; the pair graph: d1; a
-    * shard's top-k: v1), so that side arrives pre-partitioned and pays
-    * NO exchange.
+    * shard's top-k: v1; the per-vessel track `geo.track`: user_id, so
+    * geo_voyages' hop window, the OD endpoint aggregate and
+    * geo_zone_entries' (zone, user_id) window run on the scan's
+    * partitioning), so that side arrives pre-partitioned and pays
+    * NO exchange. An artifact holds only what its consumers cannot
+    * derive row-locally: `geo.track` is six integer columns (user_id,
+    * event_id, voyage, is_new, ends, ord), and the position, zone and
+    * px/py, pure functions of event_id, are re-derived after the
+    * scan.
     *
     * The bucket COUNT is the writing session's default parallelism:
     * one wave of tasks, recorded in the version's `meta` and read back
@@ -250,6 +257,13 @@ object Cache {
   private def layoutFp(s: SparkSession, path: String): String =
     "v3:" + fingerprint(s, path)
 
+  /** The bucket count `s` writes an artifact with: one wave of its
+    * tasks (see [[diskBacked]]). A build that partitions its frame on
+    * the bucket columns into this many partitions spares the write
+    * its own repartition. */
+  private[graft] def writeBuckets(s: SparkSession): Int =
+    s.sparkContext.defaultParallelism
+
   /** The bucket count a reader with `parallelism` cores declares for
     * an artifact written as `recorded` buckets: the recorded count
     * when it fills the reader's wave, else none, so a narrower
@@ -334,7 +348,7 @@ object Cache {
     val verDir = root.resolve(s"v_$h")
     val table = s"graft_idx_${san(dir)}_${san(name)}_$h"
     val dataPath = s"$verDir/data"
-    val parallelism = s.sparkContext.defaultParallelism
+    val parallelism = writeBuckets(s)
     val (recorded, schemaDdl) = validMeta(verDir, fp).getOrElse {
       val df = build
       // Private build dir; `meta` is written LAST so a dir that

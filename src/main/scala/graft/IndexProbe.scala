@@ -3,7 +3,7 @@ package graft
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Second-process probe for the cross-process index-artifact contract
@@ -34,6 +34,20 @@ object IndexProbe {
         .groupBy("k").agg(count(lit(1)).as("n"), sum("id").as("s"))
     }
 
+  /** The artifact `name` over `dir`: the per-vessel track for
+    * "geo.track" ([[operators.GeoOps.track]], over `events.parquet`),
+    * else [[indexFrame]]. */
+  private def open(s: SparkSession, dir: String, name: String): DataFrame =
+    if (name == "geo.track") operators.GeoOps.track(s, dir)
+    else indexFrame(s, dir, name)
+
+  /** A per-row value whose sum identifies the artifact's rows (a
+    * row hash, reduced so the sum cannot overflow). */
+  private[graft] def rowSum(name: String, df: DataFrame): Column =
+    if (name == "geo.track")
+      xxhash64(df.columns.map(col).toSeq: _*) % 1000000007L
+    else col("s")
+
   /** Args: `dir name [cpus]`; `cpus` (default 4) sizes the probe's
     * local master, and with it the bucket count a build records. */
   def main(args: Array[String]): Unit = {
@@ -48,11 +62,12 @@ object IndexProbe {
       }
     }
     spark.sparkContext.addSparkListener(l)
-    val df = indexFrame(spark, dir, name)
+    val df = open(spark, dir, name)
     org.apache.spark.GraftBusAccess.waitUntilEmpty(spark.sparkContext)
     val constructJobs = jobs.get
     spark.sparkContext.removeSparkListener(l)
-    val row = df.agg(count(lit(1)).as("rows"), sum("s").as("total")).head()
+    val row = df.agg(count(lit(1)).as("rows"),
+      sum(rowSum(name, df)).as("total")).head()
     println(s"""INDEXPROBE {"builds":${builds.get},""" +
       s""""construct_jobs":$constructJobs,"rows":${row.getLong(0)},""" +
       s""""total":${row.getLong(1)}}""")

@@ -49,17 +49,16 @@ object GeoOps {
 
     // Voyage segmentation — THE core ShippingLanes transit op: split
     // each vessel's position stream at >30-min report gaps
-    // ([[Voyages.segment]], shared with stream_session and the OD
-    // build), then measure each voyage
-    // (points + haversine length). Gap arithmetic is integer µs on
-    // both engines (DuckDB reads ns, but the fixture is µs-aligned).
-    // Two windows + one agg, ALL partitioned by user_id — the voyage
-    // window is a sub-partition, so everything rides ONE exchange.
+    // ([[Voyages.segment]], shared with stream_session), then measure
+    // each voyage (points + haversine length). The split is read from
+    // the on-disk [[track]] (user_id-bucketed, voyage ids and the
+    // (ts, event_id) ordinal precomputed), so the hop window over
+    // (user_id, voyage) and the per-voyage agg run on the scan's
+    // partitioning: the only exchange is the final sort.
     "geo_voyages" -> ((s, d) => {
       import org.apache.spark.sql.expressions.Window
-      val byVoyage = Window.partitionBy("user_id", "voyage")
-        .orderBy("ts", "event_id")
-      Voyages.segment(Voyages.withPos(Tables.events(s, d)))
+      val byVoyage = Window.partitionBy("user_id", "voyage").orderBy("ord")
+      Voyages.withPos(track(s, d))
         .withColumn("prev_lat", lag(col("lat"), 1).over(byVoyage))
         .withColumn("prev_lon", lag(col("lon"), 1).over(byVoyage))
         .withColumn("hop_km",
@@ -277,9 +276,10 @@ object GeoOps {
     // sessionization pipeline per iteration.
     // staticMaxEdges: DERIVED from the same cellDeg the OD pipeline
     // bins with ([[zoneCount]] squared) — provable with no Spark
-    // job, so building this query runs nothing (PlanSpec pins it),
-    // and refining the grid cannot silently leave a stale bound
-    // that forces a huge graph onto the single-task path.
+    // job, so once the [[track]] exists building this query runs
+    // nothing (PlanSpec pins it), and refining the grid cannot
+    // silently leave a stale bound that forces a huge graph onto the
+    // single-task path.
     "geo_zone_rank" -> ((s, d) =>
       zoneRank(odMatrix(s, d)
         .select(col("o_zone"), col("d_zone"),
@@ -306,9 +306,11 @@ object GeoOps {
     // outside or absent before). Composes the integer ray cast with
     // a lag window; INTEGER outputs. Scale shape: [[zoneEntriesFrom]]
     // — candidate rows are BBOX HITS, not |zones| × |reports|, and
-    // the window partitions by (zone, user_id).
+    // the window partitions by (zone, user_id), which the [[track]]'s
+    // user_id buckets already satisfy; the track's `ord` is the
+    // (ts, event_id) order and the gap detector's sequence number.
     "geo_zone_entries" -> ((s, d) =>
-      zoneEntriesFrom(Voyages.withPxPy(Tables.events(s, d)), zonePolygons))
+      zoneEntriesFrom(Voyages.withPxPy(track(s, d)), zonePolygons))
   )
 
   /** Grid size the OD pipeline bins with — the single source the
@@ -338,17 +340,46 @@ object GeoOps {
     z * z
   }
 
+  /** Every report's place in its vessel's track: (user_id, event_id,
+    * voyage, is_new, ends, ord), one row per event, persisted ON DISK
+    * per fixture ([[graft.Cache.diskBacked]] "geo.track", bucketed by
+    * user_id). `voyage` and `is_new` are [[Voyages.segment]]'s;
+    * `ends` is 1 on a voyage's last report (the next report starts a
+    * new voyage, or there is none); `ord` is the report's position in
+    * the vessel's (ts, event_id) order, from 1. One [[Voyages.byVessel]]
+    * sort builds all four, once per fixture; geo_voyages, the OD
+    * build and geo_zone_entries then read it where each used to
+    * shuffle and sort the events by vessel on every pass. The
+    * bucketed scan is hash-partitioned on user_id, which satisfies
+    * their per-vessel windows and (user_id, …) aggregates with no
+    * exchange. Position, zone and px/py are pure functions of
+    * event_id, so consumers derive them after the scan
+    * ([[Voyages.withPos]], [[Voyages.withPxPy]]) and the artifact
+    * stays narrow. */
+  private[graft] def track(s: SparkSession, d: String): DataFrame =
+    graft.Cache.diskBacked(s, d, "geo.track", "events.parquet",
+      Seq("user_id"))(trackBuild(s, d))
+
+  /** The raw (unpersisted) [[track]] lineage. The events are first
+    * hash-partitioned on user_id into as many partitions as the
+    * artifact has buckets ([[graft.Cache.writeBuckets]]): the voyage
+    * windows accept that partitioning and the bucketed write finds
+    * its own repartition already done, so the build shuffles the
+    * events once. */
+  private[graft] def trackBuild(s: SparkSession, d: String): DataFrame =
+    Voyages.segment(Tables.events(s, d)
+        .repartition(graft.Cache.writeBuckets(s), col("user_id")))
+      .withColumn("ends", lead(col("is_new"), 1, 1L).over(Voyages.byVessel))
+      .withColumn("ord", row_number().over(Voyages.byVessel))
+      .select("user_id", "event_id", "voyage", "is_new", "ends", "ord")
+
   /** The OD voyage-flow matrix (o_zone, d_zone, n_voyages,
-    * n_vessels), UNSORTED, persisted per (session, sf-dir):
-    * sessionize each vessel's reports into voyages (the geo_voyages
-    * segmentation), take each voyage's first and last 30° zone, and
-    * count voyages + distinct vessels per (origin, destination)
-    * pair. Everything up to the per-voyage collapse rides ONE
-    * user_id exchange (the voyage window is a sub-partition; the
-    * endpoint frames reuse it); the result is zones² rows at most —
-    * tiny at any scale, so the persisted frame is cheap to hold and
-    * every downstream consumer (the OD query itself, lanes-top,
-    * PageRank, components) skips the corpus-scale sessionization.
+    * n_vessels), UNSORTED, persisted per (session, sf-dir): take each
+    * [[track]] voyage's first and last 30° zone, and count voyages +
+    * distinct vessels per (origin, destination) pair. The result is
+    * zones² rows at most — tiny at any scale, so the persisted frame
+    * is cheap to hold and every downstream consumer (the OD query
+    * itself, lanes-top, PageRank, components) shares one build.
     * A single-point voyage maps to its own diagonal cell (o = d),
     * which is meaningful (intra-zone movement), not an artifact. */
   private[operators] def odMatrix(s: SparkSession, d: String): DataFrame =
@@ -356,30 +387,23 @@ object GeoOps {
 
   /** The raw (uncached) OD pipeline — private[graft] so PlanSpec can
     * pin its exchange discipline directly; the declared queries go
-    * through the persisted [[odMatrix]]. */
+    * through the persisted [[odMatrix]]. The track's endpoint flags
+    * leave ≤ 2 rows per voyage before the endpoint aggregate, which
+    * groups on (user_id, voyage) and so runs on the track's user_id
+    * partitioning: no window and no user_id exchange. It picks the
+    * endpoints' event_ids (a hash aggregate over longs; the string
+    * zones it used to pick needed a sort aggregate), and the zones
+    * are derived from those ids after it. */
   private[graft] def odMatrixBuild(s: SparkSession, d: String): DataFrame =
-    Voyages.segment(Voyages.withPos(Tables.events(s, d))
-        .withColumn("zone", Voyages.zone(odCellDeg)))
-      // Voyage-endpoint flags ride the SAME byVessel window (same
-      // partition + order ⇒ no new exchange, no new sort): the
-      // cumsum construction gives every voyage exactly one row with
-      // is_new = 1 (its first) and exactly one row whose successor
-      // starts a new voyage or doesn't exist (its last, ends = 1 via
-      // lead's default). Filtering to those ≤ 2 rows per voyage
-      // BEFORE the endpoint aggregate replaces the old unbounded
-      // first/last window — whose plan cost was a SECOND full sort
-      // of every sessionized event row plus a (user, voyage, o, d)
-      // dedup aggregate — with an aggregate over O(voyages) rows
-      // (guide §2.4: don't re-sort what one pass already ordered).
-      // Equivalence: event_id is unique, so first/last over the
-      // (ts, event_id) order selected exactly these rows.
-      .withColumn("ends",
-        lead(col("is_new"), 1, 1L).over(Voyages.byVessel))
+    track(s, d)
       .filter(col("is_new") === 1 || col("ends") === 1)
       .groupBy("user_id", "voyage")
       .agg(
-        max(when(col("is_new") === 1, col("zone"))).as("o_zone"),
-        max(when(col("ends") === 1, col("zone"))).as("d_zone"))
+        max(when(col("is_new") === 1, col("event_id"))).as("o_id"),
+        max(when(col("ends") === 1, col("event_id"))).as("d_id"))
+      .select(col("user_id"),
+        Voyages.eventZone(col("o_id"), odCellDeg).as("o_zone"),
+        Voyages.eventZone(col("d_id"), odCellDeg).as("d_zone"))
       .groupBy("o_zone", "d_zone")
       .agg(count(lit(1)).as("n_voyages"),
         countDistinct("user_id").as("n_vessels"))
@@ -509,9 +533,10 @@ object GeoOps {
     * arithmetic and the exploded rows scale with bbox hits. (This is
     * the first slice of the broadcast-edge-table plan: at thousands
     * of zones the literal array becomes a broadcast range join on
-    * bbox, same row contract.) `ord` is the report's per-user
-    * sequence number — [[zoneEntriesFrom]] needs it to detect
-    * dropped predecessors. */
+    * bbox, same row contract.) `pts` carries `ord`, the report's
+    * per-user sequence number in (ts, event_id) order (the
+    * [[track]]'s) — [[zoneEntriesFrom]] orders by it and needs it to
+    * detect dropped predecessors. */
   private[operators] def zoneCandidates(
       pts: DataFrame,
       zones: Seq[(String, Seq[(Long, Long)])]): DataFrame = {
@@ -525,10 +550,9 @@ object GeoOps {
         struct(lit(z).as("zone"), insideExpr(verts).as("inside")))
     }
     pts
-      .withColumn("ord", row_number().over(Voyages.byVessel))
-      .select(col("user_id"), col("ts"), col("event_id"), col("ord"),
+      .select(col("user_id"), col("ord"),
         explode(filter(array(elems: _*), _.isNotNull)).as("zf"))
-      .select(col("user_id"), col("ts"), col("event_id"), col("ord"),
+      .select(col("user_id"), col("ord"),
         col("zf.zone").as("zone"), col("zf.inside").as("inside"))
   }
 
@@ -544,7 +568,7 @@ object GeoOps {
       pts: DataFrame,
       zones: Seq[(String, Seq[(Long, Long)])]): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy("zone", "user_id").orderBy("ts", "event_id")
+    val w = Window.partitionBy("zone", "user_id").orderBy("ord")
     zoneCandidates(pts, zones)
       .withColumn("prev_in", lag("inside", 1).over(w))
       .withColumn("prev_ord", lag("ord", 1).over(w))

@@ -46,6 +46,15 @@ class ConstructionSpec extends SparkSpec {
     "ann_lsh" -> "one-time LSH index build + write",
     "ann_ivf" -> "one-time IVF index build + write",
     "dedup_embed_ann" -> "one-time LSH index build + write",
+    // The per-vessel track (GeoOps.track) is an on-disk artifact of
+    // the same kind: whichever of its consumers is constructed first
+    // in a process with no published version builds and writes it.
+    "geo_voyages" -> "one-time geo.track build + write",
+    "geo_od_matrix" -> "one-time geo.track build + write",
+    "geo_lanes_top" -> "one-time geo.track build + write",
+    "geo_zone_rank" -> "one-time geo.track build + write",
+    "geo_zone_components" -> "one-time geo.track build + write",
+    "geo_zone_entries" -> "one-time geo.track build + write",
     // The roundtrip/layout queries' SEMANTICS are "write this
     // layout, read it back": the write (and the re-read's schema
     // inference over scratch files) is the operator under test.

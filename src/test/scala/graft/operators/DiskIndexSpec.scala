@@ -342,6 +342,64 @@ class DiskIndexSpec extends SparkSpec {
       Seq(field(line, "rows"), field(line, "total")))
   }
 
+  /** Writes the events of sf0.01's vessels below `vessels` as the
+    * events table of `dir`, in the fixture's own column types. */
+  private def writeEvents(dir: String, vessels: Long): Unit =
+    spark.read.parquet(s"${SparkSpec.sf001}/events.parquet")
+      .filter(col("user_id") < vessels)
+      .write.mode("overwrite").parquet(s"$dir/events.parquet")
+
+  /** The one published version dir of `dir`'s geo.track. */
+  private def trackVersions(dir: String): Set[String] = {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get(Cache.SharedRoot)
+      .resolve(dir.replaceAll("[^A-Za-z0-9]", "_")).resolve("geo_track")
+    java.nio.file.Files.list(root).iterator().asScala
+      .map(_.getFileName.toString).filter(_.startsWith("v_")).toSet
+  }
+
+  private def sortedRows(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
+    df.orderBy("event_id").collect().map(_.toSeq).toSeq
+
+  test("rewriting a fixture's events republishes geo.track: the " +
+      "fingerprint moved, so the next entry builds a new version") {
+    val dir = s"$scratch/track_rewrite"
+    writeEvents(dir, 20)
+    val t1 = sortedRows(GeoOps.track(spark, dir))
+    val v1 = trackVersions(dir)
+    assert(v1.size == 1, s"one version after the first build: $v1")
+    assert(t1 == sortedRows(GeoOps.trackBuild(spark, dir)))
+    writeEvents(dir, 10)
+    // No Cache.clear: the entry itself notices the moved fingerprint.
+    val t2 = sortedRows(GeoOps.track(spark, dir))
+    val v2 = trackVersions(dir) -- v1
+    assert(v2.size == 1, s"the rewrite must publish a new version: " +
+      trackVersions(dir))
+    assert(t2 == sortedRows(GeoOps.trackBuild(spark, dir)))
+    assert(t2.map(_.head).distinct.size == 10 && t2 != t1,
+      "the republished track must hold the rewritten events")
+  }
+
+  test("geo.track written by a 1-core process is read unbucketed by a " +
+      "wider session, with the same rows") {
+    val dir = s"/tmp/graft_diskidx_xproc/track${System.nanoTime()}"
+    writeEvents(dir, 30)
+    val line = probe(dir, "geo.track", cpus = 1)
+    val v = trackVersions(dir)
+    assert(v.size == 1, s"the probe must publish one version: $v")
+    val df = GeoOps.track(spark, dir)
+    assert(trackVersions(dir) == v, "the narrow track is read, not rebuilt")
+    val tbl = spark.catalog.listTables().collect().map(_.name)
+      .find(t => t.contains(v.head.stripPrefix("v_")) &&
+        t.contains("geo_track"))
+      .getOrElse(fail("no catalog table registered for the track"))
+    assert(tbl.endsWith("_b1"), s"table must carry the recorded count: $tbl")
+    assert(numBuckets(tbl).isEmpty, s"$tbl must be declared unbucketed")
+    assert(sortedRows(df) == sortedRows(GeoOps.trackBuild(spark, dir)))
+    assert(df.agg(count(lit(1)), sum(graft.IndexProbe.rowSum("geo.track", df)))
+      .head().toSeq == Seq(field(line, "rows"), field(line, "total")))
+  }
+
   test("ann_ivf reads the vec_id-bucketed artifact: no index build in " +
       "the query plan and no candidate-join shuffle") {
     // Force the artifact to exist (first construction may build).

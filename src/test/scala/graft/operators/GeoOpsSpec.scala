@@ -289,6 +289,8 @@ class GeoOpsSpec extends SparkSpec {
         (cx + 1, cy + 400))
     }).toSeq
 
+  /** 3000 reports of 25 vessels; `ord` is each report's place in its
+    * vessel's (ts, event_id) order, as [[GeoOps.track]] stores it. */
   private lazy val gridPts = {
     import org.apache.spark.sql.functions._
     spark.range(3000).select(
@@ -296,7 +298,8 @@ class GeoOpsSpec extends SparkSpec {
       col("id").as("ts"),
       col("id").as("event_id"),
       (col("id") * 104729 % 36000 - 18000).as("px"),
-      (col("id") * 7919 % 18000 - 9000).as("py"))
+      (col("id") * 7919 % 18000 - 9000).as("py"),
+      (expr("id div 25") + 1).cast("int").as("ord"))
   }
 
   test("zoneCandidates: exploded rows track bbox hits, not" +
@@ -355,11 +358,11 @@ class GeoOpsSpec extends SparkSpec {
     import s.implicits._
     val (cx, cy) = (-16200L, -8100L)
     val seqPts = Seq(
-      (1L, 1L, 1L, cx, cy),
-      (1L, 2L, 2L, cx + 1, cy),
-      (1L, 3L, 3L, 17000L, 8000L),
-      (1L, 4L, 4L, cx, cy))
-      .toDF("user_id", "ts", "event_id", "px", "py")
+      (1L, 1, cx, cy),
+      (1L, 2, cx + 1, cy),
+      (1L, 3, 17000L, 8000L),
+      (1L, 4, cx, cy))
+      .toDF("user_id", "ord", "px", "py")
     val reentries = GeoOps.zoneEntriesFrom(seqPts, gridZones)
       .filter(col("zone") === "z_0_0").collect()
     assert(reentries.length == 1 && reentries(0).getLong(1) == 2,

@@ -9,24 +9,28 @@ import org.apache.spark.sql.functions._
   * and the Column position rules equal their Scala twins. */
 class VoyagesSpec extends SparkSpec {
 
-  /** Two vessels, two reports each, written as an events table:
-    * vessel 1's reports are exactly the voyage gap apart (one voyage),
-    * vessel 2's one µs more (two voyages). */
-  private lazy val boundaryDir: String = {
+  /** Writes `rows` (event_id, µs, user_id) as an events table in a
+    * new temp dir. */
+  private def eventsDir(tag: String, rows: Seq[(Long, Long, Long)]): String = {
     val s = spark
     import s.implicits._
-    val t0 = 1704067200000000L // 2024-01-01T00:00:00Z in µs
-    val gap = 1800000000L
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-voyage-gap").toString
-    Seq((1L, t0, 1L), (2L, t0 + gap, 1L),
-        (3L, t0, 2L), (4L, t0 + gap + 1L, 2L))
-      .toDF("event_id", "us", "user_id")
+    val dir = java.nio.file.Files.createTempDirectory(tag).toString
+    rows.toDF("event_id", "us", "user_id")
       .select(col("event_id"), timestamp_micros(col("us")).as("ts"),
         col("user_id"), lit("view").as("event_type"),
         lit(1.0).as("value"), lit("{}").as("props"))
       .write.parquet(s"$dir/events.parquet")
     dir
+  }
+
+  /** Two vessels, two reports each, written as an events table:
+    * vessel 1's reports are exactly the voyage gap apart (one voyage),
+    * vessel 2's one µs more (two voyages). */
+  private lazy val boundaryDir: String = {
+    val t0 = 1704067200000000L // 2024-01-01T00:00:00Z in µs
+    val gap = 1800000000L
+    eventsDir("graft-voyage-gap", Seq((1L, t0, 1L), (2L, t0 + gap, 1L),
+      (3L, t0, 2L), (4L, t0 + gap + 1L, 2L)))
   }
 
   /** Voyages per vessel, counted from rows keyed by (user_id, id). */
@@ -68,6 +72,108 @@ class VoyagesSpec extends SparkSpec {
       val streamed = want.keys.map(u => u -> (closed.count(_ == u) + 1)).toMap
       assert(streamed == want)
     }
+  }
+
+  test("reports of one vessel that share ts follow the (ts, event_id)" +
+      " order in geo_voyages, the OD build and geo_zone_entries") {
+    val s = spark
+    import s.implicits._
+    val t0 = 1704067200000000L
+    val minute = 60000000L
+    val (zoneName, zoneVerts) = GeoOps.zonePolygons.head
+    def inside(e: Long): Boolean = {
+      val (px, py) = Voyages.pxpy(e)
+      GeoOps.insideOf(zoneVerts, px, py)
+    }
+    // Vessel 1: a, then b and c at one ts, then d; after a 3-hour
+    // gap, e and f at one ts with different zones, so the second
+    // voyage's origin and destination are decided by event_id alone.
+    val Seq(a, b, c, d, e) = Seq(40001L, 40002L, 40003L, 40004L, 40010L)
+    val f = (e + 1 to e + 100).find(Voyages.zoneOf(_) != Voyages.zoneOf(e)).get
+    // Vessel 2: x inside the zone, then y (outside) and z (inside)
+    // at one ts with y < z: in (ts, event_id) order z re-enters.
+    val ins = (0L until 36000L).filter(inside)
+    val (x, z) = (ins(0), ins(2))
+    val y = (0L until z).find(!inside(_)).get
+    val rows = Seq((a, t0, 1L), (b, t0 + minute, 1L), (c, t0 + minute, 1L),
+      (d, t0 + 2 * minute, 1L), (e, t0 + 180 * minute, 1L), (f, t0 + 180 * minute, 1L),
+      (x, t0, 2L), (y, t0 + minute, 2L), (z, t0 + minute, 2L))
+    val dir = eventsDir("graft-voyage-ties", rows)
+
+    /** Each vessel's event_ids in (ts, event_id) order, or with the
+      * tie broken the other way. */
+    def ordered(tieAsc: Boolean): Map[Long, Seq[(Long, Long)]] =
+      rows.groupBy(_._3).map { case (u, rs) =>
+        u -> rs.sortBy(r => (r._2, if (tieAsc) r._1 else -r._1))
+          .map(r => (r._1, r._2))
+      }
+    /** Each vessel's voyages as event_id lists. */
+    def voyagesOf(tieAsc: Boolean): Map[Long, Seq[Seq[Long]]] =
+      ordered(tieAsc).map { case (u, rs) =>
+        u -> rs.foldLeft(Vector.empty[Vector[(Long, Long)]]) {
+          case (vs, r) if vs.nonEmpty && r._2 - vs.last.last._2 <=
+            Voyages.GapMicros => vs.init :+ (vs.last :+ r)
+          case (vs, r) => vs :+ Vector(r)
+        }.map(_.map(_._1))
+      }
+
+    // geo_voyages: points per voyage from the Scala split; lengths
+    // from the events-side lineage the track replaced, which orders
+    // the hop window by (ts, event_id) directly.
+    val got = GeoOps.queries("geo_voyages")(spark, dir)
+      .as[(Long, Long, Long, Double)].collect().toSeq
+    val points = for {
+      (u, vs) <- voyagesOf(tieAsc = true).toSeq.sortBy(_._1)
+      (v, i) <- vs.zipWithIndex
+    } yield (u, i + 1L, v.size.toLong)
+    assert(got.map(r => (r._1, r._2, r._3)) == points)
+    def lengths(tie: org.apache.spark.sql.Column): Seq[Double] = {
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy("user_id", "voyage").orderBy(col("ts"), tie)
+      val ev = Voyages.withPos(graft.Tables.events(spark, dir))
+      Voyages.segment(ev)
+        .withColumn("prev_lat", lag(col("lat"), 1).over(w))
+        .withColumn("prev_lon", lag(col("lon"), 1).over(w))
+        .withColumn("hop_km", coalesce(graft.functions.Geo.haversineKm(
+          col("prev_lat"), col("prev_lon"), col("lat"), col("lon")), lit(0.0)))
+        .groupBy("user_id", "voyage")
+        .agg(round(sum("hop_km"), 3).as("km"))
+        .orderBy("user_id", "voyage").select("km").as[Double]
+        .collect().toSeq
+    }
+    assert(got.map(_._4) == lengths(col("event_id")))
+    assert(got.map(_._4) != lengths(col("event_id").desc),
+      "the fixture's tie does not change a voyage length")
+
+    // The OD build: each voyage's first and last zone.
+    def od(tieAsc: Boolean): Map[(String, String), Long] =
+      voyagesOf(tieAsc).values.flatten.toSeq
+        .groupBy(v => (Voyages.zoneOf(v.head), Voyages.zoneOf(v.last)))
+        .map { case (k, vs) => k -> vs.size.toLong }
+    val gotOd = GeoOps.odMatrixBuild(spark, dir)
+      .select("o_zone", "d_zone", "n_voyages").as[(String, String, Long)]
+      .collect().map(r => (r._1, r._2) -> r._3).toMap
+    assert(gotOd == od(tieAsc = true))
+    assert(od(tieAsc = true) != od(tieAsc = false))
+
+    // geo_zone_entries: rising edges of the inside flag per vessel.
+    def entries(tieAsc: Boolean): Seq[(String, Long, Long)] =
+      GeoOps.zonePolygons.flatMap { case (zn, verts) =>
+        val per = ordered(tieAsc).map { case (u, rs) =>
+          val flags = rs.map { r =>
+            val (px, py) = Voyages.pxpy(r._1)
+            GeoOps.insideOf(verts, px, py)
+          }
+          u -> (false +: flags).sliding(2).count(p => !p(0) && p(1))
+        }.filter(_._2 > 0)
+        if (per.isEmpty) None
+        else Some((zn, per.values.sum.toLong, per.size.toLong))
+      }.sortBy(_._1)
+    val gotEntries = GeoOps.queries("geo_zone_entries")(spark, dir)
+      .as[(String, Long, Long)].collect().toSeq
+    assert(gotEntries == entries(tieAsc = true))
+    assert(gotEntries.find(_._1 == zoneName).exists(_._2 >= 2))
+    assert(entries(tieAsc = true) != entries(tieAsc = false))
   }
 
   test("Column and Scala twins agree on every event_id of the" +
