@@ -110,14 +110,14 @@ object Cache {
     * LSH and IVF indexes: vec_id, so a query vector's rows stay in one
     * partition through the candidate join; the pair graph: d1; a
     * shard's top-k: v1; the per-vessel track `geo.track`: user_id, so
-    * geo_voyages' hop window, the OD endpoint aggregate and
-    * geo_zone_entries' (zone, user_id) window run on the scan's
-    * partitioning), so that side arrives pre-partitioned and pays
-    * NO exchange. An artifact holds only what its consumers cannot
-    * derive row-locally: `geo.track` is six integer columns (user_id,
-    * event_id, voyage, is_new, ends, ord), and the position, zone and
-    * px/py, pure functions of event_id, are re-derived after the
-    * scan.
+    * the per-vessel hop aggregates, geo_headings' modal windows and
+    * the OD endpoint aggregate run on the scan's partitioning), so
+    * that side arrives pre-partitioned and pays NO exchange. An
+    * artifact holds only what its consumers cannot derive
+    * row-locally: `geo.track` is seven integer columns (user_id,
+    * event_id, prev_id, gap_us, voyage, is_new, ends), and the
+    * position, zone and px/py of both ends of a hop, pure functions
+    * of an event_id, are re-derived after the scan.
     *
     * The bucket COUNT is the writing session's default parallelism:
     * one wave of tasks, recorded in the version's `meta` and read back
@@ -249,13 +249,17 @@ object Cache {
     }
   }
 
-  /** Layout-versioned source fingerprint. "v3:" = artifact LAYOUT
+  /** Layout-versioned source fingerprint. "v4:" = artifact LAYOUT
     * version (v2: one file per bucket since the writeBucketed
     * repartition fix; v3: the writer's bucket count recorded in
-    * meta) — bumping it invalidates artifacts written under an older
-    * layout even when the source fingerprint still matches. */
+    * meta; v4: `geo.track` holds prev_id and gap_us instead of ord)
+    * — bumping it invalidates artifacts written under an older
+    * layout even when the source fingerprint still matches. A change
+    * to any artifact's output schema bumps the tag, or a version an
+    * older build published for the same source is attached with its
+    * old columns. */
   private def layoutFp(s: SparkSession, path: String): String =
-    "v3:" + fingerprint(s, path)
+    "v4:" + fingerprint(s, path)
 
   /** The bucket count `s` writes an artifact with: one wave of its
     * tasks (see [[diskBacked]]). A build that partitions its frame on

@@ -1,16 +1,16 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Trajectory/geo Column helpers — the ShippingLanes domain ops
-  * (vessel transits: distance, heading, zone binning, track length)
-  * expressed as codegen-friendly `functions._` math. The testdata
-  * carries no lat/lon, so these are engine surface (GeoSpec pins them
-  * on real-world fixtures); with an AIS-shaped table they compose
+  * (vessel transits: distance, heading, zone binning) expressed as
+  * codegen-friendly `functions._` math. The testdata carries no
+  * lat/lon, so these are engine surface (GeoSpec pins them on
+  * real-world fixtures); with an AIS-shaped table they compose
   * directly with the sessionization ops (a voyage = a session of
-  * positions; its distance = trackLength over that session).
+  * positions; its distance = the sum of [[haversineKm]] over its
+  * consecutive hops).
   *
   * All angles in degrees, distances in km (mean Earth radius
   * 6371.0088 km).
@@ -58,24 +58,4 @@ object Geo {
   def gridCellId(lat: Column, lon: Column, cellDeg: Double): Column =
     floor(lat / cellDeg).cast("long") * lit(4294967296L) +
       floor(lon / cellDeg).cast("long")
-
-  /** Per-entity track length: sum of consecutive-point hops, ordered
-    * by `orderCols` (default ts; pass a unique tie-break for a total
-    * order when ts can repeat). Input needs (entityCol, orderCols,
-    * lat, lon); one window + one agg, both partitioned by entity —
-    * scales by key. */
-  def trackLength(df: DataFrame, entityCol: String,
-      orderCols: Seq[String] = Seq("ts")): DataFrame = {
-    val w = Window.partitionBy(entityCol)
-      .orderBy(orderCols.map(col): _*)
-    df.withColumn("prev_lat", lag(col("lat"), 1).over(w))
-      .withColumn("prev_lon", lag(col("lon"), 1).over(w))
-      .withColumn("hop_km",
-        when(col("prev_lat").isNull, 0.0)
-          .otherwise(haversineKm(col("prev_lat"), col("prev_lon"),
-            col("lat"), col("lon"))))
-      .groupBy(entityCol)
-      .agg(count(lit(1)).as("n_points"),
-        round(sum("hop_km"), 3).as("track_km"))
-  }
 }

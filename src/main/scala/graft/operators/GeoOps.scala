@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.{Q, Tables}
 import graft.functions.Geo
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Geo/transit queries — the reference's actual domain (AIS vessel
@@ -19,22 +19,28 @@ import org.apache.spark.sql.functions._
   * The event stream then reads as an AIS feed: user_id = vessel,
   * ts = position-report time, (lat, lon) = position.
   *
-  * Scale shape: track length is one window + one agg, both
-  * partitioned by entity; zone counts are a single partial+final
-  * aggregation over grid cells. Both scale by key with no all-pairs
-  * or driver-side work.
+  * Scale shape: the per-vessel hop queries (track length, voyages,
+  * headings, speed flags, dwell, zone entries) read each report's
+  * predecessor from the user_id-bucketed [[track]], so a hop is a
+  * row-local expression and the per-vessel agg runs on the scan's
+  * partitioning; zone counts are a single partial+final aggregation
+  * over grid cells. Both scale by key with no all-pairs or
+  * driver-side work.
   */
 object GeoOps {
 
   val queries: Map[String, Q] = Map(
-    // Per-vessel voyage length: haversine sum over consecutive
+    // Per-vessel track length: haversine sum over consecutive
     // position reports, ordered by (ts, event_id) — a total order
     // ((user_id, ts) is unique in the fixtures; event_id breaks any
     // future tie portably since DuckDB sorts ns-precision ts while
-    // Spark sorts µs).
+    // Spark sorts µs). The [[track]] decided that order once: each
+    // report's hop starts at its prev_id.
     "geo_track_length" -> ((s, d) =>
-      Geo.trackLength(Voyages.withPos(Tables.events(s, d)), "user_id",
-          orderCols = Seq("ts", "event_id"))
+      hops(s, d)
+        .groupBy("user_id")
+        .agg(count(lit(1)).as("n_points"),
+          round(sum(coalesce(hopKm, lit(0.0))), 3).as("track_km"))
         .orderBy("user_id")),
 
     // Zone transit counts: 30° grid cells, events + distinct vessels
@@ -51,25 +57,18 @@ object GeoOps {
     // each vessel's position stream at >30-min report gaps
     // ([[Voyages.segment]], shared with stream_session), then measure
     // each voyage (points + haversine length). The split is read from
-    // the on-disk [[track]] (user_id-bucketed, voyage ids and the
-    // (ts, event_id) ordinal precomputed), so the hop window over
-    // (user_id, voyage) and the per-voyage agg run on the scan's
-    // partitioning: the only exchange is the final sort.
-    "geo_voyages" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      val byVoyage = Window.partitionBy("user_id", "voyage").orderBy("ord")
-      Voyages.withPos(track(s, d))
-        .withColumn("prev_lat", lag(col("lat"), 1).over(byVoyage))
-        .withColumn("prev_lon", lag(col("lon"), 1).over(byVoyage))
-        .withColumn("hop_km",
-          when(col("prev_lat").isNull, 0.0)
-            .otherwise(Geo.haversineKm(col("prev_lat"), col("prev_lon"),
-              col("lat"), col("lon"))))
+    // the on-disk [[track]] (user_id-bucketed, voyage ids and each
+    // report's predecessor precomputed): a report continuing its
+    // voyage (is_new = 0) adds the hop from its prev_id, and the
+    // per-voyage agg runs on the scan's partitioning — no window, and
+    // the only exchange is the final sort.
+    "geo_voyages" -> ((s, d) =>
+      hops(s, d)
         .groupBy("user_id", "voyage")
         .agg(count(lit(1)).as("n_points"),
-          round(sum("hop_km"), 3).as("voyage_km"))
-        .orderBy("user_id", "voyage")
-    }),
+          round(sum(when(col("is_new") === 0, hopKm).otherwise(0.0)), 3)
+            .as("voyage_km"))
+        .orderBy("user_id", "voyage")),
 
     // Modal course per vessel: initial bearing of each consecutive
     // hop, binned into eight 45° sectors (0 = N..NE, …, 7 = NW..N) —
@@ -84,19 +83,18 @@ object GeoOps {
     // near-0 meaning). The remaining hazard — a raw bearing within
     // ~1e-10 of a half-millidegree rounding tie — is pinned away by
     // GeoOpsSpec's margin test. Ties in the modal count break toward
-    // the lower sector id (deterministic on both engines). One
-    // exchange: the hop window, the sector agg, the modal window and
-    // the per-vessel total all partition by user_id.
+    // the lower sector id (deterministic on both engines). The hop is
+    // the [[track]]'s prev_id → event_id, and the sector agg, the
+    // modal window and the per-vessel total all run on the track's
+    // user_id buckets: the only exchange is the final sort.
     "geo_headings" -> ((s, d) => {
       import org.apache.spark.sql.expressions.Window
       val modal = Window.partitionBy("user_id")
         .orderBy(col("n_hops").desc, col("sector"))
-      Voyages.withPos(Tables.events(s, d))
-        .withColumn("prev_lat", lag(col("lat"), 1).over(Voyages.byVessel))
-        .withColumn("prev_lon", lag(col("lon"), 1).over(Voyages.byVessel))
-        .filter(col("prev_lat").isNotNull)
+      hops(s, d)
+        .filter(col("prev_id").isNotNull)
         .withColumn("sector",
-          (floor(round(Geo.bearingDeg(col("prev_lat"), col("prev_lon"),
+          (floor(round(Geo.bearingDeg(col("plat"), col("plon"),
             col("lat"), col("lon")), 3) / 45) % 8).cast("long"))
         .groupBy("user_id", "sector")
         .agg(count(lit(1)).as("n_hops"))
@@ -117,24 +115,19 @@ object GeoOps {
     // speed double crosses engines only through the > 500 membership
     // test, and the fixture's pseudo-random hops sit far from the
     // threshold (GeoOpsSpec pins the minimum |speed − 500| margin).
-    // One exchange: the hop window and the per-vessel agg both
-    // partition by user_id.
-    "geo_speed_flags" -> ((s, d) => {
-      Voyages.withPos(Tables.events(s, d))
-        .withColumn("gap_us", Voyages.gapUs)
-        .withColumn("prev_lat", lag(col("lat"), 1).over(Voyages.byVessel))
-        .withColumn("prev_lon", lag(col("lon"), 1).over(Voyages.byVessel))
-        .filter(col("prev_lat").isNotNull && col("gap_us") > 0)
-        .withColumn("speed_kmh",
-          Geo.haversineKm(col("prev_lat"), col("prev_lon"),
-            col("lat"), col("lon")) / (col("gap_us") / 3.6e9))
+    // The hop and its gap are the [[track]]'s (gap_us is null on a
+    // vessel's first report, which the filter drops), and the
+    // per-vessel agg runs on its user_id buckets.
+    "geo_speed_flags" -> ((s, d) =>
+      hops(s, d)
+        .filter(col("gap_us") > 0)
+        .withColumn("speed_kmh", hopKm / (col("gap_us") / 3.6e9))
         .groupBy("user_id")
         .agg(count(lit(1)).as("n_hops"),
           count(when(col("speed_kmh") > 500.0, 1)).as("n_impossible"))
         .withColumn("bad_ratio",
           round(col("n_impossible").cast("double") / col("n_hops"), 4))
-        .orderBy("user_id")
-    }),
+        .orderBy("user_id")),
 
     // Co-presence (the convoy/rendezvous primitive): vessel pairs
     // reporting from the SAME 30° zone within the SAME hour, with
@@ -164,7 +157,8 @@ object GeoOps {
     "geo_zone_polygon" -> ((s, d) => {
       val pts = Voyages.withPxPy(Tables.events(s, d))
       val zoneFlags = zonePolygons.map { case (z, verts) =>
-        struct(lit(z).as("zone"), insideExpr(verts).as("inside"))
+        struct(lit(z).as("zone"),
+          insideExpr(verts, col("px"), col("py")).as("inside"))
       }
       pts
         .select(col("user_id"), explode(array(zoneFlags: _*)).as("zf"))
@@ -211,18 +205,16 @@ object GeoOps {
     // longer gap is a voyage break, not presence) is attributed to
     // the zone of the EARLIER report. INTEGER arithmetic end to end:
     // gaps are µs longs, summed then `div`-ed to whole seconds — no
-    // float crosses engines. One exchange: the hop window partitions
-    // by user_id and the (user, zone) agg's clustering is satisfied
-    // by the same hash partitioning (user_id ⊆ group keys), exactly
-    // like geo_voyages' per-voyage agg.
+    // float crosses engines. A hop within a voyage is exactly a
+    // [[track]] row with is_new = 0; its earlier report is prev_id.
+    // The (user, zone) agg's clustering is satisfied by the track's
+    // user_id buckets (user_id ⊆ group keys), exactly like
+    // geo_voyages' per-voyage agg.
     "geo_zone_dwell" -> ((s, d) =>
-      Voyages.withPos(Tables.events(s, d))
-        .withColumn("zone", Voyages.zone(30.0))
-        .withColumn("gap_us", Voyages.gapUs)
-        .withColumn("prev_zone", lag("zone", 1).over(Voyages.byVessel))
-        .filter(col("prev_zone").isNotNull
-          && col("gap_us") <= Voyages.GapMicros)
-        .groupBy(col("user_id"), col("prev_zone").as("zone"))
+      track(s, d)
+        .filter(col("is_new") === 0)
+        .groupBy(col("user_id"),
+          Voyages.eventZone(col("prev_id"), 30.0).as("zone"))
         .agg(expr("sum(gap_us) div 1000000").as("dwell_s"),
           count(lit(1)).as("n_hops"))
         .orderBy("user_id", "zone")),
@@ -301,16 +293,16 @@ object GeoOps {
         staticMaxEdges = Some(odMaxEdges))),
 
     // Zone ENTRIES — how many times vessels enter each polygon zone
-    // (port-call counting): per (zone, vessel) order the reports by
-    // (ts, event_id) and count inside-flag rising edges (inside now,
-    // outside or absent before). Composes the integer ray cast with
-    // a lag window; INTEGER outputs. Scale shape: [[zoneEntriesFrom]]
-    // — candidate rows are BBOX HITS, not |zones| × |reports|, and
-    // the window partitions by (zone, user_id), which the [[track]]'s
-    // user_id buckets already satisfy; the track's `ord` is the
-    // (ts, event_id) order and the gap detector's sequence number.
+    // (port-call counting): in each vessel's (ts, event_id) order,
+    // count inside-flag rising edges (inside now, outside or absent
+    // before). The predecessor is the [[track]]'s prev_id, so both
+    // flags are the integer ray cast, row-local; INTEGER outputs.
+    // Scale shape: [[zoneEntriesFrom]] — candidate rows are BBOX
+    // HITS, not |zones| × |reports|, and no window: the only
+    // exchanges are the per-zone agg and the final sort.
     "geo_zone_entries" -> ((s, d) =>
-      zoneEntriesFrom(Voyages.withPxPy(track(s, d)), zonePolygons))
+      zoneEntriesFrom(Voyages.withPxPy(
+        Voyages.withPxPy(track(s, d)), "prev_id", "p"), zonePolygons))
   )
 
   /** Grid size the OD pipeline bins with — the single source the
@@ -341,21 +333,24 @@ object GeoOps {
   }
 
   /** Every report's place in its vessel's track: (user_id, event_id,
-    * voyage, is_new, ends, ord), one row per event, persisted ON DISK
-    * per fixture ([[graft.Cache.diskBacked]] "geo.track", bucketed by
-    * user_id). `voyage` and `is_new` are [[Voyages.segment]]'s;
-    * `ends` is 1 on a voyage's last report (the next report starts a
-    * new voyage, or there is none); `ord` is the report's position in
-    * the vessel's (ts, event_id) order, from 1. One [[Voyages.byVessel]]
-    * sort builds all four, once per fixture; geo_voyages, the OD
-    * build and geo_zone_entries then read it where each used to
-    * shuffle and sort the events by vessel on every pass. The
-    * bucketed scan is hash-partitioned on user_id, which satisfies
-    * their per-vessel windows and (user_id, …) aggregates with no
-    * exchange. Position, zone and px/py are pure functions of
-    * event_id, so consumers derive them after the scan
-    * ([[Voyages.withPos]], [[Voyages.withPxPy]]) and the artifact
-    * stays narrow. */
+    * prev_id, gap_us, voyage, is_new, ends), one row per event,
+    * persisted ON DISK per fixture ([[graft.Cache.diskBacked]]
+    * "geo.track", bucketed by user_id). `prev_id` is the event_id of
+    * the vessel's previous report in (ts, event_id) order and
+    * `gap_us` the µs since it ([[Voyages.gapUs]]), both null on the
+    * vessel's first report; `voyage` and `is_new` are
+    * [[Voyages.segment]]'s; `ends` is 1 on a voyage's last report (the
+    * next report starts a new voyage, or there is none). One
+    * [[Voyages.byVessel]] sort builds them all, once per fixture, so
+    * "which report came before this one" is decided here and nowhere
+    * else in this file: every per-vessel hop query and the OD build
+    * read it instead of shuffling and sorting the events by vessel on
+    * every pass. The bucketed scan is hash-partitioned on user_id,
+    * which satisfies their (user_id, …) aggregates and windows with
+    * no exchange. Position, zone and px/py are pure functions of an
+    * event_id, so consumers derive them for both ends of a hop after
+    * the scan ([[Voyages.withPos]], [[Voyages.withPxPy]],
+    * [[Voyages.eventZone]]) and the artifact stays narrow. */
   private[graft] def track(s: SparkSession, d: String): DataFrame =
     graft.Cache.diskBacked(s, d, "geo.track", "events.parquet",
       Seq("user_id"))(trackBuild(s, d))
@@ -369,9 +364,21 @@ object GeoOps {
   private[graft] def trackBuild(s: SparkSession, d: String): DataFrame =
     Voyages.segment(Tables.events(s, d)
         .repartition(graft.Cache.writeBuckets(s), col("user_id")))
+      .withColumn("prev_id", lag(col("event_id"), 1).over(Voyages.byVessel))
       .withColumn("ends", lead(col("is_new"), 1, 1L).over(Voyages.byVessel))
-      .withColumn("ord", row_number().over(Voyages.byVessel))
-      .select("user_id", "event_id", "voyage", "is_new", "ends", "ord")
+      .select("user_id", "event_id", "prev_id", "gap_us", "voyage",
+        "is_new", "ends")
+
+  /** The [[track]] with both ends of each report's hop positioned:
+    * `lat`, `lon` at event_id and `plat`, `plon` at prev_id (null on
+    * a vessel's first report). */
+  private def hops(s: SparkSession, d: String): DataFrame =
+    Voyages.withPos(Voyages.withPos(track(s, d)), "prev_id", "p")
+
+  /** The haversine km of a [[hops]] row's hop; null without a
+    * predecessor. */
+  private def hopKm: Column =
+    Geo.haversineKm(col("plat"), col("plon"), col("lat"), col("lon"))
 
   /** The OD voyage-flow matrix (o_zone, d_zone, n_voyages,
     * n_vessels), UNSORTED, persisted per (session, sf-dir): take each
@@ -533,10 +540,10 @@ object GeoOps {
     * arithmetic and the exploded rows scale with bbox hits. (This is
     * the first slice of the broadcast-edge-table plan: at thousands
     * of zones the literal array becomes a broadcast range join on
-    * bbox, same row contract.) `pts` carries `ord`, the report's
-    * per-user sequence number in (ts, event_id) order (the
-    * [[track]]'s) — [[zoneEntriesFrom]] orders by it and needs it to
-    * detect dropped predecessors. */
+    * bbox, same row contract.) `pts` carries the report's `px`, `py`
+    * and its predecessor's `ppx`, `ppy` (null on a vessel's first
+    * report); `prev_in` is the ray cast at the predecessor, false
+    * when there is none. */
   private[operators] def zoneCandidates(
       pts: DataFrame,
       zones: Seq[(String, Seq[(Long, Long)])]): DataFrame = {
@@ -547,34 +554,30 @@ object GeoOps {
       val maxy = verts.map(_._2).max
       when(col("px").between(minx, maxx)
           && col("py").between(miny, maxy),
-        struct(lit(z).as("zone"), insideExpr(verts).as("inside")))
+        struct(lit(z).as("zone"),
+          insideExpr(verts, col("px"), col("py")).as("inside"),
+          coalesce(insideExpr(verts, col("ppx"), col("ppy")), lit(false))
+            .as("prev_in")))
     }
     pts
-      .select(col("user_id"), col("ord"),
+      .select(col("user_id"),
         explode(filter(array(elems: _*), _.isNotNull)).as("zf"))
-      .select(col("user_id"), col("ord"),
-        col("zf.zone").as("zone"), col("zf.inside").as("inside"))
+      .select(col("user_id"), col("zf.zone").as("zone"),
+        col("zf.inside").as("inside"), col("zf.prev_in").as("prev_in"))
   }
 
-  /** Rising-edge entry counting over [[zoneCandidates]]. The bbox
-    * prefilter drops only OUTSIDE rows, so an entry is: inside now,
-    * and the report's immediate per-user predecessor was null,
-    * outside, or dropped. The dropped case is decided by an `ord`
-    * gap — lag sees the previous RETAINED row; if its ord isn't
-    * ord − 1, the true predecessor missed the bbox and was therefore
-    * outside. Exactly the full-explode semantics (spec-proven
-    * against it), one row per bbox hit. */
+  /** Rising-edge entry counting over [[zoneCandidates]]: an entry is
+    * a report inside the zone whose predecessor is absent or
+    * outside. The bbox prefilter drops only rows whose report is
+    * OUTSIDE, which are never entries, and each row carries its
+    * predecessor's flag, so no row needs another: exactly the
+    * full-explode semantics (spec-proven against it), one row per
+    * bbox hit and no window. */
   private[operators] def zoneEntriesFrom(
       pts: DataFrame,
       zones: Seq[(String, Seq[(Long, Long)])]): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy("zone", "user_id").orderBy("ord")
     zoneCandidates(pts, zones)
-      .withColumn("prev_in", lag("inside", 1).over(w))
-      .withColumn("prev_ord", lag("ord", 1).over(w))
-      .filter(col("inside") && (col("prev_in").isNull
-        || col("prev_ord") =!= col("ord") - 1
-        || !col("prev_in")))
+      .filter(col("inside") && !col("prev_in"))
       .groupBy("zone")
       .agg(count(lit(1)).as("n_entries"),
         countDistinct("user_id").as("n_users"))
@@ -632,7 +635,7 @@ object GeoOps {
       (x1, y1, x2, y2)
     }
 
-  /** Even-odd ray cast over the `px`/`py` columns — dispatches to
+  /** Even-odd ray cast of the point (`px`, `py`) — dispatches to
     * the native codegen'd [[graft.functions.expressions.RayCast]]
     * (edges hoisted into one stage-shared long[], primitive loop,
     * whole-stage codegen) instead of the HOF form, which allocates
@@ -642,14 +645,13 @@ object GeoOps {
     * GeoOpsSpec proves native == HOF over the complete position
     * orbit. Registration is idempotent on the calling thread's
     * active session. */
-  private[operators] def insideExpr(
-      verts: Seq[(Long, Long)]): org.apache.spark.sql.Column = {
+  private[operators] def insideExpr(verts: Seq[(Long, Long)],
+      px: Column, py: Column): Column = {
     graft.functions.GraftFunctions.ensureRegistered(
       org.apache.spark.sql.SparkSession.active)
     val flat = polyEdges(verts)
       .flatMap { case (x1, y1, x2, y2) => Seq(x1, y1, x2, y2) }
-    org.apache.spark.sql.functions.call_function("ray_cast",
-      col("px"), col("py"), lit(flat.toArray))
+    call_function("ray_cast", px, py, lit(flat.toArray))
   }
 
   /** The composable-`functions._` ray cast — ONE row-local fold over
@@ -910,7 +912,7 @@ object GeoOps {
       presenceCells(Voyages.withPos(Tables.events(s, d)), cellDeg = 30.0))
 
   val oracles: Map[String, String] = Map(
-    // Mirrors Geo.haversineKm / Geo.trackLength arithmetic exactly:
+    // Mirrors Geo.haversineKm arithmetic exactly:
     // radians(Δ)/2 inside sin, pow(·, 2), 2·R·asin(sqrt(a)).
     "geo_track_length" ->
       s"""WITH pos AS (

@@ -47,16 +47,22 @@ private[graft] object Voyages {
   private def lat(e: Column): Column = latCenti(e) / 100.0 - 90.0
   private def lon(e: Column): Column = lonCenti(e) / 100.0 - 180.0
 
-  /** Adds the derived position `lat`, `lon` in degrees. */
-  def withPos(df: DataFrame): DataFrame = df
-    .withColumn("lat", lat(col("event_id")))
-    .withColumn("lon", lon(col("event_id")))
+  /** Adds the derived position of the report whose id is in column
+    * `id`, in degrees: `lat`, `lon`, each name prefixed by `prefix`
+    * (`withPos(df, "prev_id", "p")` adds the predecessor's `plat`,
+    * `plon`; null where the id is). */
+  def withPos(df: DataFrame, id: String = "event_id",
+      prefix: String = ""): DataFrame = df
+    .withColumn(prefix + "lat", lat(col(id)))
+    .withColumn(prefix + "lon", lon(col(id)))
 
   /** Adds the same position as `py`, `px`: integer centi-degrees,
-    * (x, y) = (lon·100, lat·100) — what the integer ray cast reads. */
-  def withPxPy(df: DataFrame): DataFrame = df
-    .withColumn("py", latCenti(col("event_id")) - 9000)
-    .withColumn("px", lonCenti(col("event_id")) - 18000)
+    * (x, y) = (lon·100, lat·100) — what the integer ray cast reads.
+    * `id` and `prefix` as in [[withPos]]. */
+  def withPxPy(df: DataFrame, id: String = "event_id",
+      prefix: String = ""): DataFrame = df
+    .withColumn(prefix + "py", latCenti(col(id)) - 9000)
+    .withColumn(prefix + "px", lonCenti(col(id)) - 18000)
 
   /** The grid zone of [[withPos]]'s position at `cellDeg`. */
   def zone(cellDeg: Double): Column =

@@ -49,6 +49,11 @@ class ConstructionSpec extends SparkSpec {
     // The per-vessel track (GeoOps.track) is an on-disk artifact of
     // the same kind: whichever of its consumers is constructed first
     // in a process with no published version builds and writes it.
+    // Every per-vessel hop query reads it.
+    "geo_track_length" -> "one-time geo.track build + write",
+    "geo_headings" -> "one-time geo.track build + write",
+    "geo_speed_flags" -> "one-time geo.track build + write",
+    "geo_zone_dwell" -> "one-time geo.track build + write",
     "geo_voyages" -> "one-time geo.track build + write",
     "geo_od_matrix" -> "one-time geo.track build + write",
     "geo_lanes_top" -> "one-time geo.track build + write",

@@ -57,16 +57,39 @@ class PlanSpec extends SparkSpec {
     p.linesIterator.count(
       "hashpartitioning\\(user_id#\\d+L?, \\d+\\)".r.findFirstIn(_).isDefined)
 
+  /** Window nodes in `p`'s numbered detail section. */
+  private def windows(p: String): Int =
+    p.linesIterator.count(_.trim.matches("\\(\\d+\\) Window"))
+
+  /** `name` reads the geo.track artifact and plans no Window and no
+    * hash exchange on user_id: each hop is a track row's own prev_id
+    * → event_id, and the per-vessel aggregate runs on the scan's
+    * user_id buckets. A Window back means a query re-derives the
+    * predecessor; a user_id exchange means the track was read
+    * unbucketed. Returns the plan. */
+  private def trackHopPlan(name: String): String = {
+    val p = plan(name)
+    assert(p.contains("graft_idx_") && p.contains("geo_track"),
+      s"$name no longer reads the geo.track artifact:\n$p")
+    assert(windows(p) == 0, s"${windows(p)} Window nodes in $name:\n$p")
+    assert(userExchanges(p) == 0, s"$name shuffles by user_id:\n$p")
+    p
+  }
+
   test("geo_voyages: all windows + agg ride ONE data exchange") {
-    // The voyage split is read from the user_id-bucketed geo.track,
-    // so the hop window over (user_id, voyage) and the per-voyage agg
-    // run on the scan's partitioning: the one exchange left is the
-    // final range sort. A hash exchange on user_id would mean the
-    // track was read unbucketed or the window lost that partitioning.
-    val p = plan("geo_voyages")
+    // No window is left: a report continuing its voyage adds the hop
+    // from the track's prev_id, and the per-voyage agg runs on the
+    // track's buckets. The one exchange is the final range sort.
+    val p = trackHopPlan("geo_voyages")
     assert(shuffleExchanges(p) <= 1, p)
-    assert(userExchanges(p) == 0, p)
     assert(p.contains("rangepartitioning"), p)
+  }
+
+  test("geo_track_length: hops from the track, no window, no user" +
+      " exchange") {
+    // The per-vessel agg runs on the track's buckets: the one
+    // exchange is the final range sort.
+    assert(shuffleExchanges(trackHopPlan("geo_track_length")) <= 1)
   }
 
   test("text_pack_bins: two-phase prefix — the data-sized window" +
@@ -141,16 +164,21 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("TakeOrderedAndProject"))
   }
 
-  test("geo_headings: hop window, sector agg, modal windows share ONE" +
-      " user exchange") {
-    // 1 hash (user_id) + 1 range (final sort); a third would mean a
-    // window or the agg lost the shared partitioning
-    assert(shuffleExchanges(plan("geo_headings")) <= 2)
+  test("geo_headings: modal windows ride the track's buckets, no user" +
+      " exchange") {
+    // The hop's bearing is row-local over the track's prev_id; the
+    // (user_id, sector) agg and both per-vessel modal windows are
+    // satisfied by the track's user_id buckets, so the one exchange
+    // is the final range sort.
+    val p = plan("geo_headings")
+    assert(p.contains("geo_track"), p)
+    assert(userExchanges(p) == 0, p)
+    assert(shuffleExchanges(p) <= 1, p)
   }
 
-  test("geo_speed_flags: hop window and per-vessel agg share ONE" +
+  test("geo_speed_flags: hops and gaps from the track, no window, no" +
       " user exchange") {
-    assert(shuffleExchanges(plan("geo_speed_flags")) <= 2)
+    assert(shuffleExchanges(trackHopPlan("geo_speed_flags")) <= 1)
   }
 
   test("pipeline_corpus_prep: narrow-fingerprint dedup + two-phase pack") {
@@ -188,25 +216,21 @@ class PlanSpec extends SparkSpec {
       "no exchange partitions by (event_type, day)")
   }
 
-  test("geo_zone_dwell: hop window and (user, zone) agg share ONE" +
-      " user exchange") {
-    // 1 hash (user_id) + 1 range (final sort); the (user_id, zone)
-    // aggregate's clustering is satisfied by the window's hash
-    // partitioning (user_id ⊆ group keys) — a third exchange would
-    // mean that property broke
-    assert(shuffleExchanges(plan("geo_zone_dwell")) <= 2)
+  test("geo_zone_dwell: the (user, zone) agg rides the track's" +
+      " buckets, no window") {
+    // The zone is the track's prev_id's, and the (user_id, zone)
+    // aggregate's clustering is satisfied by the track's user_id
+    // buckets (user_id ⊆ group keys): the one exchange is the final
+    // range sort.
+    assert(shuffleExchanges(trackHopPlan("geo_zone_dwell")) <= 1)
   }
 
-  test("geo_zone_entries: entry window partitions by (zone, user)") {
-    // The report ordinal (the bbox prefilter's gap detector) is the
-    // geo.track's `ord`, and the (zone, user_id) window runs on the
-    // track's user_id buckets: 1 hash (per-zone distinct agg — zone
-    // alone is a coarser key than the window's, so this re-shuffle
-    // is expected) + 1 range (final sort)
-    val p = plan("geo_zone_entries")
-    assert(shuffleExchanges(p) <= 2, p)
-    assert(userExchanges(p) == 0, p)
-    assert(p.contains("Window"))
+  test("geo_zone_entries: both ray casts are row-local, no window") {
+    // The predecessor's inside flag is cast at the track's prev_id
+    // position on the same row, so no window orders the candidates:
+    // 1 hash (the per-zone agg, a coarser key than the buckets) + 1
+    // range (final sort).
+    assert(shuffleExchanges(trackHopPlan("geo_zone_entries")) <= 2)
   }
 
   test("events_funnel: all three stage windows share ONE user exchange") {
@@ -326,9 +350,8 @@ class PlanSpec extends SparkSpec {
       .queryExecution.explainString(ExplainMode.fromString("formatted"))
     assert(raw.contains("graft_idx_") && raw.contains("geo_track"),
       s"the OD build no longer reads the geo.track artifact:\n$raw")
-    val windows = raw.linesIterator
-      .count(_.trim.matches("\\(\\d+\\) Window"))
-    assert(windows == 0, s"$windows Window nodes in the OD build:\n$raw")
+    assert(windows(raw) == 0,
+      s"${windows(raw)} Window nodes in the OD build:\n$raw")
     assert(userExchanges(raw) == 0,
       s"the OD build shuffles by user_id:\n$raw")
   }

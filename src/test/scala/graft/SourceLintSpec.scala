@@ -10,7 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * factory ([[EngineConf.builder]]), the command-line mains are
   * exactly the documented ones, connected components have one solver
   * ([[operators.Graph]]), the voyage-segmentation rules have one
-  * definition per dialect ([[operators.Voyages]]), and the MinHash
+  * definition per dialect ([[operators.Voyages]]) and GeoOps orders a
+  * vessel's reports only to build its track, and the MinHash
   * signature aggregate survives only as the spec of the native
   * kernel. A new one-off study belongs in a scratch copy or in
   * `perfbench`, not in the library. */
@@ -40,6 +41,17 @@ class SourceLintSpec extends AnyFunSuite {
         rule.r.findAllMatchIn(l).map(_ => f -> i)
       }
     }
+
+  /** The code-line index range (exclusive) of `def name(` in `file`:
+    * from its line to the next `def` line. */
+  private def defRange(file: String, name: String): (Int, Int) = {
+    val defs = code(sources(file)).collect {
+      case (l, i) if "\\bdef\\s".r.findFirstIn(l).isDefined => l -> i
+    }
+    val at = defs.indexWhere(_._1.contains(s"def $name("))
+    assert(at >= 0, s"$file: def $name is gone")
+    (defs(at)._2, defs.lift(at + 1).map(_._2).getOrElse(Int.MaxValue))
+  }
 
   private val kept = Set(
     "graft.Bench", "graft.Verify", "graft.Explain", "graft.ScaleFixture",
@@ -115,15 +127,24 @@ class SourceLintSpec extends AnyFunSuite {
       codeHits("\\bhash\\([^()]*(\\([^()]*\\))?[^()]*,\\s*lit\\(")
     assert(hits.map(_._1).toSet == Set(dedup),
       s"MinHash aggregate outside the spec: ${hits.map(_._1).distinct}")
-    val defs = code(sources(dedup)).collect {
-      case (l, i) if "\\bdef\\s".r.findFirstIn(l).isDefined => l -> i
-    }
-    val spec = defs.indexWhere(_._1.contains("def minhash("))
-    assert(spec >= 0, "Dedup.minhash (the spec) is gone")
-    val (from, until) = (defs(spec)._2,
-      defs.lift(spec + 1).map(_._2).getOrElse(Int.MaxValue))
+    val (from, until) = defRange(dedup, "minhash")
     assert(hits.forall { case (_, i) => i > from && i < until },
       "the MinHash aggregate appears outside Dedup.minhash")
+  }
+
+  test("GeoOps orders a vessel's reports once, in the track build") {
+    // Voyages.byVessel is the per-vessel (ts, event_id) order and
+    // Voyages.gapUs lags over it. In GeoOps both belong to the one
+    // sort that builds geo.track; every hop query reads the track's
+    // prev_id and gap_us instead of re-deriving the predecessor.
+    val geo = "graft/operators/GeoOps.scala"
+    val hits = codeHits("\\bVoyages\\.(byVessel|gapUs)\\b")
+      .filter(_._1 == geo)
+    assert(hits.nonEmpty, "GeoOps.trackBuild no longer sorts byVessel")
+    val (from, until) = defRange(geo, "trackBuild")
+    val outside = hits.filterNot { case (_, i) => i > from && i < until }
+    assert(outside.isEmpty, "Voyages.byVessel/gapUs outside trackBuild" +
+      s" at GeoOps lines ${outside.map(_._2 + 1).mkString(", ")}")
   }
 
   test("the stateful stream twins share one per-vessel fold and one" +

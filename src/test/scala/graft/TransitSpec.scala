@@ -43,11 +43,16 @@ class TransitSpec extends SparkSpec {
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(nVoyages(9L) == 2 && nVoyages(7L) == 1)
 
-    // 2. per-voyage track length
-    val tracks = Geo.trackLength(
-      voyages.withColumn("vkey",
-        concat_ws("-", col("vessel"), col("voyage"))), "vkey")
-      .collect().map(r => r.getString(0) -> r.getDouble(2)).toMap
+    // 2. per-voyage track length: haversine over each hop in the
+    // voyage (a voyage's first point has no hop)
+    val byVoyage = Window.partitionBy("vessel", "voyage").orderBy("ts")
+    val tracks = voyages
+      .withColumn("hop_km", Geo.haversineKm(
+        lag(col("lat"), 1).over(byVoyage), lag(col("lon"), 1).over(byVoyage),
+        col("lat"), col("lon")))
+      .groupBy(concat_ws("-", col("vessel"), col("voyage")))
+      .agg(coalesce(sum("hop_km"), lit(0.0)))
+      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
     assert(tracks("9-1") > 5 && tracks("9-1") < 15)   // harbor loop ~7km
     assert(tracks("7-1") > 30 && tracks("7-1") < 80)  // ~67km east
     assert(tracks("9-2") > 1 && tracks("9-2") < 5)

@@ -52,22 +52,4 @@ class GeoSpec extends SparkSpec {
     assert(cells(0) != cells(2))
     assert(cells(0) == "40:-74")
   }
-
-  test("trackLength sums hops per entity in ts order") {
-    val s = spark
-    import s.implicits._
-    // vessel 1: NYC -> LHR -> SIN; vessel 2: single point
-    val df = Seq(
-      (1L, 1L, 40.6413, -73.7781),
-      (1L, 2L, 51.4700, -0.4543),
-      (1L, 3L, 1.3644, 103.9915),
-      (2L, 1L, 0.0, 0.0))
-      .toDF("vessel", "ts", "lat", "lon")
-    val out = Geo.trackLength(df, "vessel").collect()
-      .map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
-    assert(out(2L) == ((1L, 0.0)))
-    val (n, km) = out(1L)
-    assert(n == 3)
-    assert(math.abs(km - (5540 + 10880)) < 100, s"track km $km")
-  }
 }

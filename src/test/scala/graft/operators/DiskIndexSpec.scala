@@ -176,15 +176,21 @@ class DiskIndexSpec extends SparkSpec {
     val fx = new Fixture("v2")
     val r1 = fx.rows
     val meta = fx.metaLines
-    assert(meta.size == 3 && meta.head.startsWith("v3:"), s"meta: $meta")
+    assert(meta.size == 3 && meta.head.startsWith("v4:"), s"meta: $meta")
+    val fp = meta.head.stripPrefix("v4:")
     // The v2 meta: `v2:<fingerprint>` then the DDL, no bucket count.
-    java.nio.file.Files.writeString(fx.versionDir.resolve("meta"),
-      "v2:" + meta.head.stripPrefix("v3:") + "\n" + meta(2))
-    spark.sql(s"DROP TABLE ${fx.tableName}")
-    Cache.clear(spark, fx.name)
-    assert(fx.rows == r1)
-    assert(fx.builds == 2, "a v2 artifact must be rebuilt")
-    assert(fx.metaLines.head.startsWith("v3:"))
+    // The v3 meta: the current three lines under the v3 tag, as the
+    // build before geo.track's prev_id/gap_us columns wrote them.
+    val older = Seq("v2:" + fp + "\n" + meta(2),
+      (("v3:" + fp) +: meta.tail).mkString("\n"))
+    older.zipWithIndex.foreach { case (m, i) =>
+      java.nio.file.Files.writeString(fx.versionDir.resolve("meta"), m)
+      spark.sql(s"DROP TABLE ${fx.tableName}")
+      Cache.clear(spark, fx.name)
+      assert(fx.rows == r1)
+      assert(fx.builds == i + 2, s"a ${m.take(2)} artifact must be rebuilt")
+      assert(fx.metaLines.head.startsWith("v4:"))
+    }
   }
 
   test("a version deleted under a live session rebuilds once and " +

@@ -289,17 +289,21 @@ class GeoOpsSpec extends SparkSpec {
         (cx + 1, cy + 400))
     }).toSeq
 
-  /** 3000 reports of 25 vessels; `ord` is each report's place in its
-    * vessel's (ts, event_id) order, as [[GeoOps.track]] stores it. */
+  /** 3000 reports of 25 vessels, each carrying its predecessor's
+    * position `ppx`, `ppy` as [[GeoOps.track]]'s prev_id gives it:
+    * report id follows id − 25 in its vessel's (ts, event_id) order,
+    * and the first 25 have none (null). */
   private lazy val gridPts = {
     import org.apache.spark.sql.functions._
+    val prev = when(col("id") >= 25, col("id") - 25)
     spark.range(3000).select(
       (col("id") % 25).as("user_id"),
       col("id").as("ts"),
       col("id").as("event_id"),
       (col("id") * 104729 % 36000 - 18000).as("px"),
       (col("id") * 7919 % 18000 - 9000).as("py"),
-      (expr("id div 25") + 1).cast("int").as("ord"))
+      (prev * 104729 % 36000 - 18000).as("ppx"),
+      (prev * 7919 % 18000 - 9000).as("ppy"))
   }
 
   test("zoneCandidates: exploded rows track bbox hits, not" +
@@ -330,7 +334,8 @@ class GeoOpsSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     // naive reference: the pre-r8 full explode, no prefilter
     val zoneFlags = gridZones.map { case (z, verts) =>
-      struct(lit(z).as("zone"), GeoOps.insideExpr(verts).as("inside"))
+      struct(lit(z).as("zone"),
+        GeoOps.insideExpr(verts, col("px"), col("py")).as("inside"))
     }
     val w = Window.partitionBy("zone", "user_id").orderBy("ts", "event_id")
     val naive = gridPts
@@ -350,19 +355,19 @@ class GeoOpsSpec extends SparkSpec {
     assert(naive.nonEmpty && pruned == naive,
       "bbox-pruned entries diverge from the full-explode semantics")
 
-    // The hazard the ord-gap guard exists for: inside → far away
-    // (report DROPPED by the bbox prefilter) → inside again must
-    // count 2 entries; a lag over retained rows alone would see
-    // inside → inside and count 1.
+    // inside → far away (its row DROPPED by the bbox prefilter) →
+    // inside again must count 2 entries: the last report's
+    // predecessor flag is cast at its own (ppx, ppy), not read from
+    // the previous retained row, which is inside and would count 1.
     val s = spark
     import s.implicits._
     val (cx, cy) = (-16200L, -8100L)
-    val seqPts = Seq(
-      (1L, 1, cx, cy),
-      (1L, 2, cx + 1, cy),
-      (1L, 3, 17000L, 8000L),
-      (1L, 4, cx, cy))
-      .toDF("user_id", "ord", "px", "py")
+    val seqPts = Seq[(Long, Long, Long, Option[Long], Option[Long])](
+      (1L, cx, cy, None, None),
+      (1L, cx + 1, cy, Some(cx), Some(cy)),
+      (1L, 17000L, 8000L, Some(cx + 1), Some(cy)),
+      (1L, cx, cy, Some(17000L), Some(8000L)))
+      .toDF("user_id", "px", "py", "ppx", "ppy")
     val reentries = GeoOps.zoneEntriesFrom(seqPts, gridZones)
       .filter(col("zone") === "z_0_0").collect()
     assert(reentries.length == 1 && reentries(0).getLong(1) == 2,
@@ -382,7 +387,7 @@ class GeoOpsSpec extends SparkSpec {
     (GeoOps.zonePolygons ++ gridZones.take(20)).foreach {
       case (z, verts) =>
         val diff = pts.select(
-          GeoOps.insideExpr(verts).as("native"),
+          GeoOps.insideExpr(verts, col("px"), col("py")).as("native"),
           GeoOps.insideExprHof(verts).as("hof"))
           .filter(col("native") =!= col("hof")).count()
         assert(diff == 0L, s"zone $z: native ray cast diverges from" +

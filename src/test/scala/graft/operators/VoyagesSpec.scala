@@ -174,6 +174,72 @@ class VoyagesSpec extends SparkSpec {
     assert(gotEntries == entries(tieAsc = true))
     assert(gotEntries.find(_._1 == zoneName).exists(_._2 >= 2))
     assert(entries(tieAsc = true) != entries(tieAsc = false))
+
+    // The per-hop queries, against Scala references over each
+    // vessel's hops (user, prev event_id, event_id, gap µs); the
+    // arithmetic is Geo.haversineKm's and Geo.bearingDeg's.
+    def hopsOf(tieAsc: Boolean): Seq[(Long, Long, Long, Long)] =
+      ordered(tieAsc).toSeq.sortBy(_._1).flatMap { case (u, rs) =>
+        rs.sliding(2).collect { case Seq(p, c) =>
+          (u, p._1, c._1, c._2 - p._2) }
+      }
+    def halfUp(x: Double, dp: Int): Double =
+      BigDecimal(x).setScale(dp, BigDecimal.RoundingMode.HALF_UP).toDouble
+    def hav(p: Long, c: Long): Double = {
+      val ((lat1, lon1), (lat2, lon2)) = (Voyages.latLon(p), Voyages.latLon(c))
+      val a = math.pow(math.sin(math.toRadians(lat2 - lat1) / 2), 2) +
+        math.cos(math.toRadians(lat1)) * math.cos(math.toRadians(lat2)) *
+          math.pow(math.sin(math.toRadians(lon2 - lon1) / 2), 2)
+      2 * 6371.0088 * math.asin(math.sqrt(a))
+    }
+    def sector(p: Long, c: Long): Long = {
+      val ((lat1, lon1), (lat2, lon2)) = (Voyages.latLon(p), Voyages.latLon(c))
+      val dLon = math.toRadians(lon2 - lon1)
+      val y = math.sin(dLon) * math.cos(math.toRadians(lat2))
+      val x = math.cos(math.toRadians(lat1)) * math.sin(math.toRadians(lat2)) -
+        math.sin(math.toRadians(lat1)) * math.cos(math.toRadians(lat2)) *
+          math.cos(dLon)
+      val deg = math.toDegrees(math.atan2(y, x)) % 360
+      val bearing = if (deg < 0) (deg + 360) % 360 else deg
+      math.floor(halfUp(bearing, 3) / 45).toLong % 8
+    }
+    /** `f` over each vessel's `hops`, by user. */
+    def byUser[T](hops: Seq[(Long, Long, Long, Long)])(
+        f: (Long, Seq[(Long, Long, Long, Long)]) => T): Seq[T] =
+      hops.groupBy(_._1).toSeq.sortBy(_._1).map(f.tupled)
+
+    def trackLength(tieAsc: Boolean): Seq[(Long, Long, Double)] =
+      ordered(tieAsc).toSeq.sortBy(_._1).map { case (u, rs) =>
+        (u, rs.size.toLong, halfUp(hopsOf(tieAsc).filter(_._1 == u)
+          .map(h => hav(h._2, h._3)).sum, 3))
+      }
+    assert(GeoOps.queries("geo_track_length")(spark, dir)
+      .as[(Long, Long, Double)].collect().toSeq == trackLength(tieAsc = true))
+    assert(trackLength(tieAsc = true) != trackLength(tieAsc = false))
+
+    val headings = byUser(hopsOf(tieAsc = true)) { (u, hs) =>
+      val (sec, n) = hs.groupBy(h => sector(h._2, h._3)).toSeq
+        .map { case (k, v) => (k, v.size.toLong) }.minBy(r => (-r._2, r._1))
+      (u, sec, n, hs.size.toLong)
+    }
+    assert(GeoOps.queries("geo_headings")(spark, dir)
+      .as[(Long, Long, Long, Long)].collect().toSeq == headings)
+
+    val speed = byUser(hopsOf(tieAsc = true).filter(_._4 > 0)) { (u, hs) =>
+      val bad = hs.count(h => hav(h._2, h._3) / (h._4 / 3.6e9) > 500.0).toLong
+      (u, hs.size.toLong, bad, halfUp(bad.toDouble / hs.size, 4))
+    }
+    assert(GeoOps.queries("geo_speed_flags")(spark, dir)
+      .as[(Long, Long, Long, Double)].collect().toSeq == speed)
+
+    def dwell(tieAsc: Boolean): Seq[(Long, String, Long, Long)] =
+      hopsOf(tieAsc).filter(_._4 <= Voyages.GapMicros)
+        .groupBy(h => (h._1, Voyages.zoneOf(h._2))).toSeq.sortBy(_._1)
+        .map { case ((u, z), hs) =>
+          (u, z, hs.map(_._4).sum / 1000000L, hs.size.toLong) }
+    assert(GeoOps.queries("geo_zone_dwell")(spark, dir)
+      .as[(Long, String, Long, Long)].collect().toSeq == dwell(tieAsc = true))
+    assert(dwell(tieAsc = true) != dwell(tieAsc = false))
   }
 
   test("Column and Scala twins agree on every event_id of the" +
