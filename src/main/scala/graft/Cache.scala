@@ -249,17 +249,18 @@ object Cache {
     }
   }
 
-  /** Layout-versioned source fingerprint. "v4:" = artifact LAYOUT
+  /** Layout-versioned source fingerprint. "v5:" = artifact LAYOUT
     * version (v2: one file per bucket since the writeBucketed
     * repartition fix; v3: the writer's bucket count recorded in
-    * meta; v4: `geo.track` holds prev_id and gap_us instead of ord)
-    * — bumping it invalidates artifacts written under an older
-    * layout even when the source fingerprint still matches. A change
+    * meta; v4: `geo.track` holds prev_id and gap_us instead of ord;
+    * v5: `sim.ivf.ranked` drops its unread pcos column) — bumping it
+    * invalidates artifacts written under an older layout even when
+    * the source fingerprint still matches. A change
     * to any artifact's output schema bumps the tag, or a version an
     * older build published for the same source is attached with its
     * old columns. */
   private def layoutFp(s: SparkSession, path: String): String =
-    "v4:" + fingerprint(s, path)
+    "v5:" + fingerprint(s, path)
 
   /** The bucket count `s` writes an artifact with: one wave of its
     * tasks (see [[diskBacked]]). A build that partitions its frame on

@@ -5,7 +5,7 @@ import org.apache.spark.sql.Row
 /** check.py's `norm` (9 significant digits), applied recursively so
   * nested arrays/structs/maps compare value-wise. One definition for
   * every execution-robustness comparison (ShapeInvarianceSpec,
-  * SpillSpec, SortSpillCheck): all invariance claims compare at the
+  * SpillSpec, SortSpillSpec): all invariance claims compare at the
   * oracle's own bar, and the bar cannot drift between harnesses. */
 object RowNorm {
   def norm(v: Any): String = v match {

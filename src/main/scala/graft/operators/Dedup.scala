@@ -340,11 +340,8 @@ object Dedup {
     // vecDot instead of paying a full exchange over the candidate
     // set; the dedup happens after the cos ≥ 0.45 filter, where a
     // handful of rows remain.
-    "dedup_embed_ann" -> ((s, d) => {
-      val n = EngineConf.parquetRowCount(s, s"$d/embeddings.parquet")
-      embedAnnPairs(s, d, Similarity.LshTables, Similarity.lshBits(n),
-        Similarity.LshSeed, Similarity.DedupH1Tables, threshold = 0.45)
-    })
+    "dedup_embed_ann" -> ((s, d) =>
+      embedAnnPairs(s, d, Similarity.DedupH1Tables, threshold = 0.45))
   )
 
   /** The dedup_minhash pipeline sans final sort (shared with
@@ -545,13 +542,12 @@ object Dedup {
       Graph.ccFixedPoint[Long](edges)
     }
 
-  /** The dedup_embed_ann pipeline, parameterized so the AnnSweep tool
-    * can measure pair coverage of candidate configs with the exact
-    * code the declared query runs. */
+  /** The dedup_embed_ann pipeline: LSH candidates (Hamming-1 probing
+    * the first `nH1` tables) verified at cos ≥ `threshold`.
+    * SimilaritySpec runs it at 0.40 to pin the coverage margin. */
   private[operators] def embedAnnPairs(s: SparkSession, d: String,
-      nTables: Int, bits: Int, seed: Long, nH1: Int,
-      threshold: Double): DataFrame =
-    Similarity.lshCandidates(s, d, nTables, bits, seed, nH1)
+      nH1: Int, threshold: Double): DataFrame =
+    Similarity.lshCandidates(s, d, nH1)
       .filter(col("v1") < col("v2"))
       .filter(col("cos") >= threshold)
       .dropDuplicates("v1", "v2")

@@ -71,22 +71,53 @@ object Similarity {
     }
 
   /** Deterministic random hyperplanes: nPlanes x dim coefficients from
-    * a fixed-seed PRNG (stable across runs and JVMs — recall on a
-    * given dataset is therefore deterministic, not a per-run gamble). */
-  def hyperplanes(nPlanes: Int, dim: Int,
-      seed: Long = 42L): Seq[(Int, Seq[Double])] = {
-    val rng = new java.util.Random(seed)
+    * the fixed-seed ([[LshSeed]]) PRNG (stable across runs and JVMs —
+    * recall on a given dataset is therefore deterministic, not a
+    * per-run gamble). */
+  def hyperplanes(nPlanes: Int, dim: Int): Seq[(Int, Seq[Double])] = {
+    val rng = new java.util.Random(LshSeed)
     (0 until nPlanes).map(p => (p, Seq.fill(dim)(rng.nextGaussian())))
   }
+
+  /** Shared LSH index config: ONE persisted bucket index (LshTables
+    * tables, occupancy-16 bits, fixed seed) serves both ann_lsh and
+    * dedup_embed_ann; only the probe policy (how many tables get
+    * Hamming-1 multi-probe) differs per query, and probing is a
+    * query-side choice that needs no index rebuild. Measured on the
+    * fixtures (isotropic vectors — the adversarial case; see class
+    * doc): at sf0.1 (n=2000) this config gives ann recall@3 = 0.932
+    * at 1493 directed candidates per query — below the 1999 a
+    * brute-force scan pays, and constant in n beyond (candidates ≈
+    * tables · occupancy · probes, not n) — and with all tables
+    * probed, pair coverage is COMPLETE down to cos 0.40 at every
+    * fixture SF (the dedup oracle needs 0.45; 0.40 is the safety
+    * margin). SimilaritySpec asserts all of these on every commit. */
+  private val LshTables = 32
+  private val LshSeed = 42L
+  private[operators] val AnnH1Tables = 8
+  // All 32 tables H1-probed for dedup: 16 was measured to miss one
+  // qualifying pair at sf0.1 — total coverage is what lets this
+  // query keep the EXACT oracle.
+  private[operators] val DedupH1Tables = 32
 
   /** Bits per LSH table targeting ~16 vectors/bucket (floored at 4,
     * capped at 48 — bucket codes are 64-bit BIGINTs): occupancy — not
     * bucket count — is what holds candidate volume linear as n grows,
     * and ~16 keeps per-probe cost low enough that many tables stay
     * cheaper than brute force. */
-  private[operators] def lshBits(n: Long): Int =
+  private def lshBits(n: Long): Int =
     math.min(48, math.max(4,
       (math.log(n / 16.0) / math.log(2)).ceil.toInt))
+
+  /** [[lshBits]] of `d`'s whole embeddings table (footer row count),
+    * for the unsharded index and every shard alike. */
+  private def indexBits(s: SparkSession, d: String): Int =
+    lshBits(EngineConf.parquetRowCount(s, s"$d/embeddings.parquet"))
+
+  /** "tables.bits.seed": the index config every LSH artifact name
+    * carries. */
+  private def indexKey(s: SparkSession, d: String): String =
+    s"$LshTables.${indexBits(s, d)}.$LshSeed"
 
   /** Per-table LSH bucket codes: one NARROW row per (vector, table)
     * with columns vec_id/tbl/bucket. Signature bits come from
@@ -126,24 +157,24 @@ object Similarity {
     * layout scattered v1 and re-inflated that shuffle 28k → 126k
     * records), and at wide-path scale the sigs ⋈ vecs attach is
     * co-keyed on vec_id. */
-  private[operators] def lshBuckets(s: SparkSession, d: String,
-      nTables: Int, bits: Int, seed: Long): DataFrame =
-    Cache.diskBacked(s, d, s"sim.lsh.$nTables.$bits.$seed",
+  private[operators] def lshBuckets(s: SparkSession, d: String): DataFrame =
+    Cache.diskBacked(s, d, s"sim.lsh.${indexKey(s, d)}",
       "embeddings.parquet", Seq("vec_id")) {
-      signatures(s, vecs(s, d), nTables, bits, seed)
+      signatures(s, d, vecs(s, d))
     }
 
-  /** (vec_id, tbl, bucket) signature rows of `v` — the one body behind
-    * the unsharded index ([[lshBuckets]]) and its shards
-    * ([[lshBucketsShard]]). */
-  private def signatures(s: SparkSession, v: DataFrame,
-      nTables: Int, bits: Int, seed: Long): DataFrame = {
+  /** (vec_id, tbl, bucket) signature rows of `v`, a subset of `d`'s
+    * vectors — the one body behind the unsharded index
+    * ([[lshBuckets]]) and its shards ([[lshBucketsShard]]). */
+  private def signatures(s: SparkSession, d: String,
+      v: DataFrame): DataFrame = {
     GraftFunctions.ensureRegistered(s)
-    val flat: Seq[Double] = hyperplanes(nPlanes = nTables * bits,
-      dim = 64, seed).flatMap(_._2)
+    val bits = indexBits(s, d)
+    val flat: Seq[Double] = hyperplanes(nPlanes = LshTables * bits,
+      dim = 64).flatMap(_._2)
     v.select(col("vec_id"),
       posexplode(GraftFunctions.lshSignature(
-        col("embedding"), flat, nTables, bits))
+        col("embedding"), flat, LshTables, bits))
         .as(Seq("tbl", "bucket")))
   }
 
@@ -264,11 +295,11 @@ object Similarity {
     * (v1, v2, cos) rows ever leave the stage. Both paths produce
     * identical values (SimilaritySpec pins equality). */
   private[operators] def lshCandidates(s: SparkSession, d: String,
-      nTables: Int, bits: Int, seed: Long, nH1: Int,
-      attachMaxRows: Long = -1L): DataFrame = {
+      nH1: Int, attachMaxRows: Long = -1L): DataFrame = {
     val attachBound =
       if (attachMaxRows >= 0) attachMaxRows else attachBroadcastMaxRows(s)
-    val sigs = lshBuckets(s, d, nTables, bits, seed)
+    val sigs = lshBuckets(s, d)
+    val bits = indexBits(s, d)
     val v = vecs(s, d)
     val n = EngineConf.parquetRowCount(s, s"$d/embeddings.parquet")
     def cosOf(ea: Column, na: Column, eb: Column, nb: Column): Column =
@@ -304,27 +335,6 @@ object Similarity {
           cosOf(col("ea"), col("na"), col("eb"), col("nb")).as("cos"))
     }
   }
-
-  /** Shared LSH index config: ONE persisted bucket index (LshTables
-    * tables, occupancy-16 bits, fixed seed) serves both ann_lsh and
-    * dedup_embed_ann; only the probe policy (how many tables get
-    * Hamming-1 multi-probe) differs per query, and probing is a
-    * query-side choice that needs no index rebuild. Constants
-    * MEASURED by the AnnSweep tool on the fixtures (isotropic vectors
-    * — the adversarial case; see class doc): at sf0.1 (n=2000) this
-    * config gives ann recall@3 = 0.932 at 1493 directed candidates
-    * per query — below the 1999 a brute-force scan pays, and constant
-    * in n beyond (candidates ≈ tables · occupancy · probes, not n) —
-    * and with all tables probed, pair coverage is COMPLETE down to
-    * cos 0.40 at every fixture SF (the dedup oracle needs 0.45; 0.40
-    * is the safety margin SimilaritySpec pins). */
-  private[operators] val LshTables = 32
-  private[operators] val LshSeed = 42L
-  private[operators] val AnnH1Tables = 8
-  // All 32 tables H1-probed for dedup: 16 was measured to miss one
-  // qualifying pair at sf0.1 — total coverage is what lets this
-  // query keep the EXACT oracle.
-  private[operators] val DedupH1Tables = 32
 
   val queries: Map[String, Q] = Map(
     // Global top-20 most-similar pairs (v1 < v2), brute force over the
@@ -363,21 +373,18 @@ object Similarity {
     // row_number over the distinct pairs — so the only exchange the
     // wide candidate set pays is the window shuffle of narrow
     // (v1, v2, cos) rows; dedup happens after rk ≤ 3 on ~3n rows.
-    "ann_lsh" -> ((s, d) => {
-      val n = EngineConf.parquetRowCount(s, s"$d/embeddings.parquet")
-      annTopK(s, d, LshTables, lshBits(n), LshSeed, AnnH1Tables)
-    }),
+    "ann_lsh" -> ((s, d) => annTopK(s, d, AnnH1Tables)),
 
     // ANN via IVF: coarse-quantize into cells (Lloyd iterations from
     // deterministic seeds, index persisted), probe each query's
     // nearest cells, exact cosine inside probed cells, top-3.
     // No-oracle (approximate); SimilaritySpec asserts recall ≥ 0.9
-    // AND the probed fraction. Constants measured by AnnSweep on the
-    // fixtures (isotropic — the adversarial case; see class doc).
+    // AND the probed fraction. Constants measured on the fixtures
+    // (isotropic — the adversarial case; see class doc).
     "ann_ivf" -> ((s, d) => {
       val n = EngineConf.parquetRowCount(s, s"$d/embeddings.parquet")
       val k = ivfCells(n)
-      ivfTopK(s, d, k, nprobe = ivfNprobe(k), IvfLloydIters)
+      ivfTopK(s, d, k, nprobe = ivfNprobe(k))
     })
   )
 
@@ -389,11 +396,11 @@ object Similarity {
 
   /** Probed-cell budget: the fraction of cells scanned per query —
     * the IVF cost knob (work/query ≈ IvfProbeFraction · n). Measured
-    * by AnnSweep: the smallest fraction with recall@3 ≥ 0.9 (with
-    * margin) at every fixture SF. SimilaritySpec pins BOTH recall and
-    * this bound.
+    * as the smallest fraction with recall@3 ≥ 0.9 (with margin) at
+    * every fixture SF. SimilaritySpec pins BOTH recall and this
+    * bound.
     *
-    * Honesty, with the sweep data: on THIS isotropic fixture recall
+    * Honesty, with the measured grid: on THIS isotropic fixture recall
     * is ≈ linear in the probed fraction almost independent of cell
     * count or Lloyd iterations (k=64, 3 iters at sf0.1: f=0.25→0.71,
     * 0.35→0.82, 0.5→0.90, 0.7→0.97; 1 vs 3 iters moves recall by
@@ -404,15 +411,15 @@ object Similarity {
     * which is exactly what the theory predicts for the isotropic
     * case. */
   private[operators] val IvfProbeFraction = 0.6
-  /** One Lloyd iteration: the sweep shows extra iterations move
+  /** One Lloyd iteration: the measured grid shows extra iterations move
     * recall ≤0.03 on this fixture (no cluster structure to converge
     * to) while each one adds a full assign+means pass to the index
     * build — measured recall at f=0.6 stays ≥0.93 at every SF. */
-  private[operators] val IvfLloydIters = 1
+  private val IvfLloydIters = 1
   private[operators] def ivfNprobe(k: Int): Int =
     math.max(2, math.ceil(k * IvfProbeFraction).toInt)
 
-  /** Narrow (vec_id, pcell, pcos, prk) ranking of every vector
+  /** Narrow (vec_id, pcell, prk) ranking of every vector
     * against the FINAL centroids, persisted as the probe plan.
     * prk = 1 IS the cell assignment (nearest centroid, ties to the
     * lowest cell — the same tie-break `nearest`'s
@@ -440,13 +447,8 @@ object Similarity {
     * both rank a NaN cosine FIRST — but plain negation would flip it
     * to last in the ascending struct sort. nanvl pins the ordering
     * key to -Infinity for NaN, preserving the max_by convention
-    * (prk = 1 still lands on the NaN cell); the corner's pcos
-    * surfaces as +Infinity instead of NaN. The query path's
-    * probe/member joins filter on prk only and never read pcos, but
-    * IvfProbeStudy DOES (member_centroid_cos and the theta feed) —
-    * it stays safe only because it clamps with least(1.0, pcos)
-    * before acos; any new consumer of raw pcos must clamp the same
-    * way or re-surface the corner as NaN.
+    * (prk = 1 still lands on the NaN cell). The cosine itself is not
+    * persisted: the probe/member joins read prk and pcell only.
     *
     * Disk-backed since r17 ([[graft.Cache.diskBacked]], clustered by
     * vec_id): a released cache re-opens the table instead of
@@ -460,12 +462,13 @@ object Similarity {
     * 28k → 126k records); it also co-keys ivfIndex's vec attach.
     * The artifact is O(n·k) rows; a 100-TB deployment persists only
     * prk ≤ nprobe (the probed fraction) — full k per vector is kept
-    * here because the sweep tools re-rank at other nprobe values. */
-  private[operators] def ivfRanked(s: SparkSession, d: String, k: Int,
-      iters: Int): DataFrame =
-    Cache.diskBacked(s, d, s"sim.ivf.ranked.$k.$iters",
+    * here because the artifact is keyed by k alone and [[ivfTopK]]
+    * takes nprobe per call (SimilaritySpec's clustered fixture probes
+    * 0.15 of its cells). */
+  private def ivfRanked(s: SparkSession, d: String, k: Int): DataFrame =
+    Cache.diskBacked(s, d, s"sim.ivf.ranked.$k.$IvfLloydIters",
       "embeddings.parquet", Seq("vec_id")) {
-      val packed = ivfMeans(s, d, k, iters)
+      val packed = ivfMeans(s, d, k)
         .agg(collect_list(struct(col("cell"), col("centroid"),
           col("cnsq"))).as("cents"))
       val rankedArr = sort_array(transform(col("cents"), c =>
@@ -476,10 +479,10 @@ object Similarity {
       vecs(s, d).crossJoin(broadcast(packed))
         .select(col("vec_id"), posexplode(rankedArr))
         .select(col("vec_id"), col("col.pcell").as("pcell"),
-          (-col("col.negcos")).as("pcos"), (col("pos") + 1).as("prk"))
+          (col("pos") + 1).as("prk"))
     }
 
-  /** The ann_ivf pipeline, parameterized for AnnSweep.
+  /** The ann_ivf pipeline over `k` cells, probing `nprobe` per query.
     *
     * Exchange discipline (round 9, same as [[lshCandidates]]): the
     * pcell probe join runs NARROW on BOTH sides — (v1, pcell) ×
@@ -492,8 +495,8 @@ object Similarity {
     * blind behind a filter-through-join lineage, fell back to
     * sort-merge and paid sorts + exchanges over ~1 KB rows. */
   private[operators] def ivfTopK(s: SparkSession, d: String, k: Int,
-      nprobe: Int, iters: Int): DataFrame = {
-    val ranked = ivfRanked(s, d, k, iters)
+      nprobe: Int): DataFrame = {
+    val ranked = ivfRanked(s, d, k)
     val v = vecs(s, d)
     val probes = ranked.filter(col("prk") <= nprobe)
       .select(col("vec_id").as("v1"), col("pcell"))
@@ -519,9 +522,7 @@ object Similarity {
       .orderBy("v1", "rk")
   }
 
-  /** The ann_lsh pipeline, parameterized so the AnnSweep tool can
-    * measure recall/cost of candidate configs against the exact same
-    * code the declared query runs.
+  /** The ann_lsh pipeline, Hamming-1 probing the first `nH1` tables.
     *
     * Scale dispatch (r18): under `attachMaxRows` vectors this is the
     * narrow candidate path + one global top-k window; past it the
@@ -540,14 +541,13 @@ object Similarity {
     * than the bound's rows — the exact OOM the bound exists to
     * prevent — so the dispatcher raises a clear past-single-box-scale
     * error at PLAN time instead of dying mid-job. */
-  private[operators] def annTopK(s: SparkSession, d: String,
-      nTables: Int, bits: Int, seed: Long, nH1: Int,
+  private[operators] def annTopK(s: SparkSession, d: String, nH1: Int,
       attachMaxRows: Long = -1L): DataFrame = {
     val attachBound =
       if (attachMaxRows >= 0) attachMaxRows else attachBroadcastMaxRows(s)
     val n = EngineConf.parquetRowCount(s, s"$d/embeddings.parquet")
     val candidates = if (n <= attachBound)
-      lshCandidates(s, d, nTables, bits, seed, nH1, attachBound)
+      lshCandidates(s, d, nH1, attachBound)
     else {
       val bound = math.max(attachBound, 1L)
       val needed = (n + bound - 1) / bound
@@ -561,8 +561,7 @@ object Similarity {
             "or raise spark.executor.memory to lift the attach bound.")
       val shards = needed.toInt
       (0 until shards)
-        .map(i => shardTopKArtifact(s, d, i, shards, nTables, bits,
-          seed, nH1))
+        .map(i => shardTopKArtifact(s, d, i, shards, nH1))
         .reduce(_ unionAll _)
     }
     candidates
@@ -581,13 +580,12 @@ object Similarity {
     * re-rank's window key): building it is the shard's indexing JOB;
     * every later query (and every other process) scans k narrow rows
     * per query vector. */
-  private[operators] def shardTopKArtifact(s: SparkSession, d: String,
-      shard: Int, shards: Int, nTables: Int, bits: Int, seed: Long,
-      nH1: Int): DataFrame =
+  private def shardTopKArtifact(s: SparkSession, d: String,
+      shard: Int, shards: Int, nH1: Int): DataFrame =
     Cache.diskBacked(s, d,
-      s"sim.lsh.topk.$nTables.$bits.$seed.$nH1.s$shard.of$shards",
+      s"sim.lsh.topk.${indexKey(s, d)}.$nH1.s$shard.of$shards",
       "embeddings.parquet", Seq("v1")) {
-      shardTopK(s, d, shard, shards, nTables, bits, seed, nH1)
+      shardTopK(s, d, shard, shards, nH1)
     }
 
   /** One SHARD of the LSH bucket index: the signature rows of the
@@ -596,13 +594,10 @@ object Similarity {
     * unsharded index — the artifact layer's bucketing already is the
     * shard key, so sharding adds no new physical layout concept). */
   private[operators] def lshBucketsShard(s: SparkSession, d: String,
-      nTables: Int, bits: Int, seed: Long,
       shard: Int, shards: Int): DataFrame =
-    Cache.diskBacked(s, d,
-      s"sim.lsh.$nTables.$bits.$seed.s$shard.of$shards",
+    Cache.diskBacked(s, d, s"sim.lsh.${indexKey(s, d)}.s$shard.of$shards",
       "embeddings.parquet", Seq("vec_id")) {
-      signatures(s, vecs(s, d).filter(inShard(shard, shards)),
-        nTables, bits, seed)
+      signatures(s, d, vecs(s, d).filter(inShard(shard, shards)))
     }
 
   /** ONE shard's top-k (v1, v2, cos) — the past-[[attachBroadcastMaxRows]]
@@ -633,18 +628,18 @@ object Similarity {
     * per-shard H1 probe work is S× the unsharded probe work — the
     * real, stated price of "queries replicate". */
   private def shardTopK(s: SparkSession, d: String,
-      shard: Int, shards: Int, nTables: Int, bits: Int, seed: Long,
-      nH1: Int): DataFrame = {
+      shard: Int, shards: Int, nH1: Int): DataFrame = {
     val v = vecs(s, d)
+    val bits = indexBits(s, d)
     def cosCol: Column = round(
       vecDot(col("ea"), col("eb")) / sqrt(col("na") * col("nb")), 4)
     val probes = (0 until shards)
-      .map(j => lshBucketsShard(s, d, nTables, bits, seed, j, shards))
+      .map(j => lshBucketsShard(s, d, j, shards))
       .reduce(_ unionAll _)
       .select(col("vec_id").as("v1"), col("tbl"),
         explode(when(col("tbl") < nH1, probeBuckets(bits))
           .otherwise(array(col("bucket")))).as("bucket"))
-    val index = lshBucketsShard(s, d, nTables, bits, seed, shard, shards)
+    val index = lshBucketsShard(s, d, shard, shards)
       .select(col("vec_id").as("v2"), col("tbl"), col("bucket"))
     probes.join(index, Seq("tbl", "bucket"))
       .filter(col("v1") =!= col("v2"))
@@ -660,28 +655,26 @@ object Similarity {
       .select("v1", "v2", "cos")
   }
 
-  /** IVF index halves for the sweep tools and specs: (assignments
-    * with columns vec_id/cell/embedding/nsq, centroid means with
+  /** IVF index halves for the specs: (assignments with columns
+    * vec_id/cell/embedding/nsq, centroid means with
     * cell/centroid/cnsq). Assignments derive from [[ivfRanked]]'s
     * prk = 1 rows — the declared query and the audited index share
     * one ranking pass. */
-  def ivfIndex(s: SparkSession, d: String, k: Int,
-      iters: Int = IvfLloydIters): (DataFrame, DataFrame) = {
-    val assigned = ivfRanked(s, d, k, iters)
+  def ivfIndex(s: SparkSession, d: String, k: Int): (DataFrame, DataFrame) = {
+    val assigned = ivfRanked(s, d, k)
       .filter(col("prk") === 1)
       .select(col("vec_id"), col("pcell").as("cell"))
       .join(vecs(s, d), "vec_id")
       .select("vec_id", "cell", "embedding", "nsq")
-    (assigned, ivfMeans(s, d, k, iters))
+    (assigned, ivfMeans(s, d, k))
   }
 
   /** Centroid means: deterministic seeds (k lowest vec_ids), then
-    * `iters` Lloyd iterations (assign to nearest centroid by cosine,
-    * recompute element-wise mean). Only the FINAL means are persisted
-    * — intermediate iterations exist once in the build lineage and
-    * are never re-read. */
-  private[operators] def ivfMeans(s: SparkSession, d: String, k: Int,
-      iters: Int = IvfLloydIters): DataFrame = {
+    * [[IvfLloydIters]] Lloyd iterations (assign to nearest centroid
+    * by cosine, recompute element-wise mean). Only the FINAL means
+    * are persisted — intermediate iterations exist once in the build
+    * lineage and are never re-read. */
+  private def ivfMeans(s: SparkSession, d: String, k: Int): DataFrame = {
     GraftFunctions.ensureRegistered(s)
     val v = vecs(s, d)
     // Narrow assign-aggregate: group on the key alone (hash-agg over
@@ -723,8 +716,9 @@ object Similarity {
       .select(col("cell"),
         expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("centroid"))
       .withColumn("cnsq", vecDot(col("centroid"), col("centroid")))
-    Cache.cached(s, d, s"sim.ivf.means.$k.$iters") {
-      (1 to iters).foldLeft(seeds)((cents, _) => meansOf(nearest(cents)))
+    Cache.cached(s, d, s"sim.ivf.means.$k.$IvfLloydIters") {
+      (1 to IvfLloydIters).foldLeft(seeds)((cents, _) =>
+        meansOf(nearest(cents)))
     }
   }
 

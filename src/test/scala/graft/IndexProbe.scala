@@ -8,10 +8,10 @@ import org.apache.spark.sql.functions._
 
 /** Second-process probe for the cross-process index-artifact contract
   * (Cache.diskBacked, r18): DiskIndexSpec builds a synthetic index in
-  * the test JVM, then launches THIS main in a separate JVM, which
-  * opens the same (dir, name) artifact and reports — on one parseable
-  * stdout line — whether its own build closure ran and how many Spark
-  * jobs the open scheduled. A correct cross-process layer reports
+  * the test JVM, then launches THIS main in a separate JVM
+  * ([[FreshJvm]]), which opens the same (dir, name) artifact and
+  * reports — on one parseable stdout line — whether its own build
+  * closure ran and how many Spark jobs the open scheduled. A correct cross-process layer reports
   * builds=0 / construct_jobs=0: the second process re-attached the
   * published files instead of rebuilding.
   *
@@ -63,7 +63,7 @@ object IndexProbe {
     }
     spark.sparkContext.addSparkListener(l)
     val df = open(spark, dir, name)
-    org.apache.spark.GraftBusAccess.waitUntilEmpty(spark.sparkContext)
+    org.apache.spark.GraftTestBus.waitUntilEmpty(spark.sparkContext)
     val constructJobs = jobs.get
     spark.sparkContext.removeSparkListener(l)
     val row = df.agg(count(lit(1)).as("rows"),

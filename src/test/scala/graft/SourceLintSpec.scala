@@ -11,10 +11,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * exactly the documented ones, connected components have one solver
   * ([[operators.Graph]]), the voyage-segmentation rules have one
   * definition per dialect ([[operators.Voyages]]) and GeoOps orders a
-  * vessel's reports only to build its track, and the MinHash
-  * signature aggregate survives only as the spec of the native
-  * kernel. A new one-off study belongs in a scratch copy or in
-  * `perfbench`, not in the library. */
+  * vessel's reports only to build its track, the MinHash signature
+  * aggregate survives only as the spec of the native kernel, and the
+  * ANN index config stays inside [[operators.Similarity]]. A new
+  * one-off study belongs in a scratch copy or in `perfbench`, not in
+  * the library. */
 class SourceLintSpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala")
@@ -54,9 +55,8 @@ class SourceLintSpec extends AnyFunSuite {
   }
 
   private val kept = Set(
-    "graft.Bench", "graft.Verify", "graft.Explain", "graft.ScaleFixture",
-    "graft.ScalingBench", "graft.streaming.StreamScale",
-    "graft.IndexProbe", "graft.operators.AnnSweep", "graft.SortSpillCheck")
+    "graft.Bench", "graft.Verify", "graft.ScaleFixture",
+    "graft.ScalingBench", "graft.streaming.StreamScale")
 
   /** Fully qualified objects in `src` that declare a `main` (directly
     * or by extending App). */
@@ -160,6 +160,20 @@ class SourceLintSpec extends AnyFunSuite {
     val gaps = codeHits("\\bVoyages\\.GapMicros\\b").filter(_._1 == streams)
     assert(gaps.size == 1, s"Voyages.GapMicros in Streams at lines " +
       gaps.map(_._2 + 1).mkString(", "))
+  }
+
+  test("the LSH/IVF index config is read only inside Similarity") {
+    // The table count, seed, bit rule and Lloyd iteration count name
+    // the on-disk index versions; threading them through signatures
+    // again would let a caller build an index no query reads.
+    val similarity = "graft/operators/Similarity.scala"
+    val hits =
+      codeHits("\\b(LshTables|LshSeed|IvfLloydIters)\\b|\\blshBits\\(")
+    assert(hits.exists(_._1 == similarity),
+      "Similarity no longer defines the index config")
+    val outside = hits.filterNot(_._1 == similarity)
+    assert(outside.isEmpty, "index config read outside Similarity at " +
+      outside.map { case (f, i) => s"$f:${i + 1}" }.mkString(", "))
   }
 
   test("the command-line mains are exactly the kept list") {

@@ -15,7 +15,7 @@ class LshSignatureSpec extends SparkSpec {
   test("native signature == per-plane vec_dot fold on sf0.01 vectors") {
     GraftFunctions.ensureRegistered(spark)
     val planes = graft.operators.Similarity.hyperplanes(
-      nPlanes = tables * bits, dim = 64, seed = 42L)
+      nPlanes = tables * bits, dim = 64)
     val flat = planes.flatMap(_._2)
     // composable form: per-table sum of sign-tested vec_dots
     val foldCols = (0 until tables).map { t =>
@@ -39,14 +39,14 @@ class LshSignatureSpec extends SparkSpec {
     GraftFunctions.ensureRegistered(spark)
     // spot-pin the full 32-table config on a handful of vectors: the
     // driver-side replay computes the same dots in plain Scala
-    val t32 = 32 // Similarity.LshTables (operators-private)
+    val t32 = 32 // Similarity.LshTables (private)
     val n = graft.EngineConf.parquetRowCount(
       spark, s"${SparkSpec.sf001}/embeddings.parquet")
-    // Similarity.lshBits (operators-private): occupancy-16 bit count
+    // Similarity.lshBits (private): occupancy-16 bit count
     val b = math.min(48, math.max(4,
       (math.log(n / 16.0) / math.log(2)).ceil.toInt))
     val planes = graft.operators.Similarity.hyperplanes(
-      nPlanes = t32 * b, dim = 64, seed = 42L)
+      nPlanes = t32 * b, dim = 64)
     val flat = planes.flatMap(_._2)
     val rows = graft.Tables.embeddings(spark, SparkSpec.sf001)
       .orderBy("vec_id").limit(5)
@@ -74,7 +74,7 @@ class LshSignatureSpec extends SparkSpec {
   test("native participates in whole-stage codegen") {
     GraftFunctions.ensureRegistered(spark)
     val flat = graft.operators.Similarity.hyperplanes(
-      nPlanes = tables * bits, dim = 64, seed = 42L).flatMap(_._2)
+      nPlanes = tables * bits, dim = 64).flatMap(_._2)
     val p = graft.Tables.embeddings(spark, SparkSpec.sf0001)
       .select(GraftFunctions.lshSignature(col("embedding"), flat,
         tables, bits).as("sig"))

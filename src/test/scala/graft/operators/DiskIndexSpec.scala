@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Cache, SparkEntry, SparkSpec}
+import graft.{Cache, FreshJvm, SparkEntry, SparkSpec}
 import org.apache.spark.GraftTestBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.ExplainMode
@@ -64,42 +64,17 @@ class DiskIndexSpec extends SparkSpec {
     spark.sql(s"DESCRIBE EXTENDED $table").collect()
       .find(_.getString(0) == "Num Buckets").map(_.getString(1))
 
-  /** The command that runs [[graft.IndexProbe]] in a fresh JVM (fresh
-    * Cache memo and catalog) over (dir, name) with a `cpus`-core
-    * master. This JVM's --add-opens/-D flags pass through
-    * (Spark-on-JDK17 needs them; sbt injected them into THIS fork). */
-  private def probeCmd(dir: String, name: String,
-      cpus: Int): java.util.List[String] = {
-    import scala.jdk.CollectionConverters._
-    val jvmArgs = java.lang.management.ManagementFactory
-      .getRuntimeMXBean.getInputArguments.asScala.toList
-    val passThrough = jvmArgs.zipWithIndex.flatMap { case (a, i) =>
-      if (a == "--add-opens" || a == "--add-exports")
-        List(a, jvmArgs(i + 1))
-      else if (a.startsWith("-Dspark.") || a.startsWith("--add-opens="))
-        List(a)
-      else Nil
-    }
-    (List(System.getProperty("java.home") + "/bin/java") ++ passThrough ++
-      List("-Xmx2g", "-cp", System.getProperty("java.class.path"),
-        "graft.IndexProbe", dir, name, cpus.toString)).asJava
-  }
+  /** Starts [[graft.IndexProbe]] in a fresh JVM (fresh Cache memo and
+    * catalog) over (dir, name) with a `cpus`-core master. */
+  private def startProbe(dir: String, name: String, cpus: Int): Process =
+    FreshJvm.start("graft.IndexProbe", dir, name, cpus.toString)
 
   /** Waits for a started probe and returns its INDEXPROBE line. */
-  private def probeLine(proc: Process): String = {
-    val out = new String(proc.getInputStream.readAllBytes(),
-      java.nio.charset.StandardCharsets.UTF_8)
-    assert(proc.waitFor(240, java.util.concurrent.TimeUnit.SECONDS),
-      s"probe timed out; output:\n${out.takeRight(2000)}")
-    assert(proc.exitValue() == 0,
-      s"probe exited ${proc.exitValue()}:\n${out.takeRight(2000)}")
-    out.linesIterator.find(_.startsWith("INDEXPROBE"))
-      .getOrElse(fail(s"no INDEXPROBE line:\n${out.takeRight(2000)}"))
-  }
+  private def probeLine(proc: Process): String =
+    FreshJvm.line(FreshJvm.output(proc), "INDEXPROBE")
 
   private def probe(dir: String, name: String, cpus: Int = 4): String =
-    probeLine(new ProcessBuilder(probeCmd(dir, name, cpus))
-      .redirectErrorStream(true).start())
+    probeLine(startProbe(dir, name, cpus))
 
   private def field(line: String, k: String): Long =
     s""""$k":(-?\\d+)""".r.findFirstMatchIn(line)
@@ -176,20 +151,21 @@ class DiskIndexSpec extends SparkSpec {
     val fx = new Fixture("v2")
     val r1 = fx.rows
     val meta = fx.metaLines
-    assert(meta.size == 3 && meta.head.startsWith("v4:"), s"meta: $meta")
-    val fp = meta.head.stripPrefix("v4:")
+    assert(meta.size == 3 && meta.head.startsWith("v5:"), s"meta: $meta")
+    val fp = meta.head.stripPrefix("v5:")
     // The v2 meta: `v2:<fingerprint>` then the DDL, no bucket count.
-    // The v3 meta: the current three lines under the v3 tag, as the
-    // build before geo.track's prev_id/gap_us columns wrote them.
-    val older = Seq("v2:" + fp + "\n" + meta(2),
-      (("v3:" + fp) +: meta.tail).mkString("\n"))
+    // The v3 and v4 metas: the current three lines under the older
+    // tag, as the builds before geo.track's prev_id/gap_us columns
+    // (v3) and before sim.ivf.ranked dropped pcos (v4) wrote them.
+    val older = Seq("v2:" + fp + "\n" + meta(2)) ++ Seq("v3:", "v4:")
+      .map(tag => ((tag + fp) +: meta.tail).mkString("\n"))
     older.zipWithIndex.foreach { case (m, i) =>
       java.nio.file.Files.writeString(fx.versionDir.resolve("meta"), m)
       spark.sql(s"DROP TABLE ${fx.tableName}")
       Cache.clear(spark, fx.name)
       assert(fx.rows == r1)
       assert(fx.builds == i + 2, s"a ${m.take(2)} artifact must be rebuilt")
-      assert(fx.metaLines.head.startsWith("v4:"))
+      assert(fx.metaLines.head.startsWith("v5:"))
     }
   }
 
@@ -274,10 +250,7 @@ class DiskIndexSpec extends SparkSpec {
     val dir = s"/tmp/graft_diskidx_xproc/race${System.nanoTime()}"
     val name = "test.idx.race"
     writeSource(dir, 100)
-    val procs = (1 to 2).map { _ =>
-      new ProcessBuilder(probeCmd(dir, name, 4)).redirectErrorStream(true)
-        .start()
-    }
+    val procs = (1 to 2).map(_ => startProbe(dir, name, 4))
     val outs = procs.map(probeLine)
     // Both processes return identical values regardless of who won.
     assert(field(outs(0), "rows") == field(outs(1), "rows") &&

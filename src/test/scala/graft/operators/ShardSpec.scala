@@ -14,20 +14,13 @@ import org.apache.spark.sql.functions._
   */
 class ShardSpec extends SparkSpec {
 
-  private def dims(d: String) = {
-    val n = graft.EngineConf.parquetRowCount(spark,
-      s"$d/embeddings.parquet")
-    (Similarity.LshTables, Similarity.lshBits(n), Similarity.LshSeed)
-  }
-
   /** annTopK forced onto `shards` per-shard top-k artifacts: an attach
     * bound of ceil(n / shards) rows. Asserts each artifact exists. */
   private def shardedTopK(d: String, shards: Int): Seq[Seq[Any]] = {
-    val (tables, bits, seed) = dims(d)
     val n = graft.EngineConf.parquetRowCount(spark,
       s"$d/embeddings.parquet")
     val out = Similarity
-      .annTopK(spark, d, tables, bits, seed, Similarity.AnnH1Tables,
+      .annTopK(spark, d, Similarity.AnnH1Tables,
         attachMaxRows = (n + shards - 1) / shards)
       .collect().map(_.toSeq).toSeq
     val dirTag = d.replaceAll("[^A-Za-z0-9]", "_").toLowerCase
@@ -44,9 +37,7 @@ class ShardSpec extends SparkSpec {
   test("2-shard union == unsharded ann top-k, row for row (sf0.01 " +
       "and sf0.1)") {
     for (d <- Seq(SparkSpec.sf001, SparkSpec.sf01)) {
-      val (tables, bits, seed) = dims(d)
-      val base = Similarity
-        .annTopK(spark, d, tables, bits, seed, Similarity.AnnH1Tables)
+      val base = Similarity.annTopK(spark, d, Similarity.AnnH1Tables)
         .collect().map(_.toSeq).toSeq
       val sharded = shardedTopK(d, 2)
       assert(sharded == base,
@@ -58,9 +49,7 @@ class ShardSpec extends SparkSpec {
   test("3-shard union == unsharded (shard count is a free deployment " +
       "knob, not a semantic one)") {
     val d = SparkSpec.sf001
-    val (tables, bits, seed) = dims(d)
-    val base = Similarity
-      .annTopK(spark, d, tables, bits, seed, Similarity.AnnH1Tables)
+    val base = Similarity.annTopK(spark, d, Similarity.AnnH1Tables)
       .collect().map(_.toSeq).toSeq
     val sharded = shardedTopK(d, 3)
     assert(sharded == base)
@@ -69,10 +58,8 @@ class ShardSpec extends SparkSpec {
   test("shards PARTITION the signature set: disjoint by member, " +
       "union == the unsharded index") {
     val d = SparkSpec.sf001
-    val (tables, bits, seed) = dims(d)
-    val full = Similarity.lshBuckets(spark, d, tables, bits, seed)
-    val parts = (0 until 2).map(i =>
-      Similarity.lshBucketsShard(spark, d, tables, bits, seed, i, 2))
+    val full = Similarity.lshBuckets(spark, d)
+    val parts = (0 until 2).map(i => Similarity.lshBucketsShard(spark, d, i, 2))
     // disjoint members
     val overlap = parts(0).select("vec_id").distinct()
       .join(parts(1).select("vec_id").distinct(), "vec_id").count()
@@ -88,15 +75,12 @@ class ShardSpec extends SparkSpec {
   test("annTopK's scale dispatch: a forced small bound routes through " +
       "per-shard top-k ARTIFACTS and returns the identical result") {
     val d = SparkSpec.sf01
-    val (tables, bits, seed) = dims(d)
-    val base = Similarity
-      .annTopK(spark, d, tables, bits, seed, Similarity.AnnH1Tables)
+    val base = Similarity.annTopK(spark, d, Similarity.AnnH1Tables)
       .collect().map(_.toSeq).toSeq
     // n = 2000, bound 700 → ceil = 3 shard jobs, each a diskBacked
     // artifact build; the dispatched query is scans + re-rank.
     val dispatched = Similarity
-      .annTopK(spark, d, tables, bits, seed, Similarity.AnnH1Tables,
-        attachMaxRows = 700)
+      .annTopK(spark, d, Similarity.AnnH1Tables, attachMaxRows = 700)
       .collect().map(_.toSeq).toSeq
     assert(dispatched == base,
       s"sharded dispatch diverges: ${dispatched.size} vs ${base.size}")
@@ -111,22 +95,21 @@ class ShardSpec extends SparkSpec {
       "past-single-box-scale error (r18 advice: a silent cap would " +
       "put > bound rows in every member-side broadcast)") {
     val d = SparkSpec.sf001
-    val (tables, bits, seed) = dims(d)
     val n = graft.EngineConf.parquetRowCount(spark,
       s"$d/embeddings.parquet")
     // bound 1 → needed = n shards >> 16; must throw at PLAN time
     // (before any job), naming the cap and the remedy.
     val e = intercept[IllegalStateException] {
-      Similarity.annTopK(spark, d, tables, bits, seed,
-        Similarity.AnnH1Tables, attachMaxRows = 1)
+      Similarity.annTopK(spark, d, Similarity.AnnH1Tables,
+        attachMaxRows = 1)
     }
     assert(e.getMessage.contains("single-box")
       && e.getMessage.contains(s"$n vectors"), e.getMessage)
     // ... and one shard short of the cap still dispatches (the cap is
     // needed > MaxShards, not >=): bound ceil(n/16) → needed == 16.
     val bound16 = (n + Similarity.MaxShards - 1) / Similarity.MaxShards
-    Similarity.annTopK(spark, d, tables, bits, seed,
-      Similarity.AnnH1Tables, attachMaxRows = bound16)
+    Similarity.annTopK(spark, d, Similarity.AnnH1Tables,
+      attachMaxRows = bound16)
   }
 
   test("attach bound derives from the SESSION at call time: local " +
@@ -146,10 +129,7 @@ class ShardSpec extends SparkSpec {
   test("each shard is its own on-disk artifact (the artifact layer's " +
       "bucketing is the shard key)") {
     val d = SparkSpec.sf001
-    val (tables, bits, seed) = dims(d)
-    (0 until 2).foreach(i =>
-      Similarity.lshBucketsShard(spark, d, tables, bits, seed, i, 2)
-        .count())
+    (0 until 2).foreach(i => Similarity.lshBucketsShard(spark, d, i, 2).count())
     val idx = spark.catalog.listTables().collect().map(_.name)
       .filter(t => t.contains("s0_of2") || t.contains("s1_of2"))
     assert(idx.length >= 2,

@@ -53,7 +53,6 @@ class SimilaritySpec extends SparkSpec {
     val sf = SparkSpec.sf01
     val n = EngineConf.parquetRowCount(spark, s"$sf/embeddings.parquet")
     val cand = Similarity.lshCandidates(spark, sf,
-      Similarity.LshTables, Similarity.lshBits(n), Similarity.LshSeed,
       Similarity.AnnH1Tables).count()
     val perQuery = cand.toDouble / n
     info(f"ann_lsh candidates/query = $perQuery%.0f (n=$n)")
@@ -71,10 +70,8 @@ class SimilaritySpec extends SparkSpec {
     // multisets (same pairs, same 4dp cosines, same per-collision
     // multiplicities) at two SFs.
     Seq(SparkSpec.sf0001, SparkSpec.sf001).foreach { sf =>
-      val n = EngineConf.parquetRowCount(spark, s"$sf/embeddings.parquet")
       def multiset(attachMax: Long): Map[(Long, Long, Double), Int] =
-        Similarity.lshCandidates(spark, sf, Similarity.LshTables,
-          Similarity.lshBits(n), Similarity.LshSeed,
+        Similarity.lshCandidates(spark, sf,
           Similarity.AnnH1Tables, attachMaxRows = attachMax)
           .collect()
           .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
@@ -90,8 +87,8 @@ class SimilaritySpec extends SparkSpec {
     // The probed-cell fraction IS the IVF cost knob: work/query ≈
     // fraction · n. Pin it so a future retune can't silently drift
     // back toward exhaustive probing; the 0.6 value itself is the
-    // measured floor for recall 0.9 on this isotropic fixture
-    // (AnnSweep — no cluster structure to exploit).
+    // measured floor for recall 0.9 on this isotropic fixture (no
+    // cluster structure to exploit).
     assert(Similarity.IvfProbeFraction <= 0.6)
     allSfs.foreach { sf =>
       val n = EngineConf.parquetRowCount(spark, s"$sf/embeddings.parquet")
@@ -124,13 +121,11 @@ class SimilaritySpec extends SparkSpec {
     // this: demote dedup_embed_ann to no-oracle and keep the
     // equality spec above.
     allSfs.foreach { sf =>
-      val n = EngineConf.parquetRowCount(spark, s"$sf/embeddings.parquet")
       val exact40 = Similarity.halfPairs(spark, sf)
         .filter("cos >= 0.40").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       val covered = Dedup.embedAnnPairs(spark, sf,
-          Similarity.LshTables, Similarity.lshBits(n),
-          Similarity.LshSeed, Similarity.DedupH1Tables, 0.40)
+          Similarity.DedupH1Tables, 0.40)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(exact40.nonEmpty)
       assert((exact40 -- covered).isEmpty,
@@ -158,8 +153,7 @@ class SimilaritySpec extends SparkSpec {
       .queries("similarity_topk_per_query")(spark, dir)
       .filter("rk <= 3").collect()
       .map(r => (r.getLong(0), r.getLong(2))).toSet
-    val ann = Similarity.ivfTopK(spark, dir, k, nprobe,
-        Similarity.IvfLloydIters).collect()
+    val ann = Similarity.ivfTopK(spark, dir, k, nprobe).collect()
       .map(r => (r.getLong(0), r.getLong(2))).toSet
     val recall = (brute & ann).size.toDouble / brute.size
     info(f"clustered-fixture ann_ivf recall@3 = $recall%.3f " +
