@@ -232,10 +232,26 @@ object Cache {
   private def san(x: String): String = x.replaceAll("[^A-Za-z0-9]", "_")
 
   /** Source fingerprint: recursive (count:bytes:maxMtime) of the
-    * source parquet dir — a driver-side FS listing, no job. */
-  private def fingerprint(s: SparkSession, path: String): String = {
+    * source parquet dir or file — a driver-side listing, no job. A
+    * local source is walked through the JDK: Hadoop's `listFiles`
+    * builds a `LocatedFileStatus` per file, whose permission load
+    * forks an `ls -ld` per file when libhadoop is missing, on every
+    * diskBacked entry. Both listings count the same files, skipping
+    * the hidden `.<name>.crc` checksums Hadoop's local file system
+    * hides (CacheSpec compares them), so versions published under
+    * either stay valid. */
+  private[graft] def fingerprint(s: SparkSession, path: String): String = {
     val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(s.sessionState.newHadoopConf())
+    p.getFileSystem(s.sessionState.newHadoopConf()) match {
+      case fs: org.apache.hadoop.fs.LocalFileSystem =>
+        localFingerprint(fs.pathToFile(p).toPath)
+      case fs => listedFingerprint(fs, p)
+    }
+  }
+
+  /** [[fingerprint]] through Hadoop's recursive `listFiles`. */
+  private[graft] def listedFingerprint(fs: org.apache.hadoop.fs.FileSystem,
+      p: org.apache.hadoop.fs.Path): String =
     if (!fs.exists(p)) "absent"
     else {
       val it = fs.listFiles(p, true)
@@ -247,7 +263,31 @@ object Cache {
       }
       s"$n:$bytes:$mt"
     }
-  }
+
+  /** [[fingerprint]] of a local path through `java.nio`, following
+    * links as Hadoop's local file system does. */
+  private def localFingerprint(p: java.nio.file.Path): String =
+    if (!java.nio.file.Files.exists(p)) "absent"
+    else {
+      import java.nio.file.{FileVisitResult, Files, Path => JPath}
+      import java.nio.file.attribute.BasicFileAttributes
+      var n = 0L; var bytes = 0L; var mt = 0L
+      Files.walkFileTree(p,
+        java.util.EnumSet.of(java.nio.file.FileVisitOption.FOLLOW_LINKS),
+        Int.MaxValue, new java.nio.file.SimpleFileVisitor[JPath] {
+          override def visitFile(f: JPath,
+              a: BasicFileAttributes): FileVisitResult = {
+            val name = f.getFileName.toString
+            if (!a.isDirectory && !(name.startsWith(".") &&
+                name.endsWith(".crc"))) {
+              n += 1; bytes += a.size
+              mt = math.max(mt, a.lastModifiedTime.toMillis)
+            }
+            FileVisitResult.CONTINUE
+          }
+        })
+      s"$n:$bytes:$mt"
+    }
 
   /** Layout-versioned source fingerprint. "v5:" = artifact LAYOUT
     * version (v2: one file per bucket since the writeBucketed
@@ -283,6 +323,11 @@ object Cache {
     * `<san(dir)>/<san(name)>/v_<fpHash>/{data,meta}`. */
   val SharedRoot = "/tmp/graft_index/shared"
 
+  /** The directory under [[SharedRoot]] that holds every artifact
+    * derived from the sources in `dir`. */
+  private[graft] def sharedRootOf(dir: String): java.nio.file.Path =
+    java.nio.file.Paths.get(SharedRoot, san(dir))
+
   private def sha12(x: String): String =
     java.security.MessageDigest.getInstance("SHA-256")
       .digest(x.getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -308,7 +353,8 @@ object Cache {
     }
   }
 
-  private def deleteRecursively(p: java.nio.file.Path): Unit =
+  /** Deletes `p` and everything below it, best effort. */
+  private[graft] def deleteRecursively(p: java.nio.file.Path): Unit =
     if (java.nio.file.Files.exists(p)) {
       import scala.jdk.CollectionConverters._
       java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
@@ -348,8 +394,7 @@ object Cache {
       (build: => DataFrame): DataFrame = synchronized {
     val fp = layoutFp(s, s"$dir/$sourceTable")
     val h = sha12(fp)
-    val root = java.nio.file.Paths.get(
-      s"$SharedRoot/${san(dir)}/${san(name)}")
+    val root = sharedRootOf(dir).resolve(san(name))
     val verDir = root.resolve(s"v_$h")
     val table = s"graft_idx_${san(dir)}_${san(name)}_$h"
     val dataPath = s"$verDir/data"

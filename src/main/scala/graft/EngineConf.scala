@@ -91,6 +91,21 @@ object EngineConf {
       // loader costs nothing. CodegenReuseSpec pins both settings:
       // a warm lanes_corpus pass compiles no class.
       .config("spark.sql.artifact.isolation.enabled", "false")
+      // Checkpoint and state-store files on a local path are written
+      // through java.nio instead of Hadoop's FileContext, which without
+      // libhadoop forks a `readlink` per rename and a `chmod` per file
+      // create and mkdir (see graft.streaming.LocalCheckpointFileManager):
+      // 3,569 such forks in one `ais_stream` bench run, and an atomic
+      // write through the stock manager costs 29 ms against 0.2 ms
+      // (PLANS.md, "checkpoint and state-store I/O through the JDK").
+      // Other schemes keep Spark's FileContext manager. Spark reads the
+      // class from the session's Hadoop conf on the driver and in the
+      // state-store tasks alike.
+      .config(CheckpointManagerConf,
+        classOf[graft.streaming.LocalCheckpointFileManager].getName)
+
+  /** The conf through which Spark picks its checkpoint file manager. */
+  val CheckpointManagerConf = "spark.sql.streaming.checkpointFileManagerClass"
 
   /** Generated classes Spark's codegen cache keeps (see [[tuned]]). */
   val CodegenCacheEntries: Int = 2048

@@ -1,10 +1,26 @@
 package graft
 
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
+
 /** Semantics of the shared intermediate cache: build-once memoization,
   * prefix-scoped release, and unpersist-on-clear (the round-2 bench
   * regression came from persisted blocks outliving their consumers —
   * these pins keep the lifetime contract honest). */
-class CacheSpec extends SparkSpec {
+class CacheSpec extends SparkSpec with BeforeAndAfterAll {
+
+  private lazy val tmpDir =
+    java.nio.file.Files.createTempDirectory("graft-cache-spec")
+
+  /** The source dir of the diskBacked test. */
+  private lazy val reentryDir = tmpDir.resolve("reentry").toString
+
+  override def afterAll(): Unit = {
+    Cache.deleteRecursively(tmpDir)
+    Cache.deleteRecursively(Cache.sharedRootOf(reentryDir))
+    super.afterAll()
+  }
 
   private def freshDf(tag: Int) = {
     val s = spark
@@ -67,5 +83,52 @@ class CacheSpec extends SparkSpec {
     get()
     assert(builds == 2)
     Cache.clear(spark, "sim.ivf.spec")
+  }
+
+  test("fingerprint: the JDK walk reads what Hadoop's listFiles reads," +
+      " a single file and a nested directory, hidden .crc files skipped") {
+    val d = tmpDir.resolve("fp").toString
+    // Partitioned parquet through Hadoop's local file system: nested
+    // directories, `_SUCCESS`, and a hidden `.crc` beside every file.
+    spark.range(40).select(col("id"), (col("id") % 3).as("k"))
+      .write.partitionBy("k").parquet(s"$d/nested")
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$d/nested/.kept"),
+      Array[Byte](1, 2, 3))
+    val fs = FileSystem.getLocal(spark.sessionState.newHadoopConf())
+    val one = new Path(s"$d/one.bin")
+    val o = fs.create(one)
+    o.write(Array.fill[Byte](100)(7))
+    o.close()
+    assert(new java.io.File(s"$d/.one.bin.crc").exists)
+    val crcs = java.nio.file.Files.walk(java.nio.file.Paths.get(s"$d/nested"))
+      .filter { f =>
+        val n = f.getFileName.toString
+        n.startsWith(".") && n.endsWith(".crc")
+      }.count()
+    assert(crcs > 0, "the writer left no checksum files to skip")
+    Seq(s"$d/nested", one.toString, s"$d/absent").foreach { p =>
+      assert(Cache.fingerprint(spark, p) ==
+        Cache.listedFingerprint(fs, new Path(p)), p)
+    }
+    assert(Cache.fingerprint(spark, one.toString).startsWith("1:100:"))
+    assert(Cache.fingerprint(spark, s"$d/absent") == "absent")
+  }
+
+  test("a diskBacked re-entry starts no process") {
+    val d = reentryDir
+    spark.range(20).write.parquet(s"$d/src.parquet")
+    def entry() = Cache.diskBacked(spark, d, "spec.reentry", "src.parquet",
+      Seq("id"))(spark.read.parquet(s"$d/src.parquet"))
+    entry().count() // builds, publishes and attaches the artifact
+    val (_, starts) = ProcessStarts.during(entry().count())
+    val hadoop = ProcessStarts.fromHadoopFs(starts)
+    assert(hadoop.isEmpty, hadoop.map(_.command).mkString("; "))
+    // Hadoop's listing of the same source forks (`ls -ld` per file):
+    // the census sees what the JDK walk removed.
+    val fs = FileSystem.getLocal(spark.sessionState.newHadoopConf())
+    val (_, listed) = ProcessStarts.during(
+      Cache.listedFingerprint(fs, new Path(s"$d/src.parquet")))
+    assert(ProcessStarts.fromHadoopFs(listed).nonEmpty)
+    Cache.clear(spark, "spec.reentry")
   }
 }

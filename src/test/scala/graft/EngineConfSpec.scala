@@ -64,6 +64,9 @@ class EngineConfSpec extends AnyFunSuite {
       "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "false")
     other.conf.set(
       "spark.sql.adaptive.coalescePartitions.initialPartitionNum", "7")
+    other.conf.set(EngineConf.CheckpointManagerConf, classOf[
+      org.apache.spark.sql.execution.streaming.checkpointing
+        .FileContextBasedCheckpointFileManager].getName)
     val prev = SparkSession.getActiveSession
     SparkSession.setActiveSession(other)
     try {
@@ -76,6 +79,8 @@ class EngineConfSpec extends AnyFunSuite {
       assert(s.conf.get(
         "spark.sql.adaptive.coalescePartitions.initialPartitionNum")
         == "256")
+      assert(s.conf.get(EngineConf.CheckpointManagerConf) ==
+        classOf[graft.streaming.LocalCheckpointFileManager].getName)
     } finally
       prev.fold(SparkSession.clearActiveSession())(
         SparkSession.setActiveSession)

@@ -5,6 +5,7 @@ import org.apache.spark.GraftTestBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
 
 /** The on-disk index layer (Cache.diskBacked, r17): the ANN indexes
   * are persisted as bucketed external parquet tables, so only the
@@ -14,13 +15,28 @@ import org.apache.spark.sql.functions._
   * once, query jobs read. These specs pin each half of that contract
   * plus the staleness and plan-shape properties the artifact claims.
   */
-class DiskIndexSpec extends SparkSpec {
+class DiskIndexSpec extends SparkSpec with BeforeAndAfterAll {
 
   private val scratch = s"/tmp/graft_diskidx_spec/p${ProcessHandle.current().pid()}"
 
-  private def writeSource(dir: String, rows: Long): Unit =
+  /** Every source dir the spec wrote: deleted after the suite, with
+    * the artifacts this and the probe processes published for it. */
+  private val sources = scala.collection.mutable.Set.empty[String]
+
+  override def afterAll(): Unit = {
+    sources.foreach { d =>
+      Cache.deleteRecursively(java.nio.file.Paths.get(d))
+      Cache.deleteRecursively(Cache.sharedRootOf(d))
+    }
+    Cache.deleteRecursively(java.nio.file.Paths.get(scratch))
+    super.afterAll()
+  }
+
+  private def writeSource(dir: String, rows: Long): Unit = {
+    sources += dir
     spark.range(rows).select(col("id"), (col("id") % 7).as("k"))
       .write.mode("overwrite").parquet(s"$dir/emb.parquet")
+  }
 
   /** A counting build over the synthetic source: `builds` tells the
     * spec whether an entry re-ran the lineage or read the artifact. */
@@ -323,10 +339,12 @@ class DiskIndexSpec extends SparkSpec {
 
   /** Writes the events of sf0.01's vessels below `vessels` as the
     * events table of `dir`, in the fixture's own column types. */
-  private def writeEvents(dir: String, vessels: Long): Unit =
+  private def writeEvents(dir: String, vessels: Long): Unit = {
+    sources += dir
     spark.read.parquet(s"${SparkSpec.sf001}/events.parquet")
       .filter(col("user_id") < vessels)
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
+  }
 
   /** The one published version dir of `dir`'s geo.track. */
   private def trackVersions(dir: String): Set[String] = {

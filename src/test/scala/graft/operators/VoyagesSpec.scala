@@ -3,11 +3,24 @@ package graft.operators
 import graft.SparkSpec
 import graft.streaming.{EventRow, Streams}
 import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
 
 /** The voyage kernel's dialects agree with each other: the 30-minute
   * gap boundary is the same in every batch and streaming consumer,
   * and the Column position rules equal their Scala twins. */
-class VoyagesSpec extends SparkSpec {
+class VoyagesSpec extends SparkSpec with BeforeAndAfterAll {
+
+  /** The dirs [[eventsDir]] made: deleted after the suite, with the
+    * artifacts (`geo.track`) published for them. */
+  private val dirs = scala.collection.mutable.Set.empty[String]
+
+  override def afterAll(): Unit = {
+    dirs.foreach { d =>
+      graft.Cache.deleteRecursively(java.nio.file.Paths.get(d))
+      graft.Cache.deleteRecursively(graft.Cache.sharedRootOf(d))
+    }
+    super.afterAll()
+  }
 
   /** Writes `rows` (event_id, µs, user_id) as an events table in a
     * new temp dir. */
@@ -15,6 +28,7 @@ class VoyagesSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     val dir = java.nio.file.Files.createTempDirectory(tag).toString
+    dirs += dir
     rows.toDF("event_id", "us", "user_id")
       .select(col("event_id"), timestamp_micros(col("us")).as("ts"),
         col("user_id"), lit("view").as("event_type"),

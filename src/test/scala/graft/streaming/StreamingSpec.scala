@@ -366,17 +366,20 @@ class StreamingSpec extends SparkSpec {
       t(f).dataType.asInstanceOf[StructType]
     assert(struct(struct(store.schema, "value"), "groupState").fieldNames
       .toSeq == Seq("oZone", "last", "dZone", "n"))
-    // independent truth: per vessel, the reports after its last
-    // >30-min gap form the voyage still open when input ends
-    val openPoints = batchEvents.groupBy(_.user_id).values.map { evs =>
+    assert(store.selectExpr("sum(value.groupState.n)").head().getLong(0)
+      == openPoints)
+  }
+
+  /** Independent truth for the state store: per vessel, the reports
+    * after its last >30-min gap form the voyage still open when input
+    * ends. */
+  private lazy val openPoints: Long =
+    batchEvents.groupBy(_.user_id).values.map { evs =>
       val ts = evs.map(e =>
         e.ts.getTime * 1000L + (e.ts.getNanos / 1000L) % 1000L).sorted
       ts.size - ts.indices.filter(i => i > 0
         && ts(i) - ts(i - 1) > 1800L * 1000000L).lastOption.getOrElse(0)
     }.sum.toLong
-    assert(store.selectExpr("sum(value.groupState.n)").head().getLong(0)
-      == openPoints)
-  }
 
   test("stateful transitions: pair stream aggregates to the batch" +
       " markov matrix, across batches") {
@@ -765,6 +768,57 @@ class StreamingSpec extends SparkSpec {
       .collect().map(_.mkString("|")).toSeq.sorted
     assert(all == closedBatchVoyages,
       "crash-recovered stream diverges from the batch collapse")
+  }
+
+  test("a checkpoint written under Spark's stock manager, with its" +
+      " .crc files, resumes under the engine's manager") {
+    // Checkpoints from before the engine installed its own manager
+    // carry Hadoop's hidden `.<name>.crc` checksum beside every log
+    // entry, delta and snapshot. The first half of the events runs in
+    // a clone with the conf unset, on Spark's default manager; the
+    // second half resumes under the engine's session.
+    val s = spark
+    import s.implicits._
+    val base = java.nio.file.Files
+      .createTempDirectory("graft-ckpt-compat").toString
+    val inDir = s"$base/in"
+    val outDir = s"$base/out"
+    val ckpt = s"$base/ckpt"
+    def run(session: org.apache.spark.sql.SparkSession): Unit = {
+      val src = session.readStream
+        .schema(implicitly[org.apache.spark.sql.Encoder[Ev]].schema)
+        .parquet(inDir)
+      val q = Streams.statefulVoyages(src.as[EventRow]).writeStream
+        .format("parquet")
+        .option("path", outDir)
+        .option("checkpointLocation", ckpt)
+        .outputMode("append")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      try q.awaitTermination() finally q.stop()
+    }
+    val stock = spark.newSession()
+    stock.conf.unset(graft.EngineConf.CheckpointManagerConf)
+    val (b1, b2) = batchEvents.splitAt(batchEvents.length / 2)
+    b1.toDF().coalesce(1).write.parquet(inDir)
+    run(stock)
+    def crcs(dir: String) = {
+      import scala.jdk.CollectionConverters._
+      java.nio.file.Files.walk(java.nio.file.Paths.get(s"$ckpt/$dir"))
+        .iterator().asScala.map(_.getFileName.toString)
+        .count(n => n.startsWith(".") && n.endsWith(".crc"))
+    }
+    assert(crcs("commits") > 0 && crcs("state") > 0,
+      "the stock manager wrote no checksum files")
+    b2.toDF().coalesce(1).write.mode("append").parquet(inDir)
+    run(spark)
+    val all = spark.read.parquet(outDir)
+      .collect().map(_.mkString("|")).toSeq.sorted
+    assert(all == closedBatchVoyages,
+      "the resumed stream diverges from the batch collapse")
+    assert(spark.read.format("statestore").load(ckpt)
+      .selectExpr("sum(value.groupState.n)").head().getLong(0) == openPoints)
+    graft.Cache.deleteRecursively(java.nio.file.Paths.get(base))
   }
 
   test("dedup: stream emits one row per (user_id, event_type) key") {
